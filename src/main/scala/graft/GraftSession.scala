@@ -72,11 +72,22 @@ object GraftSession {
       (cores * 4).toString,
     "spark.sql.files.minPartitionNum" -> cores.toString)
 
+  /** The core count a `SPARK_GRAFT_CPUS` value names: a positive
+    * integer, or `*` for every available processor (Spark's `local[*]`).
+    * Anything else fails loudly — it used to fall back to 8 silently and
+    * mis-size the shuffle and batch widths. */
+  def coreCount(cores: String): Int = cores.trim match {
+    case "*" => Runtime.getRuntime.availableProcessors
+    case s => s.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS='$cores' is not a core count (a positive integer or '*')"))
+  }
+
   def create(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
              appName: String = "graft",
              profile: String = sys.env.getOrElse("GRAFT_PROFILE", "interactive")): SparkSession = {
+    val n = coreCount(cores)
     val base = SparkSession.builder()
-      .master(s"local[$cores]")
+      .master(s"local[$n]")
       .appName(appName)
       .withExtensions(new graft.functions.GraftExtensions)
       // Shuffle fan-out. In the interactive profile this IS the reducer
@@ -86,7 +97,7 @@ object GraftSession {
       // wave) with identical final parallelism. On a cluster this is
       // RAISED (or superseded by coalescePartitions.initialPartitionNum
       // under batch); nothing here encodes fixture scale.
-      .config("spark.sql.shuffle.partitions", math.min(cores.toIntOption.getOrElse(8), 8))
+      .config("spark.sql.shuffle.partitions", math.min(n, 8))
     val builder = profileConfs(profile).foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
       // Scan fan-out floor follows the shuffle width (8), not core count:
       // by default Spark pads SMALL inputs to defaultParallelism splits
@@ -130,7 +141,7 @@ object GraftSession {
     // batch profile: width scales with cores + AQE sizing (overrides the
     // interactive dispatch-floor constants above — see batchScaleConfs)
     val scaled = (if (profile == "batch")
-      batchScaleConfs(math.max(1, cores.toIntOption.getOrElse(8)))
+      batchScaleConfs(n)
     else Map.empty[String, String]).foldLeft(builder) {
       case (b, (k, v)) => b.config(k, v)
     }

@@ -58,17 +58,19 @@ object PlanDump {
         // GRAFT_TASKLOG=1: per-stage task-duration spread (max/median) +
         // shuffle-read spread for the counted run — the §2.5 skew
         // evidence (a max/median ratio ≳5 on a shuffle-fed stage is a
-        // skewed partition, not a slow node)
+        // skewed partition, not a slow node). Buckets are keyed by
+        // (stageId, stageAttemptId): a retried attempt is its own bucket,
+        // so its re-run tasks cannot skew the first attempt's spread
         val taskLog = sys.env.contains("GRAFT_TASKLOG")
         val stageTasks = new java.util.concurrent.ConcurrentHashMap[
-          Int, scala.collection.mutable.ArrayBuffer[(Long, Long)]]()
+          (Int, Int), scala.collection.mutable.ArrayBuffer[(Long, Long)]]()
         spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
           override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
             jobs.incrementAndGet(); ()
           }
           override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
             if (taskLog && t.taskMetrics != null) {
-              val buf = stageTasks.computeIfAbsent(t.stageId,
+              val buf = stageTasks.computeIfAbsent((t.stageId, t.stageAttemptId),
                 _ => scala.collection.mutable.ArrayBuffer.empty)
               buf.synchronized {
                 buf += ((t.taskMetrics.executorRunTime,
@@ -96,13 +98,13 @@ object PlanDump {
             s"stages=${stages.get} tasks=${tasks.get}")
           if (taskLog) {
             import scala.jdk.CollectionConverters._
-            stageTasks.asScala.toSeq.sortBy(_._1).foreach { case (sid, buf) =>
+            stageTasks.asScala.toSeq.sortBy(_._1).foreach { case ((sid, att), buf) =>
               val (durs, srs) = buf.synchronized {
                 (buf.map(_._1).sorted.toIndexedSeq,
                   buf.map(_._2).sorted.toIndexedSeq)
               }
               if (durs.nonEmpty && durs.last >= 50) // skip trivial stages
-                println(s"[tasklog] $n stage=$sid n=${durs.size} " +
+                println(s"[tasklog] $n stage=$sid attempt=$att n=${durs.size} " +
                   s"durMed=${durs(durs.size / 2)}ms durMax=${durs.last}ms " +
                   s"srMed=${srs(srs.size / 2)}B srMax=${srs.last}B")
             }

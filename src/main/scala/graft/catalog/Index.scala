@@ -1,7 +1,7 @@
 package graft.catalog
 
 import graft.aql.AlbaType
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Path, StandardCopyOption}
@@ -1225,16 +1225,25 @@ object Index {
       .select(col("doc_id").as("id"), col("band"), col("bk"), col("src"))
   }
 
-  /** (id, text, src) → (id, term, tf, dl, src): inverted postings under
-    * the ONE tokenization shared with the fixture-side full-text lane
-    * (`operators/FullText`), plus one corpus-stats sentinel row per src
-    * file — (n_docs, Σ dl) under `term=""`. Both shapes are file-local
-    * (postings are row-local; the sentinel aggregates only its own
-    * file's rows), so a COW commit recomputes exactly the touched
-    * files' postings AND their stats contribution, and the global
-    * N/avgdl read as the sum over sentinel rows stays exact. A
-    * zero-token document yields no postings but still counts in its
-    * file's sentinel, matching the fixture lane's N definition.
+  /** (id, text, src) → (id, term, tf, dl, pos, src): inverted postings
+    * under the ONE tokenization shared with the fixture-side full-text
+    * lane ([[graft.operators.FullText.postingsOf]]), plus corpus-stats
+    * sentinel rows — (n_docs, Σ dl) under `term=""`, one per src file
+    * per input split. Neither branch has an Exchange: the postings are
+    * one Generate, and the sentinels are a per-partition fold over
+    * (src, dl) that counts the documents and sums their lengths per src
+    * as the rows stream by. Both shapes are file-local, so a COW commit
+    * recomputes exactly the touched files' postings AND their stats
+    * contribution; the global N/avgdl read as the sum over sentinel rows
+    * (`textStatsLit`) stays exact however a file was split. A small file
+    * is one split, so it has one sentinel. A zero-token document yields
+    * no postings but still counts in its sentinel, matching the fixture
+    * lane's N definition.
+    *
+    * The sentinels are their own branch of the union, so they land in
+    * their own part file under each `src=`: a term probe reads
+    * `term IN (terms…, "")`, and a postings file without "" keeps a
+    * min/max term range that row-group pruning can skip.
     */
   private def deriveText(docs: DataFrame, pkType: DataType,
       analyzer: String = graft.operators.Analyzer.Whitespace,
@@ -1244,15 +1253,32 @@ object Index {
         analyzer = analyzer, withPositions = positions)
       .select(col("doc_id").as("id"), col("term"), col("tf"), col("dl"),
         col("pos"), col("src"))
+    val sentinel = StructType(Seq(StructField("id", pkType),
+      StructField("term", StringType), StructField("tf", LongType),
+      StructField("dl", DoubleType),
+      StructField("pos", ArrayType(IntegerType)),
+      StructField("src", StringType)))
     val stats = docs.select(col("src"),
         size(graft.operators.Analyzer.tokens(col("text"), analyzer))
           .cast("long").as("dl"))
-      .groupBy(col("src"))
-      .agg(count(lit(1)).as("tf"), sum(col("dl")).cast("double").as("dl"))
-      .select(lit(null).cast(pkType).as("id"),
-        lit(graft.operators.FullText.StatsTerm).as("term"),
-        col("tf"), col("dl"),
-        lit(null).cast(ArrayType(IntegerType)).as("pos"), col("src"))
+      .mapPartitions(statsSentinels)(org.apache.spark.sql.Encoders.row(sentinel))
     post.unionByName(stats)
+  }
+
+  /** One partition of (src, dl) rows → one sentinel row per src:
+    * `count(1)` and `sum(dl)` exactly (NULL lengths skipped; a src whose
+    * lengths are all NULL gets a NULL Σ dl), in first-seen src order. */
+  private def statsSentinels(it: Iterator[Row]): Iterator[Row] = {
+    final class Acc { var n = 0L; var sdl = 0L; var anyDl = false }
+    val stats = scala.collection.mutable.LinkedHashMap.empty[String, Acc]
+    it.foreach { r =>
+      val acc = stats.getOrElseUpdate(r.getString(0), new Acc)
+      acc.n += 1
+      if (!r.isNullAt(1)) { acc.sdl += r.getLong(1); acc.anyDl = true }
+    }
+    stats.iterator.map { case (src, acc) =>
+      Row(null, graft.operators.FullText.StatsTerm, acc.n,
+        if (acc.anyDl) acc.sdl.toDouble else null, null, src)
+    }
   }
 }

@@ -126,6 +126,12 @@ final class Tx(catalog: Catalog) {
     }
   }
 
+  /** A staged insert batch as ONE partition. Staged rows are
+    * statement-level driver metadata (CREATE ROW and MERGE ROW stage one
+    * row each), but a local relation scans as min(rows, cores)
+    * partitions, and each partition commits as its own data file, `src=`
+    * index part and index task. One partition means one part file per
+    * batch and one task per index job. */
   private def localDF(rows: Seq[Row], schema: org.apache.spark.sql.types.StructType) = {
     // rows staged BEFORE a concurrent ALTER CONTAINER ADD COLUMN carry
     // the old arity; the new columns are NULL for them — exactly how
@@ -138,7 +144,7 @@ final class Tx(catalog: Catalog) {
     }
     catalog.spark.createDataFrame(
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-        .SeqHasAsJava(padded).asJava), schema)
+        .SeqHasAsJava(padded).asJava), schema).coalesce(1)
   }
 
   /** One Edit/Delete step of the fold (Insert is a no-op here: insert

@@ -27,6 +27,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         WordGrams(exprs(0), exprs(1))))
     ext.injectFunction((
+      new FunctionIdentifier("text_postings"),
+      new ExpressionInfo(classOf[TextPostings].getName, "text_postings"),
+      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
+        TextPostings(exprs(0), exprs(1))))
+    ext.injectFunction((
       new FunctionIdentifier("hyperplane_bucket"),
       new ExpressionInfo(classOf[HyperplaneBucket].getName, "hyperplane_bucket"),
       (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>

@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   * standardized, so scores are non-negative).
   *
   * Scale design:
-  *  - The postings build is one scan: explode tokens → partial-agg
-  *    (doc, term) counts. Only (doc_id, term, tf, dl) tuples shuffle —
-  *    never text.
+  *  - The postings build is one scan and one Generate: each document's
+  *    postings are built inside the projection ([[postingsOf]]), so
+  *    nothing shuffles — not text, not (doc, term) pairs.
   *  - Corpus stats (N, Σdl) are a 1-row aggregate, broadcast into scoring.
   *  - The persisted index buckets postings BY TERM (hash-bucketed,
   *    sorted), so a query's postings scan prunes to its literal terms'
@@ -46,47 +46,44 @@ object FullText {
   /** Sentinel term key for corpus-stats rows in the persisted index: the
     * empty string can never be a token (tokens are the non-empty splits),
     * and it sorts first under the term-sorted layout. A stats row carries
-    * (tf = n_docs, dl = Σ doc_len) for the slice it summarizes. */
+    * (tf = n_docs, dl = Σ doc_len) for the slice it summarizes — the
+    * whole corpus here, one input split of one data file in the catalog
+    * `text` index (`Index.deriveText`); readers sum the rows, so N and
+    * avgdl are exact however many slices there are. */
   private[graft] val StatsTerm = ""
 
-  /** (keys…, term, tf, dl): term frequencies per document plus the
-    * document's token length, grouped by `keys` (extra keys — e.g. the
-    * catalog index's `src` file attribution — must be functionally
-    * dependent on the document id, like the banding helpers' keys
-    * convention). This is the ONE tokenization/postings definition shared
-    * by the fixture lane AND the catalog `text` index derivation —
-    * row-local per document, the property that makes per-file index
-    * recomputation exact under COW commits. */
-  /** Postings now carry `pos` — the term's 1-BASED token positions in
-    * the (empty-filtered) token sequence, sorted for deterministic
-    * bytes (round 14: the MATCH PHRASE adjacency substrate; 1-based to
-    * match DuckDB's `tk[p]` indexing so the oracle recompute reads the
-    * same numbers). */
-  /** `analyzer` (round 15): the index's frozen tokenization, resolved
-    * through [[Analyzer]] — whitespace (default, historical behavior)
-    * or standard (punctuation-stripping). `withPositions = false`
-    * (round 15, the WITHOUT POSITIONS index option) skips the position
-    * collect entirely — a NULL `pos` column instead of one int per
-    * corpus token, for corpora that never phrase-search. */
+  /** (keys…, term, tf, dl, pos): one row per (document, distinct term) —
+    * the term's frequency, the document's token length, and `pos`, the
+    * term's 1-BASED token positions in the (empty-filtered) token
+    * sequence, ascending (1-based to match DuckDB's `tk[p]` indexing, so
+    * the oracle recompute and MATCH PHRASE adjacency read the same
+    * numbers). `keys` are carried through (extra keys — e.g. the catalog
+    * index's `src` file attribution — ride along per document, like the
+    * banding helpers' keys convention). This is the ONE
+    * tokenization/postings definition shared by the fixture lanes AND
+    * the catalog `text` index derivation.
+    *
+    * One pass per document: [[graft.functions.TextPostings]] builds the
+    * document's postings inside the projection and one Generate emits
+    * them — no groupBy, no Exchange, so postings are row-local in plan
+    * as well as in meaning (the property that makes per-file index
+    * recomputation under COW commits exact AND shuffle-free).
+    *
+    * `analyzer`: the index's frozen tokenization, resolved through
+    * [[Analyzer]]. `withPositions = false` (the WITHOUT POSITIONS index
+    * option) skips the positions entirely — a NULL `pos` column instead
+    * of one int per corpus token. */
   private[graft] def postingsOf(d: DataFrame,
       keys: Seq[String] = Seq("doc_id"),
       analyzer: String = Analyzer.Whitespace,
-      withPositions: Boolean = true): DataFrame = {
-    val toks = d
-      .select(keys.map(col) :+
+      withPositions: Boolean = true): DataFrame =
+    d.select(keys.map(col) :+
         Analyzer.tokens(col("text"), analyzer).as("tk"): _*)
-      .select(keys.map(col) :+ size(col("tk")).cast("long").as("dl") :+
-        posexplode(col("tk")).as(Seq("p", "term")): _*)
-    val grouped = toks.groupBy((keys.map(col) :+ col("term")): _*)
-    if (withPositions)
-      grouped.agg(count(lit(1)).as("tf"), first(col("dl")).cast("double").as("dl"),
-        array_sort(collect_list(col("p") + 1)).as("pos"))
-    else
-      grouped.agg(count(lit(1)).as("tf"), first(col("dl")).cast("double").as("dl"))
-        .withColumn("pos", lit(null).cast(
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.IntegerType)))
-  }
+      .select(keys.map(col) :+ size(col("tk")).cast("double").as("dl") :+
+        explode(graft.functions.TextPostings.textPostings(
+          col("tk"), withPositions)).as("tp"): _*)
+      .select(keys.map(col) ++ Seq(col("tp.term").as("term"),
+        col("tp.tf").as("tf"), col("dl"), col("tp.pos").as("pos")): _*)
 
   /** 1-row (n, avgdl) corpus statistics; `n` counts ALL documents (a
     * zero-token document still counts toward N and the avgdl denominator,

@@ -44,6 +44,18 @@ class VerifySessionSpec extends AnyFunSuite {
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "32")
   }
 
+  test("SPARK_GRAFT_CPUS: '*' means every processor; a non-count fails " +
+      "loudly, naming the value") {
+    assert(GraftSession.coreCount("*") == Runtime.getRuntime.availableProcessors)
+    assert(GraftSession.coreCount(" 6 ") == 6)
+    for (bad <- Seq("eight", "", "0", "-2", "4x")) {
+      val e = intercept[IllegalArgumentException](GraftSession.coreCount(bad))
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+    // the check runs at session creation, before any session is built
+    intercept[IllegalArgumentException](GraftSession.create(cores = "many"))
+  }
+
   test("unknown profile is rejected loudly") {
     intercept[RuntimeException](GraftSession.profileConfs("fastest"))
   }
