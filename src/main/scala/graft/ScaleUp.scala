@@ -46,6 +46,24 @@ object ScaleUp {
 
   private val Off = 100000000L
 
+  /** Joins a token to its tile number: `x` in tile t becomes `xǂt`. With
+    * an alphanumeric join a tile's image of one token can equal another
+    * real token of tile 0 (`x` + `q1` = `xq1`). `ǂ` (U+01C2, a caseless
+    * letter) is in no fixture text — generation refuses a source that
+    * holds it — and, being a letter, stays inside one token under every
+    * [[operators.Analyzer]]: whitespace splits on spaces only, and
+    * standard/english keep letter runs whole (Porter leaves a token with
+    * a non a–z letter unstemmed). So images of distinct tokens stay
+    * distinct and never meet a tile-0 token. */
+  private[graft] val TileSep = "\u01c2"
+
+  /** A document's text in tile `t` ≥ 1: every whitespace token but the
+    * preserved probe vocabulary gets the tile suffix. */
+  private[graft] def tileText(text: Column, t: Int): Column =
+    array_join(transform(split(text, " "), w =>
+      when(w.isin(Preserved: _*) || w === "", w)
+        .otherwise(concat(w, lit(s"$TileSep$t")))), " ")
+
   def main(args: Array[String]): Unit = {
     val src = args(0)
     val dst = args(1)
@@ -97,15 +115,15 @@ object ScaleUp {
     // documents: per-tile token bijection outside the preserved vocabulary
     locally {
       val b = base("documents")
+      require(b.filter(col("text").contains(TileSep)).isEmpty,
+        s"documents text holds the tile separator '$TileSep'; tiled tokens " +
+          "could collide with source tokens")
       val out = (0 until tiles).map { t =>
         if (t == 0) b
         else {
-          val text = array_join(transform(split(col("text"), " "), w =>
-            when(w.isin(Preserved: _*) || w === "", w)
-              .otherwise(concat(w, lit(s"q$t")))), " ")
           b.select(
             (col("doc_id") + lit(t * Off)).as("doc_id"),
-            text.as("text"),
+            tileText(col("text"), t).as("text"),
             col("lang"), col("source"))
             .withColumn("n_chars", length(col("text")))
             .select("doc_id", "text", "lang", "source", "n_chars")

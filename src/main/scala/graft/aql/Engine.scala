@@ -84,6 +84,10 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     * id, `src/database.rs:888-921`; 100-row pages `src/query.rs:9`).
     * LRU-bounded: clients that never send QYCNEXT must not leak a pinned
     * DataFrame plan per query in a resident server.
+    *
+    * Read statements run concurrently, and the access-ordered map mutates
+    * on `get`: every access, registration and eviction holds the map's
+    * own monitor. Page state is guarded per cursor (see [[Cursor]]).
     */
   val MaxCursors = 256
   private val cursors = new java.util.LinkedHashMap[String, Cursor](64, 0.75f, true) {
@@ -94,16 +98,23 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     }
   }
 
+  private def cursor(id: String): Option[Cursor] =
+    cursors.synchronized(Option(cursors.get(id)))
+
+  private def closeCursor(id: String): Unit =
+    cursors.synchronized(Option(cursors.remove(id)).foreach(releaseCursor))
+
   /** Unpersist a closing cursor's cached result — unless another live
     * cursor shares the same canonicalized plan: Spark's CacheManager keys
     * cache entries by plan, so two identical SEARCHes share one entry and
     * unpersisting on the first close would silently drop the survivor
-    * back to scan+sort-per-page.
+    * back to scan+sort-per-page. Cursors holding their rows have no plan
+    * and no cache entry. Caller holds the registry monitor, so no cursor
+    * with the same plan registers between the scan and the unpersist.
     */
-  private def releaseCursor(c: Cursor): Unit = {
-    val analyzed = c.df.queryExecution.analyzed
+  private def releaseCursor(c: Cursor): Unit = c.analyzed.foreach { analyzed =>
     val shared = cursors.values.iterator().asScala.exists(o =>
-      (o ne c) && o.df.queryExecution.analyzed.sameResult(analyzed))
+      (o ne c) && o.analyzed.exists(_.sameResult(analyzed)))
     if (!shared) c.release()
   }
   val PageSize = 100
@@ -978,7 +989,7 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     case Ast.CursorNext(id) => pageOf(id, +1)
     case Ast.CursorPrevious(id) => pageOf(id, -1)
     case Ast.CursorExit(id) =>
-      Option(cursors.remove(id)).foreach(releaseCursor)
+      closeCursor(id)
       Done(s"cursor $id closed")
   }
 
@@ -1403,8 +1414,9 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     * Letter prefix keeps the id a single bare-word token in AQL. */
   private def resultSet(df: DataFrame, needsDefaultSort: Boolean): ResultSet = {
     val id = "c" + java.util.UUID.randomUUID().toString.replace("-", "")
-    cursors.put(id, Cursor(df, page = 0, needsDefaultSort = needsDefaultSort,
-      cacheCap = settings.memoryLimit))
+    val c = Cursor(df, page = 0, needsDefaultSort = needsDefaultSort,
+      cacheCap = settings.memoryLimit)
+    cursors.synchronized(cursors.put(id, c))
     ResultSet(df, id)
   }
 
@@ -1421,37 +1433,40 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
         org.apache.spark.sql.types.StructField(n, AlbaType.of(t).spark, nullable)
       }))
 
-  private def pageOf(id: String, delta: Int): Page = {
-    val cur = Option(cursors.get(id))
-      .getOrElse(throw new ParseException(s"Unknown cursor $id"))
-    val target = math.max(0, cur.page + delta)
-    // pages slice the once-materialized sorted result (Cursor.materialized):
-    // the sort shuffle runs once, each page job fetches and caches only the
-    // partitions it needs — page N is an incremental slice, never a fresh
-    // top-(N+1)·100 re-execution
-    val rows =
-      try cur.materialized.offset(target * PageSize).limit(PageSize).collect().toSeq
-      catch {
-        case e: Exception if rootCauseIsMissingFile(e) =>
-          // the cursor's plan references a version dir that a later
-          // commit+vacuum removed — expire the cursor cleanly
-          Option(cursors.remove(id)).foreach(releaseCursor)
-          throw new ParseException(s"Cursor $id expired: underlying data was vacuumed")
-      }
-    cur.page = target
-    Page(rows, target)
-  }
+  /** Page 0 of a live cursor's ordered result: what a client is shown
+    * right after a SEARCH-shaped statement, so its next QYCNNXT continues
+    * exactly after these rows. One `limit(PageSize + 1)` job; a result
+    * that fits one page stays on the cursor as rows, and later pages of
+    * it start no Spark job.
+    */
+  def firstPage(id: String): Seq[Row] = expiring(id)(liveCursor(id).firstPage(PageSize))
+
+  private def pageOf(id: String, delta: Int): Page =
+    expiring(id)(liveCursor(id).turn(delta, PageSize))
+
+  private def liveCursor(id: String): Cursor =
+    cursor(id).getOrElse(throw new ParseException(s"Unknown cursor $id"))
+
+  /** A cursor's plan references a version dir that a later commit+vacuum
+    * removed: expire the cursor cleanly instead of a raw FNF. */
+  private def expiring[A](id: String)(body: => A): A =
+    try body
+    catch {
+      case e: Exception if rootCauseIsMissingFile(e) =>
+        closeCursor(id)
+        throw new ParseException(s"Cursor $id expired: underlying data was vacuumed")
+    }
 
   /** The deterministically ordered result of a live cursor (not
     * persisted): what a paging client observes, exposed for harnesses and
     * embedders that want the engine-defined order without forcing a sort
-    * into the SEARCH plan itself.
+    * into the SEARCH plan itself. A cursor holding its rows answers with
+    * a local relation of them.
     */
-  def orderedResult(id: String): Option[DataFrame] =
-    Option(cursors.get(id)).map(_.paged)
+  def orderedResult(id: String): Option[DataFrame] = cursor(id).map(_.paged)
 
   /** Test hook: the live cursor state for an id. */
-  private[aql] def cursorState(id: String): Option[Cursor] = Option(cursors.get(id))
+  private[aql] def cursorState(id: String): Option[Cursor] = cursor(id)
 
   private def rootCauseIsMissingFile(e: Throwable): Boolean = {
     var t: Throwable = e
@@ -3799,9 +3814,11 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     }
     candidates match {
       case Some((idef, how, cand)) =>
-        val ids = cand.limit(IndexProbeCap + 1).collect()
-          .map(_.get(0)).toIndexedSeq
-        if (ids.length > IndexProbeCap) {
+        // the lookups don't de-duplicate (no Exchange): a pk the
+        // container holds twice comes back twice, so the ≤ cap + 1
+        // collected ids are made distinct here
+        val got = cand.limit(IndexProbeCap + 1).collect()
+        if (got.length > IndexProbeCap) {
           note(s"index '${idef.ix}' probe on ${idef.column} ($how) abandoned: " +
             s"over index_probe_cap $IndexProbeCap candidates — plain scan")
           base // unselective: plain scan wins
@@ -3809,6 +3826,7 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
         // pk-null rows can't appear in candidate lists (isin is
         // null-poisoned) — keep them for the full predicate to decide
         else {
+          val ids = got.map(_.get(0)).distinct.toIndexedSeq
           note(s"index '${idef.ix}' probe on ${idef.column} ($how) served " +
             s"${ids.length} pk candidate(s); clustered scan pruned to them")
           base.filter(col(d.primaryKey).isin(ids: _*) ||
@@ -4517,14 +4535,70 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
 }
 
 object Engine {
+  /** Whether a statement may run beside other reads: true for the
+    * statements that only plan Spark jobs over immutable committed
+    * versions and the staged overlay, and for cursor paging (the cursor
+    * registry and each cursor guard themselves). Everything else — DDL,
+    * DML staging, COMMIT/ROLLBACK, index DDL, the curation funnels and
+    * their applies, maintenance, views, settings and introspection —
+    * runs alone. One match over every statement kind, no wildcard, so a
+    * new kind fails the build until it is classified.
+    */
+  def sharedRead(stmt: Ast.Stmt): Boolean = stmt match {
+    case _: Ast.Search | _: Ast.SetOp | _: Ast.Match | _: Ast.Similar |
+         _: Ast.Fuse => true
+    case Ast.Explain(q, _) => sharedRead(q)
+    case _: Ast.CursorNext | _: Ast.CursorPrevious | _: Ast.CursorExit => true
+    case _: Ast.CreateContainer | _: Ast.AlterContainer |
+         _: Ast.AlterDropColumn | _: Ast.AlterRenameColumn |
+         _: Ast.DeleteContainer | _: Ast.CloneContainer |
+         _: Ast.RestoreContainer | _: Ast.Import | _: Ast.Export => false
+    case _: Ast.CreateRow | _: Ast.MergeRow | _: Ast.MergeRows |
+         _: Ast.EditRow | _: Ast.DeleteRow | _: Ast.DeleteRows |
+         _: Ast.Commit | _: Ast.Rollback => false
+    case _: Ast.CreateIndex | _: Ast.DeleteIndex | _: Ast.RebuildIndex => false
+    case _: Ast.ShowDedup | _: Ast.DedupContainer | _: Ast.ShowDedupAgainst |
+         _: Ast.DedupAgainst | _: Ast.SimilarAgainst | _: Ast.Decontaminate |
+         _: Ast.ShowDecontaminate | _: Ast.ShowOverlap |
+         _: Ast.ShowOverlapMatrix => false
+    case _: Ast.Vacuum | _: Ast.Optimize | _: Ast.Analyze | _: Ast.Changes => false
+    case _: Ast.CreateView | _: Ast.RefreshView | _: Ast.DeleteView => false
+    case Ast.ShowContainers | Ast.ShowViews | Ast.ShowSettings |
+         _: Ast.Describe | _: Ast.ShowIndexes | _: Ast.ShowCreate |
+         _: Ast.ShowVersions | _: Ast.ShowStats | _: Ast.ShowTails => false
+  }
+
   /** The deterministic cursor order: every output column ascending,
     * NULLs first. */
   def defaultOrder(df: DataFrame): DataFrame =
     df.orderBy(df.columns.map(c => col(c).asc_nulls_first).toIndexedSeq: _*)
 
-  final case class Cursor(df: DataFrame, var page: Int,
-      needsDefaultSort: Boolean = false, cacheCap: Long = Long.MaxValue) {
+  /** A live cursor over a SEARCH-shaped result. Once [[firstPage]] has
+    * seen that the whole result fits one page, the cursor holds those
+    * rows and drops its plan: paging then slices the rows and starts no
+    * Spark job, and a never-closed point-read cursor pins a few rows
+    * instead of analyzed plans and a file index. Larger results keep the
+    * plan and page by slicing its persisted sort.
+    *
+    * Page state, the plan and the held rows are guarded by the cursor's
+    * monitor, held across a page's collect: two clients paging one cursor
+    * serialize, different cursors do not.
+    */
+  final class Cursor private (df: DataFrame, private var page: Int,
+      needsDefaultSort: Boolean, val cacheCap: Long) {
     import org.apache.spark.storage.StorageLevel
+
+    private val session = df.sparkSession
+    private val schema = df.schema
+    // volatile: the registry reads the plan without this monitor
+    @volatile private var plan: DataFrame = df
+    private var sorted: DataFrame = _
+    private var rows: IndexedSeq[Row] = _
+
+    /** The analyzed plan, for the registry's shared-cache check; None
+      * once the cursor holds its rows. */
+    private[aql] def analyzed: Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] =
+      Option(plan).map(_.queryExecution.analyzed)
 
     /** Catalyst's plan-stats size estimate for the cursor's result — the
       * persist guardrail's input. */
@@ -4534,9 +4608,46 @@ object Engine {
       * default sort is attached HERE — lazily, on first cursor use — not
       * in the SEARCH plan itself, so an unlimited no-ORDER-BY SEARCH
       * whose client never paginates never pays a global sort shuffle the
-      * reference's address-order contract doesn't require.
+      * reference's address-order contract doesn't require. A cursor
+      * holding its rows answers with a local relation of them.
       */
-    lazy val paged: DataFrame = if (needsDefaultSort) defaultOrder(df) else df
+    def paged: DataFrame = synchronized {
+      if (rows != null) session.createDataFrame(rows.asJava, schema)
+      else {
+        if (sorted == null) sorted = if (needsDefaultSort) defaultOrder(plan) else plan
+        sorted
+      }
+    }
+
+    /** Page 0: one `limit(size + 1)` collect of the ordered result. When
+      * the whole result fits one page, the cursor keeps the rows and drops
+      * the plan (unless a page fetch already persisted the plan's sort). */
+    def firstPage(size: Int): Seq[Row] = synchronized {
+      if (rows != null) rows
+      else {
+        val got = paged.limit(size + 1).collect().toIndexedSeq
+        if (got.length > size || sorted.storageLevel != StorageLevel.NONE) got.take(size)
+        else {
+          rows = got; plan = null; sorted = null
+          got
+        }
+      }
+    }
+
+    /** Move to page `page + delta` (floored at 0) and return it. Pages of
+      * held rows are slices of them. Otherwise pages slice the
+      * once-materialized sorted result: the sort shuffle runs once, each
+      * page job fetches and caches only the partitions it needs — page N
+      * is an incremental slice, never a fresh top-(N+1)·size re-execution.
+      */
+    def turn(delta: Int, size: Int): Page = synchronized {
+      val target = math.max(0, page + delta)
+      val got =
+        if (rows != null) rows.slice(target * size, (target + 1) * size)
+        else materialized.offset(target * size).limit(size).collect().toSeq
+      page = target
+      Page(got, target)
+    }
 
     /** The paged result, persisted on first page fetch. Spark caches
       * in-memory partitions lazily as page jobs touch them and reuses the
@@ -4547,7 +4658,7 @@ object Engine {
       * result in driver memory (the reference keeps all rows resident;
       * MEMORY_AND_DISK spills instead of OOMing on a huge result).
       */
-    def materialized: DataFrame = {
+    def materialized: DataFrame = synchronized {
       // guardrail: a client that fetches ONE page of a huge SEARCH must
       // not pin a full-table sort in the cache. Results whose plan-stats
       // estimate exceeds `cacheCap` (the settings.yaml memory_limit — the
@@ -4555,14 +4666,23 @@ object Engine {
       // vectors must also fit) fall back to sort-per-page: each page
       // re-runs offset/limit over the sort, trading repeat shuffle reads
       // for zero cache residency.
-      if (paged.storageLevel == StorageLevel.NONE && estimatedBytes <= cacheCap)
-        paged.persist(StorageLevel.MEMORY_AND_DISK)
-      paged
+      val p = paged
+      if (p.storageLevel == StorageLevel.NONE && estimatedBytes <= cacheCap)
+        p.persist(StorageLevel.MEMORY_AND_DISK)
+      p
     }
 
     /** Drop cached blocks when the cursor is closed, evicted, or expired. */
-    def release(): Unit =
-      if (paged.storageLevel != StorageLevel.NONE) paged.unpersist(blocking = false)
+    def release(): Unit = synchronized {
+      if (sorted != null && sorted.storageLevel != StorageLevel.NONE)
+        sorted.unpersist(blocking = false)
+    }
+  }
+
+  object Cursor {
+    def apply(df: DataFrame, page: Int, needsDefaultSort: Boolean = false,
+        cacheCap: Long = Long.MaxValue): Cursor =
+      new Cursor(df, page, needsDefaultSort, cacheCap)
   }
 
   sealed trait Result

@@ -23,10 +23,7 @@ object Repl {
       .foreach { line =>
         try eng.execute(line) match {
           case Engine.ResultSet(df, id) =>
-            // sorted page 0 from the cursor's ordered view, so QYCNNXT
-            // continues exactly after the shown rows
-            val rows = eng.orderedResult(id).getOrElse(df)
-              .limit(eng.PageSize).collect()
+            val rows = eng.firstPage(id)
             println(df.columns.mkString(" | "))
             rows.foreach(r => println(r.mkString(" | ")))
             println(s"-- ${rows.length} row(s) shown, cursor $id")

@@ -618,6 +618,11 @@ object Index {
     * first-column chunk lookup (`src/indexing.rs:215-309`). Callers
     * re-apply their full predicate on the pk-pruned base scan, so the
     * index can only change WHERE rows come from, never what they are.
+    *
+    * One index row per container row, so a pk repeats only when the
+    * container itself holds that pk more than once. The lookup does not
+    * de-duplicate — that would cost an Exchange per probe — and a caller
+    * that needs distinct ids de-duplicates its bounded collect.
     */
   def valueLookup(cat: Catalog, container: String, idef: Def,
       keys: Seq[Any], at: Option[Int] = None): DataFrame = {
@@ -626,7 +631,7 @@ object Index {
       s"index '${idef.ix}' is composite — probe with valueLookupComposite")
     read(cat, container, idef, at)
       .filter(col("val").isin(keys: _*))
-      .select(col("id")).distinct()
+      .select(col("id"))
   }
 
   /** Composite twin of [[valueLookup]]: candidate pks whose indexed
@@ -636,7 +641,7 @@ object Index {
     * (lang, quality_band) curation shape. The conjunction pushes down on
     * every bound component and the leader-sorted layout keeps the scan
     * file/row-group pruned; probe cost ∝ the literal tuple list, never
-    * the corpus. */
+    * the corpus. Not de-duplicated, like [[valueLookup]]. */
   def valueLookupComposite(cat: Catalog, container: String, idef: Def,
       keyTuples: Seq[Seq[Any]], at: Option[Int] = None,
       trailing: Seq[(String, Any)] = Nil): DataFrame = {
@@ -660,14 +665,15 @@ object Index {
       boundPred(col(names(k)), op, v) }.reduceOption(_ && _)
     read(cat, container, idef, at)
       .filter(rangePred.map(pred && _).getOrElse(pred))
-      .select(col("id")).distinct()
+      .select(col("id"))
   }
 
   /** Range twin of [[valueLookup]] (the reference's
     * `Indexed(Range|InclusiveRange)` access paths,
     * `src/query_conditions.rs:541-593`): candidate pks whose indexed
     * value falls in the given bounds — same stat-pruned scan, the `val`
-    * sort making the range a contiguous file/row-group slice.
+    * sort making the range a contiguous file/row-group slice. Not
+    * de-duplicated, like [[valueLookup]].
     */
   def valueRangeLookup(cat: Catalog, container: String, idef: Def,
       pred: org.apache.spark.sql.Column, at: Option[Int] = None): DataFrame = {
@@ -676,7 +682,7 @@ object Index {
       s"index '${idef.ix}' is composite — range serving is single-column only")
     read(cat, container, idef, at)
       .filter(pred)
-      .select(col("id")).distinct()
+      .select(col("id"))
   }
 
   /** ANN candidates for `queries` (rows shaped like the container) from

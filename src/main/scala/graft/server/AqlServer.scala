@@ -1,9 +1,11 @@
 package graft.server
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import graft.aql.Engine
+import graft.aql.{Ast, Engine, Parser}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.locks.{Lock, ReentrantReadWriteLock}
+import org.apache.spark.sql.Row
 
 /** HTTP surface for the AQL engine — the reference serves the same
   * statement set over HTTP/1 (`/root/reference/src/database.rs:1249-1356`).
@@ -32,9 +34,15 @@ import java.nio.charset.StandardCharsets.UTF_8
   *                 {rows, page}, or {message}.
   *   GET  /health  liveness probe.
   *
-  * Concurrency: statements execute under a per-server lock, matching the
-  * reference's whole-database RwLock per request (`database.rs:1123`).
-  * Reads are Spark jobs and parallelize internally.
+  * Concurrency: every statement is parsed outside any lock, then runs
+  * under one side of a per-server read/write lock (the reference holds
+  * its whole-database RwLock per request, `database.rs:1123`). Read
+  * statements — SEARCH, set ops, MATCH, SIMILAR, FUSE, EXPLAIN of those
+  * and cursor paging ([[Engine.sharedRead]]) — share the lock: they are
+  * Spark jobs over immutable copy-on-write versions and run side by
+  * side. Every other statement holds it exclusively, so a read sees the
+  * staged overlay and the committed version either wholly before or
+  * wholly after a write.
   */
 /** @param connectionsPort -1 (default) = single-port mode; >= 0 binds a
   *   second listener serving the path-blind wire dispatch, the two-port
@@ -49,7 +57,8 @@ final class AqlServer(engine: Engine, port: Int = 0, connectionsPort: Int = -1) 
   private var server: HttpServer = _
   private var connServer: HttpServer = _
   private var pool: java.util.concurrent.ExecutorService = _
-  private val lock = new Object
+  /** Shared side: read statements; exclusive side: everything else. */
+  private[server] val statementLock = new ReentrantReadWriteLock
 
   /** Live session ids issued by /session (reference keeps a
     * session→secret map, `database.rs:1121-1139`); bounded LRU so
@@ -116,8 +125,9 @@ final class AqlServer(engine: Engine, port: Int = 0, connectionsPort: Int = -1) 
     server.createContext("/session", exactOr("/session", handleSession))
     server.createContext("/query", exactOr("/query", handleQuery))
     server.createContext("/", (ex: HttpExchange) => handleWire(ex))
-    // max_connections bounds concurrent request handlers; execution is
-    // still serialized per statement by `lock` (reference whole-db RwLock)
+    // max_connections bounds concurrent request handlers; read statements
+    // run side by side under the shared side of `statementLock`, every
+    // other statement runs alone under its exclusive side
     pool = java.util.concurrent.Executors.newFixedThreadPool(engine.settings.maxConnections)
     server.setExecutor(pool)
     server.start()
@@ -198,34 +208,36 @@ final class AqlServer(engine: Engine, port: Int = 0, connectionsPort: Int = -1) 
     }
   }
 
-  /** Execute one statement under the server lock, result as JSON (shared by
-    * the plain /query route and the encrypted wire protocol).
+  /** Execute one statement under the statement lock, result as JSON
+    * (shared by the plain /query route and the encrypted wire protocol).
     */
-  private def executeToJson(command: String, args: Seq[String]): String = {
-    // the cursor registry (access-ordered LinkedHashMap) is only safe
-    // under the server lock — resolve the ordered view INSIDE it; the
-    // captured DataFrame is immutable, so the collect can run outside
-    val (result, orderedView) = lock.synchronized {
-      engine.execute(command, args.toList) match {
-        case r @ Engine.ResultSet(_, id) => (r, engine.orderedResult(id))
-        case r => (r, None)
-      }
-    }
-    result match {
-      case Engine.ResultSet(df, cursorId) =>
-        // initial rows come from the cursor's ORDERED view (sorted page
-        // 0), not the raw plan — on the no-ORDER-BY path ResultSet.df is
-        // unsorted, and a paging client's next QYCNNXT serves sorted page
-        // 1, which must continue exactly after these rows
-        val paged = orderedView.getOrElse(df)
-        val rows = paged.limit(engine.PageSize).collect()
+  private def executeToJson(command: String, args: Seq[String]): String =
+    execute(Parser.parse(command, args.toList)) match {
+      case (Engine.ResultSet(df, cursorId), rows) =>
         s"""{"columns":${jarr(df.columns.toSeq.map(jstr))},""" +
-          s""""rows":${jarr(rows.toSeq.map(r => jarr(r.toSeq.map(jval))))},""" +
+          s""""rows":${jarr(rows.map(r => jarr(r.toSeq.map(jval))))},""" +
           s""""cursor":${jstr(cursorId)}}"""
-      case Engine.Page(rows, page) =>
+      case (Engine.Page(rows, page), _) =>
         s"""{"rows":${jarr(rows.map(r => jarr(r.toSeq.map(jval))))},"page":$page}"""
-      case Engine.Done(msg) => s"""{"message":${jstr(msg)}}"""
+      case (Engine.Done(msg), _) => s"""{"message":${jstr(msg)}}"""
     }
+
+  /** Run a parsed statement under its side of the statement lock, with
+    * the first page of a SEARCH-shaped result. A write's first page is
+    * collected after downgrading to the shared side: it runs beside
+    * other reads, and no write slips in between the statement and its
+    * first page.
+    */
+  private def execute(stmt: Ast.Stmt): (Engine.Result, Seq[Row]) = {
+    val (read, write) = (statementLock.readLock, statementLock.writeLock)
+    var held: Lock = if (Engine.sharedRead(stmt)) read else write
+    held.lock()
+    try engine.run(stmt) match {
+      case r @ Engine.ResultSet(_, id) =>
+        if (held eq write) { read.lock(); write.unlock(); held = read }
+        (r, engine.firstPage(id))
+      case r => (r, Nil)
+    } finally held.unlock()
   }
 
   /** The reference's 8-zero-byte error frame (`(0 as u64).to_be_bytes()`,

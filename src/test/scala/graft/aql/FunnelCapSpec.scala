@@ -16,6 +16,14 @@ import org.scalatest.funsuite.AnyFunSuite
 class FunnelCapSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
+  /** The physical-operator names the EXPLAIN pin matches, kept in one
+    * place so a Spark upgrade that renames a node touches only these. */
+  private object PlanNodes {
+    val ReusedExchange = "ReusedExchange"
+    val ShuffledHashSemiJoin = "ShuffledHashJoin LeftSemi"
+    val SortMergeSemiJoin = "SortMergeJoin LeftSemi"
+  }
+
   private val vocab = Vector("alpha", "beta", "gamma", "delta", "epsilon",
     "zeta", "eta", "theta", "iota", "kappa", "lambda", "mu")
 
@@ -85,11 +93,11 @@ class FunnelCapSpec extends AnyFunSuite {
     val eng = mkEngine(Some(1))
     val plan = eng.execute("EXPLAIN SHOW DEDUP dfc USING nd")
       .asInstanceOf[Engine.Done].message
-    assert(plan.contains("ReusedExchange"),
+    assert(plan.contains(PlanNodes.ReusedExchange),
       s"pairs subtree must plan once and reuse (got plan:\n$plan)")
-    assert(plan.contains("ShuffledHashJoin LeftSemi"),
+    assert(plan.contains(PlanNodes.ShuffledHashSemiJoin),
       s"verify must semi-join candidate ids shuffle-hash:\n$plan")
-    assert(!plan.contains("SortMergeJoin LeftSemi"),
+    assert(!plan.contains(PlanNodes.SortMergeSemiJoin),
       s"candidate semi-join must not sort the corpus side:\n$plan")
   }
 

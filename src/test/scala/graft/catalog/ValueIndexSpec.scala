@@ -295,4 +295,49 @@ class ValueIndexSpec extends AnyFunSuite {
     // time travel: v1's index still serves the pre-edit state
     assert(Index.valueLookup(cat, "t", idef, Seq("zz"), at = Some(1)).count() == 0)
   }
+
+  test("value probes plan no Exchange; a duplicated pk serves the plain scan's rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-vix-dup")
+    val eng = new graft.aql.Engine(spark, dir.toString)
+    val cat = eng.catalog
+    eng.execute("CREATE CONTAINER vd ['id','tag','band'] [BIGINT, TEXT, BIGINT]")
+    import spark.implicits._
+    // pk 3 is held twice with the probed value, pk 5 twice with different ones
+    val rows = (0L until 20L).map(i => (i, s"t${i % 4}", i % 3)) ++
+      Seq((3L, "t3", 0L), (5L, "t3", 2L))
+    cat.overwrite("vd", rows.toDF("id", "tag", "band"))
+    eng.execute("CREATE INDEX vt ON vd ['tag'] USING value")
+    eng.execute("CREATE INDEX vc ON vd ['tag','band'] USING value")
+    val single = cat.indexDefs("vd").find(_.ix == "vt").get
+    val comp = cat.indexDefs("vd").find(_.ix == "vc").get
+    Seq(
+      "valueLookup" -> Index.valueLookup(cat, "vd", single, Seq("t3")),
+      "valueLookupComposite" -> Index.valueLookupComposite(cat, "vd", comp, Seq(Seq("t3", 0L))),
+      "valueRangeLookup" -> Index.valueRangeLookup(cat, "vd", single, col("val") >= "t2")
+    ).foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"$name must not shuffle:\n$plan")
+    }
+    // the lookup itself keeps the repeat; the engine's probe collapses it
+    assert(Index.valueLookup(cat, "vd", single, Seq("t3"))
+      .collect().map(_.getLong(0)).count(_ == 3L) == 2)
+    def engineRows(aql: String) = eng.orderedResult(eng.execute(aql)
+      .asInstanceOf[graft.aql.Engine.ResultSet].cursorId).get.collect().toSeq
+    def scanRows(pred: org.apache.spark.sql.Column) = graft.aql.Engine.defaultOrder(
+      cat.read("vd").filter(pred)).collect().toSeq
+    for ((where, pred) <- Seq(
+        "tag = 't3'" -> (col("tag") === "t3"),
+        "tag = 't3' AND band = 0" -> (col("tag") === "t3" && col("band") === 0L),
+        "tag >= 't2'" -> (col("tag") >= "t2"))) {
+      val aql = s"SEARCH [] ON vd WHERE $where"
+      val plan = eng.execute(s"EXPLAIN $aql").asInstanceOf[graft.aql.Engine.Done].message
+      assert(plan.contains("pk candidate(s); clustered scan pruned"),
+        s"$where must be served through the probe:\n$plan")
+      assert(engineRows(aql) == scanRows(pred), where)
+    }
+    val plan = eng.execute("EXPLAIN SEARCH [] ON vd WHERE tag = 't3'")
+      .asInstanceOf[graft.aql.Engine.Done].message
+    assert(plan.contains("served 6 pk candidate(s)"),
+      s"the probe's repeated pk must count once:\n$plan")
+  }
 }
