@@ -88,8 +88,8 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     * Read statements run concurrently, and the access-ordered map mutates
     * on `get`: every access, registration and eviction holds the map's
     * own monitor. Page state is guarded per cursor (see [[Cursor]]).
+    * At most [[Engine.MaxCursors]] cursors are live.
     */
-  val MaxCursors = 256
   private val cursors = new java.util.LinkedHashMap[String, Cursor](64, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[String, Cursor]): Boolean = {
       val evict = size() > MaxCursors
@@ -1435,9 +1435,11 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
 
   /** Page 0 of a live cursor's ordered result: what a client is shown
     * right after a SEARCH-shaped statement, so its next QYCNNXT continues
-    * exactly after these rows. One `limit(PageSize + 1)` job; a result
-    * that fits one page stays on the cursor as rows, and later pages of
-    * it start no Spark job.
+    * exactly after these rows, and never more than one page. One
+    * `limit(ResidentPages · PageSize + 1)` job; a result of up to
+    * ResidentPages (10) pages that fits its byte budget is held on the
+    * cursor as rows, and later pages of it start no Spark job, even
+    * after its version is vacuumed.
     */
   def firstPage(id: String): Seq[Row] = expiring(id)(liveCursor(id).firstPage(PageSize))
 
@@ -2599,11 +2601,12 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     * score-desc/pk-asc like the ivf form. Unlike the ivf lists the band
     * index stores no text, so the candidate rows are fetched from the
     * snapshot: the candidate pk list is bounded per-lookup metadata (one
-    * probe doc's band collisions) collected under `index_probe_cap` and
-    * pushed into the scan as a LITERAL isin — a file-skipping point scan
-    * on the pk-clustered layout; past the cap the fetch degrades to a
-    * broadcast candidate join (one corpus scan, never a collect of
-    * unbounded data). Scoring then crossJoins the ONE broadcast probe
+    * probe doc's band collisions) collected under `index_probe_cap` in
+    * one job ([[Engine.boundedIds]]) and pushed into the scan as a
+    * LITERAL isin — a file-skipping point scan on the pk-clustered
+    * layout; past the cap the fetch degrades to a shuffle-hash
+    * candidate join (one corpus scan, never a collect of unbounded
+    * data). Scoring then crossJoins the ONE broadcast probe
     * row — identical derivations to the fixture lane (`withShingles` /
     * `withSimhash`), so the scores match the DuckDB oracle recomputation
     * bit-for-bit under round(6). */
@@ -2611,14 +2614,12 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
       pkName: String, snapshot: DataFrame, probe: DataFrame,
       cands: DataFrame): DataFrame = {
     import graft.operators.TextDedup.{withShingles, withSimhash}
-    val ids = cands.select(col("cand")).limit(IndexProbeCap + 1)
-      .collect().map(_.get(0))
-    val fetched =
-      if (ids.length <= IndexProbeCap) {
+    val fetched = boundedIds(cands.select(col("cand")), IndexProbeCap) match {
+      case Some(ids) =>
         note(s"similar scored (${idef.kind}): ${ids.length} candidate " +
           "pk(s) fetched via a literal-isin pruned point scan")
         snapshot.filter(col(pkName).isin(ids.toIndexedSeq: _*))
-      } else {
+      case None =>
         // past the cap the candidate cardinality is UNKNOWN (a
         // pathological corpus can share one band key across millions of
         // docs), so the fetch join must not assume broadcastability:
@@ -2629,7 +2630,7 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
           s"index_probe_cap $IndexProbeCap — shuffle-hash candidate join")
         snapshot.join(cands.select(col("cand")).hint("shuffle_hash"),
           col(pkName) === col("cand")).drop("cand")
-      }
+    }
     // each candidate pk is served ONCE even on a duplicate-pk corpus —
     // min-by-bytes any-representative pick, the ivf twin's documented
     // stance (Index.ivfLookup); without it a pk committed twice would
@@ -3620,7 +3621,8 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     * `src/query_conditions.rs:541-593`, to ANY column with a `value`
     * index): when the WHERE is an AND-chain containing `col = literal`
     * on an indexed column and the container has no staged ops, resolve
-    * the literal through the index into a bounded pk candidate list and
+    * the literal through the index into a bounded pk candidate list —
+    * one collect job, [[Engine.boundedIds]] under `index_probe_cap` — and
     * prune the base scan to those pks — on the pk-range-clustered layout
     * that is a file-skipping scan, the reference's index→addresses→
     * positional-read shape re-expressed. The FULL predicate still
@@ -3814,23 +3816,22 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     }
     candidates match {
       case Some((idef, how, cand)) =>
-        // the lookups don't de-duplicate (no Exchange): a pk the
-        // container holds twice comes back twice, so the ≤ cap + 1
-        // collected ids are made distinct here
-        val got = cand.limit(IndexProbeCap + 1).collect()
-        if (got.length > IndexProbeCap) {
-          note(s"index '${idef.ix}' probe on ${idef.column} ($how) abandoned: " +
-            s"over index_probe_cap $IndexProbeCap candidates — plain scan")
-          base // unselective: plain scan wins
-        }
-        // pk-null rows can't appear in candidate lists (isin is
-        // null-poisoned) — keep them for the full predicate to decide
-        else {
-          val ids = got.map(_.get(0)).distinct.toIndexedSeq
-          note(s"index '${idef.ix}' probe on ${idef.column} ($how) served " +
-            s"${ids.length} pk candidate(s); clustered scan pruned to them")
-          base.filter(col(d.primaryKey).isin(ids: _*) ||
-            col(d.primaryKey).isNull)
+        // one bounded collect job; the lookups don't de-duplicate (no
+        // Exchange): a pk the container holds twice comes back twice, so
+        // the ≤ cap collected ids are made distinct here
+        boundedIds(cand, IndexProbeCap) match {
+          case None =>
+            note(s"index '${idef.ix}' probe on ${idef.column} ($how) abandoned: " +
+              s"over index_probe_cap $IndexProbeCap candidates — plain scan")
+            base // unselective: plain scan wins
+          // pk-null rows can't appear in candidate lists (isin is
+          // null-poisoned) — keep them for the full predicate to decide
+          case Some(got) =>
+            val ids = got.distinct.toIndexedSeq
+            note(s"index '${idef.ix}' probe on ${idef.column} ($how) served " +
+              s"${ids.length} pk candidate(s); clustered scan pruned to them")
+            base.filter(col(d.primaryKey).isin(ids: _*) ||
+              col(d.primaryKey).isNull)
         }
       case None => base
     }
@@ -4535,6 +4536,26 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
 }
 
 object Engine {
+  /** Live cursors per Engine; the least recently used one is evicted. */
+  val MaxCursors = 256
+
+  /** Pages of a result a cursor holds as rows once its first page is
+    * served (see [[Cursor]]). */
+  val ResidentPages = 10
+
+  /** The values of the one-column `ids` when it has at most `cap` rows,
+    * else None. One job and no Exchange of its own: each partition
+    * returns at most cap + 1 values and the driver keeps cap + 1, so it
+    * holds at most partitions × (cap + 1) values.
+    * (`limit(cap + 1).collect()` runs CollectLimit's incremental take:
+    * one partition, then the rest in a second job.) */
+  private[aql] def boundedIds(ids: DataFrame, cap: Int): Option[Array[Any]] = {
+    val keep = cap + 1
+    val got = ids.mapPartitions(_.take(keep))(
+      org.apache.spark.sql.Encoders.row(ids.schema)).collect()
+    if (got.length > cap) None else Some(got.map(_.get(0)))
+  }
+
   /** Whether a statement may run beside other reads: true for the
     * statements that only plan Spark jobs over immutable committed
     * versions and the staged overlay, and for cursor paging (the cursor
@@ -4574,11 +4595,14 @@ object Engine {
     df.orderBy(df.columns.map(c => col(c).asc_nulls_first).toIndexedSeq: _*)
 
   /** A live cursor over a SEARCH-shaped result. Once [[firstPage]] has
-    * seen that the whole result fits one page, the cursor holds those
-    * rows and drops its plan: paging then slices the rows and starts no
-    * Spark job, and a never-closed point-read cursor pins a few rows
-    * instead of analyzed plans and a file index. Larger results keep the
-    * plan and page by slicing its persisted sort.
+    * seen that the whole result is at most [[ResidentPages]] pages and
+    * fits `cacheCap / MaxCursors` bytes (so every live cursor's held rows
+    * together stay within memory_limit), the cursor holds those rows and
+    * drops its plan: paging then slices the rows and starts no Spark job,
+    * a held result keeps paging after its version is vacuumed, and a
+    * never-closed point-read cursor pins a few rows instead of analyzed
+    * plans and a file index. Larger results keep the plan and page by
+    * slicing its persisted sort.
     *
     * Page state, the plan and the held rows are guarded by the cursor's
     * monitor, held across a page's collect: two clients paging one cursor
@@ -4594,6 +4618,7 @@ object Engine {
     @volatile private var plan: DataFrame = df
     private var sorted: DataFrame = _
     private var rows: IndexedSeq[Row] = _
+    private val heldBytes = cacheCap / MaxCursors
 
     /** The analyzed plan, for the registry's shared-cache check; None
       * once the cursor holds its rows. */
@@ -4619,19 +4644,21 @@ object Engine {
       }
     }
 
-    /** Page 0: one `limit(size + 1)` collect of the ordered result. When
-      * the whole result fits one page, the cursor keeps the rows and drops
-      * the plan (unless a page fetch already persisted the plan's sort). */
+    /** Page 0: one `limit(ResidentPages · size + 1)` collect of the
+      * ordered result. When the whole result is at most ResidentPages
+      * pages and within the held-bytes budget, the cursor keeps the rows
+      * and drops the plan (unless a page fetch already persisted the
+      * plan's sort); otherwise the rows past page 0 are dropped. */
     def firstPage(size: Int): Seq[Row] = synchronized {
-      if (rows != null) rows
-      else {
-        val got = paged.limit(size + 1).collect().toIndexedSeq
-        if (got.length > size || sorted.storageLevel != StorageLevel.NONE) got.take(size)
-        else {
-          rows = got; plan = null; sorted = null
-          got
-        }
+      val got =
+        if (rows != null) rows
+        else paged.limit(ResidentPages * size + 1).collect().toIndexedSeq
+      if (rows == null && got.length <= ResidentPages * size &&
+          sorted.storageLevel == StorageLevel.NONE &&
+          org.apache.spark.util.SizeEstimator.estimate(got) <= heldBytes) {
+        rows = got; plan = null; sorted = null
       }
+      got.take(size)
     }
 
     /** Move to page `page + delta` (floored at 0) and return it. Pages of

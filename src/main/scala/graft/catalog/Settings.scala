@@ -26,9 +26,12 @@ import scala.jdk.CollectionConverters._
   *    reference's session-id handshake, `database.rs:1110-1143`; its
   *    AES-256-GCM transport layer is replaced by TLS termination in
   *    front of the HTTP surface, documented in [[graft.server.AqlServer]]).
-  *  - `memory_limit` — recorded for parity; memory is governed by the
-  *    Spark memory manager (executor/driver memory set at launch), which
-  *    replaces the reference's in-process byte accounting.
+  *  - `memory_limit` — the cursors' budget: a cursor persists its sorted
+  *    result only when the plan's size estimate fits it, and holds a
+  *    result as rows only within `memory_limit / MaxCursors` bytes, so
+  *    all held rows together stay within it. Everything else is governed
+  *    by the Spark memory manager (executor/driver memory set at launch),
+  *    which replaces the reference's in-process byte accounting.
   *  - `secret_key_count` — number of pre-shared AES-256 wire keys generated
   *    on first boot (reference `database.rs:29,1303`), stored reference-
   *    format in `.graft-keys` (see [[graft.server.WireKeys]]).

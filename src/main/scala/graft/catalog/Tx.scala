@@ -126,6 +126,18 @@ final class Tx(catalog: Catalog) {
     }
   }
 
+  /** The base files holding a row of `tagged` (a `readVersionTagged`
+    * scan, filtered to the rows a commit touches): each partition keeps
+    * its distinct `__src_file` names and the driver unions them, so the
+    * probe adds no Exchange of its own; the driver holds at most
+    * partitions × files names, metadata-sized. */
+  private def touchedFiles(tagged: DataFrame): Set[String] = {
+    val names = org.apache.spark.sql.Encoders.STRING
+    tagged.select(col("__src_file")).as(names)
+      .mapPartitions(_.toSet.iterator)(names)
+      .collect().toSet
+  }
+
   /** A staged insert batch as ONE partition. Staged rows are
     * statement-level driver metadata (CREATE ROW and MERGE ROW stage one
     * row each), but a local relation scans as min(rows, cores)
@@ -437,10 +449,8 @@ final class Tx(catalog: Catalog) {
 
     val baseFiles = catalog.versionFiles(c, base)
     val srcPks = src.select(col(pk))
-    val touched: Set[String] = catalog.readVersionTagged(c, base)
-      .join(srcPks, Seq(pk), "left_semi")
-      .select(col("__src_file"))
-      .distinct().collect().map(_.getString(0)).toSet
+    val touched = touchedFiles(catalog.readVersionTagged(c, base)
+      .join(srcPks, Seq(pk), "left_semi"))
     val kept = baseFiles.filterNot(f => touched(f.getFileName.toString))
     // misses insert (anti-join against ALL base pks, not just touched
     // files — the pk-unique convention means a pk absent from the touched
@@ -533,10 +543,8 @@ final class Tx(catalog: Catalog) {
       keys: DataFrame): Option[Boolean] = {
     val pk = d.primaryKey
     val baseFiles = catalog.versionFiles(c, base)
-    val touched: Set[String] = catalog.readVersionTagged(c, base)
-      .join(keys, Seq(pk), "left_semi")
-      .select(col("__src_file"))
-      .distinct().collect().map(_.getString(0)).toSet
+    val touched = touchedFiles(catalog.readVersionTagged(c, base)
+      .join(keys, Seq(pk), "left_semi"))
     if (touched.isEmpty) return None
     val kept = baseFiles.filterNot(f => touched(f.getFileName.toString))
     val paths = baseFiles.filter(f => touched(f.getFileName.toString))
@@ -610,10 +618,8 @@ final class Tx(catalog: Catalog) {
     val baseFiles = catalog.versionFiles(c, base)
     val touched: Set[String] =
       if (edPreds.isEmpty || baseFiles.isEmpty) Set.empty
-      else catalog.readVersionTagged(c, base)
-        .filter(edPreds.reduce(_ || _))
-        .select(col("__src_file"))
-        .distinct().collect().map(_.getString(0)).toSet
+      else touchedFiles(catalog.readVersionTagged(c, base)
+        .filter(edPreds.reduce(_ || _)))
     val kept = baseFiles.filterNot(f => touched(f.getFileName.toString))
     val rewriteParts =
       (if (touched.nonEmpty) {

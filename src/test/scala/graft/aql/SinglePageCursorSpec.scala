@@ -4,9 +4,10 @@ import graft.TestSpark
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** A result of at most one page is held by its cursor as rows once the
-  * first page is served: later pages slice the rows and start no Spark
-  * job. Larger results keep the persisted-sort path. */
+/** A result of at most ten pages (and within its cursor's share of
+  * memory_limit) is held by its cursor as rows once the first page is
+  * served: later pages slice the rows and start no Spark job. Larger
+  * results keep the persisted-sort path. */
 class SinglePageCursorSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -16,6 +17,8 @@ class SinglePageCursorSpec extends AnyFunSuite {
     e.execute("CREATE CONTAINER sp ['n','s'] [INT, TEXT]")
     import spark.implicits._
     e.catalog.overwrite("sp", (1 to 101).map(i => (i, s"row$i")).toDF("n", "s"))
+    e.execute("CREATE CONTAINER sr ['n','s'] [INT, TEXT]")
+    e.catalog.overwrite("sr", (1 to 1001).map(i => (i, s"row$i")).toDF("n", "s"))
     e
   }
 
@@ -84,14 +87,64 @@ class SinglePageCursorSpec extends AnyFunSuite {
     Seq(none, desc).foreach(c => eng.execute(s"QYCNEXT $c"))
   }
 
-  test("a 101-row result keeps its plan and persists on its first QYCNNXT") {
-    val id = open("SEARCH [] ON sp")
+  test("a 300-row result is held: firstPage serves page 0 only, paging starts " +
+      "no job and matches a plan-backed cursor") {
+    val held = open("SEARCH [] ON sr WHERE n <= 300")
+    val first = eng.firstPage(held)
+    assert(ns(first) == (1 to 100), "firstPage returns page 0, not every held row")
+    assert(eng.cursorState(held).get.analyzed.isEmpty,
+      "a result of up to ten pages holds its rows and no DataFrame")
+    assert(eng.firstPage(held) == first, "a held cursor's first page is still page 0")
+    val steps = Seq("QYCNNXT", "QYCNNXT", "QYCNPVS")
+    var heldPages: Seq[Engine.Page] = Nil
+    val jobs = jobsOf { heldPages = steps.map(s => page(s"$s $held")) }
+    assert(jobs.isEmpty, s"paging a held result started ${jobs.length} Spark job(s)")
+    // the same SEARCH paged without firstPage keeps its plan
+    val planned = open("SEARCH [] ON sr WHERE n <= 300")
+    val planPages = steps.map(s => page(s"$s $planned"))
+    assert(eng.cursorState(planned).get.analyzed.nonEmpty)
+    assert(heldPages.map(p => (p.page, ns(p.rows))) ==
+      Seq((1, 101 to 200), (2, 201 to 300), (1, 101 to 200)))
+    assert(heldPages == planPages, "held and plan-backed cursors serve the same pages")
+    assert(eng.orderedResult(held).get.collect().toSeq ==
+      eng.orderedResult(planned).get.collect().toSeq)
+    Seq(held, planned).foreach(c => eng.execute(s"QYCNEXT $c"))
+  }
+
+  test("a ten-page result over memory_limit / MaxCursors keeps its plan and " +
+      "persists on its first QYCNNXT") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-held-budget")
+    // the smallest memory_limit: 1 MiB / 256 cursors = 4 KiB of held rows
+    java.nio.file.Files.writeString(
+      dir.resolve(graft.catalog.Settings.FileName), "memory_limit: 1048576\n")
+    val small = new Engine(spark, dir.toString)
+    small.execute("CREATE CONTAINER sb ['n','s'] [INT, TEXT]")
+    import spark.implicits._
+    val rows = (1 to 300).map(i => (i, s"row$i"))
+    small.catalog.overwrite("sb", rows.toDF("n", "s"))
+    assert(org.apache.spark.util.SizeEstimator.estimate(
+      rows.map { case (n, s) => org.apache.spark.sql.Row(n, s) }) > 4096)
+    val id = small.execute("SEARCH [] ON sb").asInstanceOf[Engine.ResultSet].cursorId
+    val cur = small.cursorState(id).get
+    assert(cur.cacheCap / Engine.MaxCursors == 4096)
+    assert(ns(small.firstPage(id)) == (1 to 100))
+    assert(cur.analyzed.nonEmpty, "a result over the held-bytes budget keeps its plan")
+    assert(!cur.paged.storageLevel.useMemory, "nothing is persisted before paging")
+    val p1 = small.execute(s"QYCNNXT $id").asInstanceOf[Engine.Page]
+    assert(p1.page == 1 && ns(p1.rows) == (101 to 200))
+    assert(cur.paged.storageLevel.useMemory, "the first QYCNNXT persists the sorted result")
+    small.execute(s"QYCNEXT $id")
+    assert(cur.paged.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
+  test("a 1001-row result keeps its plan and persists on its first QYCNNXT") {
+    val id = open("SEARCH [] ON sr")
     assert(ns(eng.firstPage(id)) == (1 to 100))
     val cur = eng.cursorState(id).get
     assert(cur.analyzed.nonEmpty, "a result over one page keeps its plan")
     assert(!cur.paged.storageLevel.useMemory, "nothing is persisted before paging")
     val p1 = page(s"QYCNNXT $id")
-    assert(p1.page == 1 && ns(p1.rows) == Seq(101))
+    assert(p1.page == 1 && ns(p1.rows) == (101 to 200))
     assert(cur.paged.storageLevel.useMemory, "the first QYCNNXT persists the sorted result")
     assert(ns(page(s"QYCNPVS $id").rows) == (1 to 100))
     eng.execute(s"QYCNEXT $id")

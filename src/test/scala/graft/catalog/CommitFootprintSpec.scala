@@ -6,17 +6,18 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** What a point-insert COMMIT costs on a text+lsh indexed container:
+/** What a point-write COMMIT costs on a text+lsh indexed container:
   * one data part file per staged insert batch, one `src=` part per
-  * index, and no shuffle anywhere in the commit — maintenance follows
-  * the changed rows, not per-file or per-job fan-out. The commit's jobs
-  * are picked out by the statement's Spark job group.
+  * index, and no shuffle anywhere in an insert, edit or delete commit —
+  * maintenance and the touched-file probe follow the changed rows, not
+  * per-file or per-job fan-out. The commit's jobs are picked out by the
+  * statement's Spark job group.
   */
 class CommitFootprintSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("5 × CREATE ROW + COMMIT: one data file, one src= dir per index, " +
-      "no Exchange in any commit job") {
+  /** 40 docs in 4 part files, with a text and an lsh index on `body`. */
+  private def indexedDocs(): graft.aql.Engine = {
     val dir = java.nio.file.Files.createTempDirectory("graft-footprint")
     val eng = new graft.aql.Engine(spark, dir.toString)
     eng.execute("CREATE CONTAINER docs ['doc_id','body'] [BIGINT, TEXT]")
@@ -27,15 +28,13 @@ class CommitFootprintSpec extends AnyFunSuite {
       .repartitionByRange(4, col("doc_id")).sortWithinPartitions("doc_id"))
     eng.execute("CREATE INDEX ft ON docs ['body'] USING text")
     eng.execute("CREATE INDEX nd ON docs ['body'] USING lsh")
-    val cat = eng.catalog
-    val before = cat.currentVersion("docs")
-    val filesBefore = cat.versionFiles("docs", before).map(_.getFileName.toString).toSet
+    eng
+  }
 
-    (100 until 105).foreach { i =>
-      eng.execute(s"CREATE ROW ['doc_id','body'] [$i,'fresh words for row $i'] ON docs")
-    }
+  /** Run COMMIT docs under its own job group and return the physical
+    * plan of every SQL execution it runs. */
+  private def commitPlans(eng: graft.aql.Engine): List[String] = {
     val group = s"footprint-${System.nanoTime()}"
-    // the physical plan of every SQL execution the commit runs
     val plans = scala.collection.mutable.ArrayBuffer.empty[String]
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
@@ -51,6 +50,20 @@ class CommitFootprintSpec extends AnyFunSuite {
       finally spark.sparkContext.clearJobGroup()
       org.apache.spark.sql.graft.Bridge.flushListenerBus(spark)
     } finally spark.sparkContext.removeSparkListener(listener)
+    plans.synchronized(plans.toList)
+  }
+
+  test("5 × CREATE ROW + COMMIT: one data file, one src= dir per index, " +
+      "no Exchange in any commit job") {
+    val eng = indexedDocs()
+    val cat = eng.catalog
+    val before = cat.currentVersion("docs")
+    val filesBefore = cat.versionFiles("docs", before).map(_.getFileName.toString).toSet
+
+    (100 until 105).foreach { i =>
+      eng.execute(s"CREATE ROW ['doc_id','body'] [$i,'fresh words for row $i'] ON docs")
+    }
+    val seen = commitPlans(eng)
 
     val after = cat.currentVersion("docs")
     assert(after == before + 1)
@@ -68,12 +81,29 @@ class CommitFootprintSpec extends AnyFunSuite {
       assert(newSrc == Seq(s"src=${newFiles.head}"), s"$ix: new src= dirs $newSrc")
     }
 
-    val seen = plans.synchronized(plans.toList)
     assert(seen.nonEmpty, "the commit's queries must carry the statement's job group")
     assert(!seen.exists(_.contains("Exchange")),
       s"a commit query plans an Exchange:\n${seen.filter(_.contains("Exchange")).mkString("\n")}")
 
     assert(cat.textSearch("docs", "ft", Seq("fresh"), 10).count() == 5)
     assert(cat.read("docs").count() == 45)
+  }
+
+  test("EDIT ROW + COMMIT and DELETE ROW + COMMIT: no Exchange in any commit job") {
+    val eng = indexedDocs()
+    val cat = eng.catalog
+    for ((stmt, what) <- Seq(
+        "EDIT ROW ['body'] ['edited words'] ON docs WHERE doc_id = 7" -> "edit",
+        "DELETE ROW ON docs WHERE doc_id = 9" -> "delete")) {
+      eng.execute(stmt)
+      val seen = commitPlans(eng)
+      assert(seen.nonEmpty, s"$what: the commit's queries must carry the statement's job group")
+      assert(!seen.exists(_.contains("Exchange")),
+        s"the $what commit plans an Exchange:\n" +
+          seen.filter(_.contains("Exchange")).mkString("\n"))
+    }
+    assert(cat.read("docs").count() == 39)
+    assert(cat.read("docs").filter(col("doc_id") === 9L).isEmpty)
+    assert(cat.textSearch("docs", "ft", Seq("edited"), 10).count() == 1)
   }
 }

@@ -3,6 +3,7 @@ package graft.catalog
 import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The `value` index kind: plain value→pk secondary index over any
   * TEXT/INT/BIGINT/FLOAT column — the generalization of the reference's
@@ -339,5 +340,61 @@ class ValueIndexSpec extends AnyFunSuite {
       .asInstanceOf[graft.aql.Engine.Done].message
     assert(plan.contains("served 6 pk candidate(s)"),
       s"the probe's repeated pk must count once:\n$plan")
+  }
+
+  test("the value probe collects its candidates in one job; over index_probe_cap " +
+      "it abandons to the plain scan; both serve the plain scan's rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-vix-onejob")
+    java.nio.file.Files.writeString(
+      dir.resolve(graft.catalog.Settings.FileName), "index_probe_cap: 4\n")
+    val eng = new graft.aql.Engine(spark, dir.toString)
+    val cat = eng.catalog
+    eng.execute("CREATE CONTAINER oj ['id','grp'] [BIGINT, TEXT]")
+    import spark.implicits._
+    // 'rare' is held by one pk; each g<k> by 8, over the cap of 4
+    cat.overwrite("oj", (0L until 40L)
+      .map(i => (i, if (i == 21L) "rare" else s"g${i % 5}")).toDF("id", "grp")
+      .repartitionByRange(4, col("id")).sortWithinPartitions("id"))
+    eng.execute("CREATE INDEX og ON oj ['grp'] USING value")
+    val parts = scala.util.Using.resource(java.nio.file.Files.list(
+        cat.versionPath("oj", cat.currentVersion("oj")).resolve("_index").resolve("og"))) {
+      _.iterator().asScala.count(_.getFileName.toString.startsWith("src="))
+    }
+    assert(parts >= 4, s"the index must span several parts, has $parts")
+
+    // the Spark jobs lowering a SEARCH starts, picked out by job group
+    val group = s"vix-onejob-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val rs = try {
+      spark.sparkContext.setJobGroup(group, "lower", interruptOnCancel = false)
+      try eng.execute("SEARCH [] ON oj WHERE grp = 'rare'")
+      finally spark.sparkContext.clearJobGroup()
+    } finally {
+      org.apache.spark.sql.graft.Bridge.flushListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get == 1, s"lowering the probed SEARCH ran ${jobs.get} jobs")
+
+    def explain(aql: String) = eng.execute(s"EXPLAIN $aql")
+      .asInstanceOf[graft.aql.Engine.Done].message
+    def engineRows(id: String) = eng.orderedResult(id).get.collect().toSeq
+    def scanRows(g: String) = graft.aql.Engine.defaultOrder(
+      cat.read("oj").filter(col("grp") === g)).collect().toSeq
+    assert(explain("SEARCH [] ON oj WHERE grp = 'rare'")
+      .contains("served 1 pk candidate(s); clustered scan pruned"))
+    assert(engineRows(rs.asInstanceOf[graft.aql.Engine.ResultSet].cursorId) ==
+      scanRows("rare"))
+    val over = explain("SEARCH [] ON oj WHERE grp = 'g3'")
+    assert(over.contains("index 'og' probe on grp (1 literal key(s)) abandoned: " +
+      "over index_probe_cap 4 candidates — plain scan"), over)
+    val g3 = eng.execute("SEARCH [] ON oj WHERE grp = 'g3'")
+      .asInstanceOf[graft.aql.Engine.ResultSet].cursorId
+    assert(engineRows(g3) == scanRows("g3") && scanRows("g3").length == 8)
   }
 }

@@ -169,6 +169,45 @@ class ServerConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(code == 200 && ids(all) == (1000L until 1005L))
   }
 
+  test("a result over ten pages pages its persisted sort beside readers of held rows") {
+    val bigRows = 1200L
+    val src = java.nio.file.Files.createTempDirectory("graft-server-big").resolve("rows")
+    import spark.implicits._
+    (0L until bigRows).toDF("id").write.parquet(src.toString)
+    assert(post("CREATE CONTAINER sbig ['id'] [BIGINT]")._1 == 200)
+    assert(post(s"IMPORT '$src' INTO sbig USING parquet")._1 == 200)
+    val failures = new ConcurrentLinkedQueue[String]()
+    def expect(ok: Boolean, why: => String): Unit = if (!ok) failures.add(why)
+    /** SEARCH, QYCNNXT ×2, QYCNPVS, QYCNEXT over HTTP on a result of
+      * ids 0 until `total`: the three pages served are its first ids in
+      * order, and QYCNPVS serves page 1 again. */
+    def pageThrough(search: String, total: Long): Unit = {
+      def ok(aql: String) = {
+        val (code, body) = post(aql)
+        expect(code == 200, s"$aql -> $code $body")
+        body
+      }
+      val first = ok(search)
+      val id = first.get("cursor").asText()
+      val p1 = ok(s"QYCNNXT $id")
+      val p2 = ok(s"QYCNNXT $id")
+      val back = ok(s"QYCNPVS $id")
+      ok(s"QYCNEXT $id")
+      val pages = Seq(first, p1, p2).map(ids)
+      expect(pages.flatten == (0L until math.min(total, 300L)),
+        s"$search: pages not disjoint and ordered")
+      expect(ids(back) == pages(1), s"$search: QYCNPVS must return page 1 again")
+    }
+    def thread(body: => Unit) = new Thread(() =>
+      try body catch { case e: Throwable => failures.add(s"thread died: $e") })
+    val big = thread((0 until 3).foreach(_ => pageThrough("SEARCH [id] ON sbig", bigRows)))
+    val held = (0 until 3).map(_ => thread((0 until 3).foreach(_ =>
+      pageThrough(s"SEARCH [id] ON sc WHERE id < $BaseRows", BaseRows.toLong))))
+    (big +: held).foreach(_.start())
+    (big +: held).foreach(_.join(300000))
+    assert(failures.isEmpty, failures.asScala.mkString("\n"))
+  }
+
   test("while a reader holds the shared side, a SEARCH completes and a COMMIT waits") {
     val lock = server.statementLock
     lock.readLock.lock()
