@@ -618,33 +618,18 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
 
     case dd: Ast.DedupAgainst =>
       // the cross-container decision APPLIED: remove from c1 every doc
-      // with a verified near-dup in c2 (c2 untouched), one atomic
-      // version through the set-oriented COW delete. SHOW DEDUP …
+      // with a verified near-dup in c2 (c2 untouched). SHOW DEDUP …
       // AGAINST with the same knobs is the dry run — SAME funnel.
-      catalog.get(dd.container)
-      catalog.requireVersioned(dd.container, "DEDUP")
-      if (tx.hasStaged(dd.container))
-        throw new IllegalArgumentException(
-          s"DEDUP on '${dd.container}' with staged ops — COMMIT or " +
-            "ROLLBACK first")
-      val f = crossDedupFunnel(dd.container, dd.against, dd.ix,
-        dd.threshold, "DEDUP", probeOpt = dd.probe,
-        atVersion = dd.atVersion, window = dd.window)
-      val losers = f.scored.select(col("id_a").as("doc_id")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val nLosers = losers.count()
-        if (nLosers == 0)
-          Done(s"dedup ${dd.container} against ${dd.against}: no verified " +
-            f"cross-match at threshold ${f.thr}%.6f — nothing removed")
-        else if (tx.deleteRows(dd.container, losers))
-          Done(s"deduped ${dd.container} against ${dd.against}: removed " +
-            f"$nLosers doc(s) with verified matches at threshold " +
-            f"${f.thr}%.6f (version ${catalog.currentVersion(dd.container)})")
-        else // a concurrent commit removed every loser first — honest no-op
-          Done(s"dedup ${dd.container} against ${dd.against}: the $nLosers " +
-            "matching doc(s) were already absent — nothing removed")
-      } finally losers.unpersist(blocking = false)
+      removeRows(dd.container, "DEDUP") {
+        val f = nearDupFunnel(dd.container, Some(dd.against), dd.ix,
+          dd.threshold, "DEDUP", probeOpt = dd.probe,
+          atVersion = dd.atVersion, window = dd.window)
+        Removal(f.scored.select(col("id_a").as("doc_id")).distinct(),
+          s"dedup ${dd.container} against ${dd.against}",
+          f"no verified cross-match at threshold ${f.thr}%.6f",
+          n => s"deduped ${dd.container} against ${dd.against}: removed " +
+            f"$n doc(s) with verified matches at threshold ${f.thr}%.6f")
+      }
 
     case sd: Ast.ShowDecontaminate =>
       val (df, defaultSort) = showDecontaminateDf(sd)
@@ -652,83 +637,41 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
 
     case dc: Ast.Decontaminate =>
       // the decontamination decision APPLIED: remove every doc of the
-      // corpus whose distinct-4-gram overlap with the eval container
-      // reaches the threshold, in ONE atomic version through the
-      // set-oriented COW delete. SHOW DECONTAMINATE with the same knobs
-      // is the dry run — the SAME funnel derivation, so report and
-      // removal can never disagree. Docs too short to produce a 4-gram
-      // are outside the measure's reach and never removed.
-      catalog.get(dc.container)
-      catalog.requireVersioned(dc.container, "DECONTAMINATE")
-      if (tx.hasStaged(dc.container))
-        throw new IllegalArgumentException(
-          s"DECONTAMINATE on '${dc.container}' with staged ops — COMMIT " +
-            "or ROLLBACK first")
-      val f = decontFunnel(dc.container, dc.against, dc.column, dc.threshold,
-        dc.grams, dc.spans, dc.analyzer, dc.atVersion, dc.window)
-      // persist the decision: the count below AND deleteRows' touched-
-      // file discovery + rewrites all read the loser set — without this
-      // each action would recompute the whole gram funnel over the corpus
-      val losers = f.contamination.filter(f.removePred)
-        .select(col("doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val nLosers = losers.count()
-        if (nLosers == 0)
-          Done(s"decontaminate ${dc.container}: no document meets " +
-            s"${f.ruleDesc} against '${dc.against}' — nothing removed")
-        else if (tx.deleteRows(dc.container, losers))
-          Done(s"decontaminated ${dc.container}: removed $nLosers " +
-            s"document(s) at ${f.ruleDesc} against '${dc.against}' " +
-            s"(version ${catalog.currentVersion(dc.container)})")
-        else // a concurrent commit removed every loser first — honest no-op
-          Done(s"decontaminate ${dc.container}: the $nLosers contaminated " +
-            "document(s) were already absent — nothing removed")
-      } finally losers.unpersist(blocking = false)
+      // corpus whose distinct-n-gram overlap with the eval container
+      // meets the rule. SHOW DECONTAMINATE with the same knobs is the dry
+      // run — the SAME funnel. Docs too short to produce an n-gram are
+      // outside the measure's reach and never removed.
+      removeRows(dc.container, "DECONTAMINATE") {
+        val f = decontFunnel(dc.container, dc.against, dc.column,
+          dc.threshold, dc.grams, dc.spans, dc.analyzer, dc.atVersion,
+          dc.window)
+        Removal(f.contamination.filter(f.removePred).select(col("doc_id")),
+          s"decontaminate ${dc.container}",
+          s"no document meets ${f.ruleDesc} against '${dc.against}'",
+          n => s"decontaminated ${dc.container}: removed $n document(s) " +
+            s"at ${f.ruleDesc} against '${dc.against}'")
+      }
 
     case dd: Ast.DedupContainer =>
       // the funnel's decision APPLIED: keep one doc per verified
       // near-dup cluster (longest indexed text, ties to the lowest pk —
-      // the dd_cluster_keepers policy), remove the rest in ONE atomic
-      // version via the set-oriented COW delete. SHOW DEDUP with the
-      // same knobs is the dry run: the cluster derivation is the SAME
-      // bandFunnel, so report and removal can never disagree. Docs too
-      // short to band (no shingles) are outside the index's reach and
-      // never removed — the statement's scope is the index's scope.
-      requireNotView(dd.container, "its content")
-      // refuse staged ops AND unversioned external data UPFRONT (before
-      // any funnel work) — the deleteRows guards would only fire when
-      // clusters exist, and a statement whose refusal depends on the
-      // data is a trap (a v0 external corpus would otherwise report a
-      // clean "nothing removed" because its index reads empty)
-      catalog.get(dd.container)
-      catalog.requireVersioned(dd.container, "DEDUP")
-      if (tx.hasStaged(dd.container))
-        throw new IllegalArgumentException(
-          s"DEDUP on '${dd.container}' with staged ops — COMMIT or " +
-            "ROLLBACK first")
-      val f0 = bandFunnel(dd.container, dd.ix, dd.threshold, None, "DEDUP")
-      // materialize the id-only candidate pairs once (round 17): the
-      // verify stage references pairs three times (pair join + both
-      // candidate-id semi-joins) and DEDUP is eager anyway — see
-      // showDedupDf for the full rationale
-      val (f, _) = materializedFunnel(f0)
-      val (comp, ranked) = clusterRanking(f)
-      val stats = comp.agg(count(lit(1)), countDistinct(col("l"))).head()
-      val members = stats.getLong(0)
-      val clusters = stats.getLong(1)
-      if (members == 0)
-        Done(s"dedup ${dd.container}: no verified near-dup clusters — " +
-          "nothing removed")
-      else {
-        val losers = ranked.filter(col("_dd_rn") > 1).select(col("v"))
-        if (tx.deleteRows(dd.container, losers))
-          Done(s"deduped ${dd.container}: removed ${members - clusters} " +
-            s"near-dup doc(s) across $clusters cluster(s), keeper = longest " +
-            s"${f.idef.column} (version ${catalog.currentVersion(dd.container)})")
-        else // a concurrent commit removed every loser first — honest no-op
-          Done(s"dedup ${dd.container}: the ${members - clusters} loser " +
-            "doc(s) were already absent — nothing removed")
+      // the dd_cluster_keepers policy), remove the rest. SHOW DEDUP with
+      // the same knobs is the dry run: the cluster derivation is the SAME
+      // funnel. Docs too short to band (no shingles) are outside the
+      // index's reach and never removed.
+      removeRows(dd.container, "DEDUP") {
+        // materialize the id-only candidate pairs once: the verify reads
+        // them twice (pair join + candidate ids) and DEDUP is eager
+        // anyway — see showDedupDf
+        val (f, _) = materializedFunnel(nearDupFunnel(dd.container, None,
+          dd.ix, dd.threshold, "DEDUP"))
+        val (comp, ranked) = clusterRanking(f)
+        Removal(ranked.filter(col("_dd_rn") > 1).select(col("v")),
+          s"dedup ${dd.container}", "no verified near-dup clusters",
+          // each cluster keeps one doc: n = members − clusters
+          n => s"deduped ${dd.container}: removed $n near-dup doc(s) " +
+            s"across ${comp.agg(countDistinct(col("l"))).head().getLong(0)} " +
+            s"cluster(s), keeper = longest ${f.idef.column}")
       }
 
     case Ast.Export(c, path, fmt, atVersion) =>
@@ -2074,11 +2017,8 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     // committed snapshot the index covers (a pushed-filter scan)
     val docKeep = m.where.map { w =>
       val d = catalog.get(m.container)
-      val snap = m.atVersion match {
-        case Some(v) => catalog.readVersion(m.container, v)
-        case None => catalog.read(m.container)
-      }
-      snap.filter(lowerWhere(w, d)).select(col(d.primaryKey).as("doc_id"))
+      committed(m.container, m.atVersion).filter(lowerWhere(w, d))
+        .select(col(d.primaryKey).as("doc_id"))
     }
     if (m.phrase)
       graft.catalog.Index.phraseLookup(catalog, m.container, idef, m.terms,
@@ -2139,10 +2079,7 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
       sm.atVersion.orElse(Some(catalog.currentVersion(sm.container)).filter(_ > 0))
     // the committed snapshot every stage reads (candidates' payloads,
     // the WHERE predicate, the pk probe row) — ONE pinned version
-    val snapshot = pinnedAt match {
-      case Some(v) => catalog.readVersion(sm.container, v)
-      case None => catalog.read(sm.container)
-    }
+    val snapshot = committed(sm.container, pinnedAt)
     // WHERE pred (round 14 — filtered ANN): lowered over the container
     // schema exactly like a SEARCH predicate, applied BEFORE the LIMIT
     val pred: Option[Column] = sm.where.map(w => lowerWhere(w, d))
@@ -2294,9 +2231,9 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
             .filter(col("cand_emb").isNotNull)
             .crossJoin(broadcast(qemb))
             .select(col("cand"), col("cand_emb"),
-              round(graft.functions.CosineSimilarity.cosineSim(
+              graft.operators.TextDedup.exactScore("ivf",
                 graft.functions.Float32Unpack.float32Unpack(col("cand_emb")),
-                col("_sim_qemb")), 6).as("score"))
+                col("_sim_qemb")).as("score"))
             .filter(col("score").isNotNull)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         }
@@ -2386,9 +2323,8 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     // semantics the unscored form has.
     def rerank(cands: DataFrame, qemb: DataFrame,
         snapshot: => DataFrame): DataFrame = {
-      def score(embArr: Column): Column =
-        round(graft.functions.CosineSimilarity.cosineSim(
-          embArr, col("_sim_qemb")), 6).as("score")
+      def score(embArr: Column): Column = graft.operators.TextDedup
+        .exactScore("ivf", embArr, col("_sim_qemb")).as("score")
       def unpack(c: Column): Column =
         graft.functions.Float32Unpack.float32Unpack(c)
       // INT8 lists (round 14): rank candidates APPROXIMATELY on the
@@ -2476,10 +2412,7 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
           throw new ParseException(
             s"SIMILAR by literal vector serves from an ivf index; " +
               s"'${idef.ix}' is a ${idef.kind} index over text")
-        sm.atVersion.foreach(v =>
-          if (!catalog.versions(sm.container).contains(v))
-            throw new ParseException(
-              s"No committed version $v on '${sm.container}'"))
+        requireCommittedVersion(sm.container, sm.atVersion)
         // cell ordering from the frozen centroid metadata — driver-side,
         // zero jobs; no self-exclusion (the query is not a corpus row)
         val vCells = catalog.ivfProbeCellsVector(sm.container, idef.ix,
@@ -2607,13 +2540,15 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     * layout; past the cap the fetch degrades to a shuffle-hash
     * candidate join (one corpus scan, never a collect of unbounded
     * data). Scoring then crossJoins the ONE broadcast probe
-    * row — identical derivations to the fixture lane (`withShingles` /
-    * `withSimhash`), so the scores match the DuckDB oracle recomputation
-    * bit-for-bit under round(6). */
+    * row — identical derivations to the fixture lane
+    * (`TextDedup.exactDerive`), so the scores match the DuckDB oracle
+    * recomputation bit-for-bit under round(6). */
   private def bandRerank(sm: Ast.Similar, idef: graft.catalog.Index.Def,
       pkName: String, snapshot: DataFrame, probe: DataFrame,
       cands: DataFrame): DataFrame = {
-    import graft.operators.TextDedup.{withShingles, withSimhash}
+    if (idef.kind != "lsh" && idef.kind != "simhash") throw new ParseException(
+      s"SIMILAR SCORED serves from an ivf/lsh/simhash index; " +
+        s"'${idef.ix}' is a ${idef.kind} index")
     val fetched = boundedIds(cands.select(col("cand")), IndexProbeCap) match {
       case Some(ids) =>
         note(s"similar scored (${idef.kind}): ${ids.length} candidate " +
@@ -2638,40 +2573,19 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     val candRows = fetched
       .groupBy(col(pkName))
       .agg(min(col(idef.column)).as(idef.column))
-    val scored = idef.kind match {
-      case "lsh" =>
-        // exact 3-gram Jaccard (TextDedup.jaccardSim — the ONE verify
-        // measure shared with SHOW DEDUP and the fixture lane). A
-        // candidate exists only if BOTH docs produced band keys, i.e.
-        // both have ≥1 shingle, so the union is never empty.
-        val candSg = withShingles(candRows
-            .select(col(pkName), col(idef.column).as("text")), idef.analyzer)
-          .select(col(pkName), col("sg"))
-        val qSg = withShingles(
-            probe.select(col(idef.column).as("text")), idef.analyzer)
-          .select(col("sg").as("_sim_qsg"))
-        candSg.crossJoin(broadcast(qSg))
-          .select(col(pkName),
-            graft.operators.TextDedup.jaccardSim(col("sg"), col("_sim_qsg"))
-              .as("score"))
-      case "simhash" =>
-        // (32 − hamming)/32 signature similarity (TextDedup.simhashSim —
-        // the ONE verify measure shared with SHOW DEDUP)
-        val candSh = withSimhash(candRows
-          .select(col(pkName), col(idef.column).as("text")), Seq(pkName),
-          idef.analyzer)
-        val qSh = withSimhash(probe
-            .select(lit(1).as("_q"), col(idef.column).as("text")), Seq("_q"),
-            idef.analyzer)
-          .select(col("simhash").as("_sim_qsh"))
-        candSh.crossJoin(broadcast(qSh))
-          .select(col(pkName),
-            graft.operators.TextDedup.simhashSim(col("simhash"), col("_sim_qsh"))
-              .as("score"))
-      case other => throw new ParseException(
-        s"SIMILAR SCORED serves from an ivf/lsh/simhash index; " +
-          s"'${idef.ix}' is a $other index")
-    }
+    // the index kind's ONE exact measure (TextDedup.exactDerive /
+    // exactScore, shared with SHOW DEDUP and the fixture lane). A band
+    // candidate exists only if BOTH docs produced band keys, so an lsh
+    // union is never empty.
+    import graft.operators.TextDedup.{exactCol, exactDerive, exactScore}
+    val m = exactCol(idef.kind)
+    val cand = exactDerive(candRows.select(col(pkName).as("doc_id"),
+      col(idef.column).as("text")), idef.kind, idef.analyzer)
+    val q = exactDerive(probe.select(lit(1).as("doc_id"),
+        col(idef.column).as("text")), idef.kind, idef.analyzer)
+      .select(col(m).as("_sim_q"))
+    val scored = cand.crossJoin(broadcast(q)).select(col("doc_id").as(pkName),
+      exactScore(idef.kind, col(m), col("_sim_q")).as("score"))
     scored.filter(col("score").isNotNull)
       .orderBy(col("score").desc, col(pkName)).limit(sm.limit)
   }
@@ -2729,51 +2643,74 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
       .orderBy(col("rrf").desc, col(pkName)).limit(f.limit)
   }
 
-  /** SHOW DEDUP lowering (round 13): the dedup funnel report served from
-    * a persisted band index — the AQL surface of the `dd_dedup_report`
-    * lane, so an AQL-only client with an lsh/simhash index gets the
-    * exact-groups → band-candidates → verified-pairs → clusters summary
-    * in one statement. Candidate pairs come from the commit-maintained
-    * index's band table (a band-bucket equi-self-join, pinned
-    * shuffle-hash like the fixture lane — NEVER all-pairs; the exchange
-    * carries (band, bk, id), not text). Verification recomputes the
-    * exact measure the band family approximates over the CANDIDATE pairs
-    * only (3-gram Jaccard for lsh, `(32−hamming)/32` signature
-    * similarity for simhash); clusters are pointer-jumping connected
-    * components over the verified graph (O(log diameter) rounds). Every
-    * stage is the already-oracle-pinned pipeline; this statement pins
-    * their composition against the index-served candidates. */
-  /** The SHOW DEDUP / DEDUP shared machinery: band-index resolution,
-    * the verify threshold, index-served candidate pairs, the covered
-    * snapshot, and the exact-measure-verified pair graph — ONE
-    * derivation, so the report and the applied removal can never
-    * disagree about what a near-dup is. */
-  /** `verifiedOf` rebuilds the exact-measure verify stage over ANY pairs
-    * frame with the same (id_a, id_b) schema — so an eager consumer can
-    * `localCheckpoint` the id-only pairs once and have the verify (and
-    * every other dimension) read the materialized pairs instead of
-    * re-running the band self-join per consumer (round 17). `verified`
-    * keeps the lazy composition for EXPLAIN (plan-only).
+  /** One near-dup funnel: probe docs × a reference container's committed
+    * lsh/simhash/ivf index → id-only candidate `pairs` (id_a probed,
+    * id_b reference) → the index kind's exact measure over the candidate
+    * pairs only ([[graft.operators.TextDedup.exactScores]]). SHOW DEDUP,
+    * DEDUP, SHOW DEDUP … AGAINST, DEDUP … AGAINST and SIMILAR … AGAINST
+    * all read this one value, so report, removal and k-NN join can never
+    * disagree about what a near-dup is.
     *
-    * `candIds` (second argument) is an optional PRE-SHAPED candidate-id
-    * frame (one `doc_id` column) the verify's semi-joins use instead of
-    * deriving the id set from the pairs frame: an eager consumer that
-    * has already collected the bounded pairs hands in a broadcast LOCAL
-    * relation — a driver-side join-strategy choice with EXACT
-    * cardinality (the AQE idea, decided from the materialized pairs
-    * count instead of size estimates), under which the snapshot is
-    * filtered IN PLACE (scan → hash-probe → derive survivors) with no
-    * exchange of corpus payloads at all. Catalyst cannot make this call
-    * itself here: checkpointed pairs carry no size statistics, so its
-    * estimate-driven planner picks a full sort-merge semi-join of the
-    * corpus — measured +0.9 s on the sf0.1 SHOW DEDUP lane. None (the
-    * EXPLAIN path and the above-cap fallback) derives the ids from the
-    * pairs frame unhinted — the shuffled scale shape. */
-  private case class BandFunnel(idef: graft.catalog.Index.Def, thr: Double,
-      pairs: DataFrame, docsDf: DataFrame,
-      verifiedOf: (DataFrame, Option[DataFrame]) => DataFrame,
+    * `reference` None is the within-container funnel: the reference IS
+    * the probed snapshot, pairs carry id_a < id_b, and the verify derives
+    * once over the union of the pair ids. `probed` is the population the
+    * SHOW summaries' n_docs counts: the container, or with `FROM VERSION
+    * a TO b` the window's arrivals, so matched_docs/n_docs reads as a
+    * rate, never a corpus-diluted one.
+    *
+    * `candIds` is an optional PRE-SHAPED candidate-id frame (one `doc_id`
+    * column) the verify's semi-joins use instead of deriving the ids from
+    * the pairs: [[materializedFunnel]] hands in a broadcast LOCAL
+    * relation built from the collected pairs — a join-strategy choice
+    * with EXACT cardinality, under which the snapshot is filtered in
+    * place with no exchange of corpus payloads. Catalyst cannot make this
+    * call itself: checkpointed pairs carry no size statistics, so it
+    * plans a full sort-merge semi-join of the corpus (measured +0.9 s on
+    * the sf0.1 SHOW DEDUP lane). */
+  private case class Funnel(idef: graft.catalog.Index.Def, thr: Double,
+      pairs: DataFrame, probed: DataFrame, reference: Option[DataFrame],
       candIds: Option[DataFrame] = None) {
-    lazy val verified: DataFrame = verifiedOf(pairs, candIds)
+    /** (id_a, id_b, score) for every verified pair. */
+    lazy val scored: DataFrame = graft.operators.TextDedup.exactScores(
+        pairs, probed, reference, idef.kind, idef.analyzer, candIds)
+      .filter(col("score") >= thr)
+    def verified: DataFrame = scored.select(col("id_a"), col("id_b"))
+  }
+
+  /** A removal decision: the loser rows (first column = the pk) and how
+    * the statement reports each outcome — `scope` names it, `nothing`
+    * says why no doc qualifies, `removed(n)` reports a published delete. */
+  private case class Removal(losers: DataFrame, scope: String,
+      nothing: String, removed: Long => String)
+
+  /** The one removal path of DEDUP, DEDUP … AGAINST and DECONTAMINATE.
+    * The guards run UPFRONT, before any funnel work: a refusal must not
+    * depend on the data (an unversioned external corpus would otherwise
+    * report a clean "nothing removed" because its index reads empty).
+    * The loser set is persisted across its count and the set-oriented
+    * COW delete (`tx.deleteRows`, one atomic version), so the funnel runs
+    * once. */
+  private def removeRows(container: String, what: String)(
+      decide: => Removal): Result = {
+    requireNotView(container, "its content")
+    catalog.get(container)
+    catalog.requireVersioned(container, what)
+    if (tx.hasStaged(container))
+      throw new IllegalArgumentException(
+        s"$what on '$container' with staged ops — COMMIT or ROLLBACK first")
+    val r = decide
+    val losers = r.losers
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val n = losers.count()
+      Done(
+        if (n == 0) s"${r.scope}: ${r.nothing} — nothing removed"
+        else if (tx.deleteRows(container, losers))
+          s"${r.removed(n)} (version ${catalog.currentVersion(container)})"
+        // a concurrent commit removed every loser first — honest no-op
+        else s"${r.scope}: the $n loser doc(s) were already absent — " +
+          "nothing removed")
+    } finally losers.unpersist(blocking = false)
   }
 
   /** Pair-count bound under which the funnel's id-only pair set counts
@@ -2790,16 +2727,21 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     * ≤ |pairs| rows by construction since verified ⊆ candidates). */
   private def DriverFunnelPairCap = settings.funnelPairCap
 
-  /** Materialize a funnel's id-only candidate pairs (one localCheckpoint
-    * job — execution of every caller is already eager) and, under
+  /** Materialize a within-container funnel's id-only candidate pairs
+    * (one localCheckpoint job — every caller is already eager: the
+    * cluster stage is a checkpoint-per-round driver loop) and, under
     * [[DriverFunnelPairCap]], collect them (bounded by an explicit
     * `limit(cap + 1)`): returns the funnel re-based on the checkpoint —
-    * with a BROADCAST LOCAL candidate-id relation when under cap, so the
-    * verify filters the snapshot in place — plus the collected pairs for
-    * driver-side dimension computation. Above the cap both options stay
-    * None/distributed (the 100 TB shape). */
-  private def materializedFunnel(f: BandFunnel)
-      : (BandFunnel, Option[Array[org.apache.spark.sql.Row]]) = {
+    * with a BROADCAST LOCAL candidate-id relation when under cap — plus
+    * the collected pairs for driver-side dimension computation. Above
+    * the cap both stay None/distributed (the 100 TB shape). The cross
+    * funnel is never materialized: a round-17 A/B measured it slower
+    * (SIMILAR AGAINST lsh 0.43→0.64 s, ivf 0.42→0.82 s at sf0.1), since
+    * every AGAINST statement is one served plan whose pairs consumers
+    * already share the banding and index-join exchanges via
+    * ReusedExchange. */
+  private def materializedFunnel(f: Funnel)
+      : (Funnel, Option[Array[org.apache.spark.sql.Row]]) = {
     val ck = f.pairs.localCheckpoint(true)
     val sample = ck.limit(DriverFunnelPairCap + 1).collect()
     if (sample.length > DriverFunnelPairCap) (f.copy(pairs = ck), None)
@@ -2815,420 +2757,197 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     }
   }
 
-  private def bandFunnel(container: String, ixOpt: Option[String],
+  /** `c`'s committed rows, at version `at` when given. */
+  private def committed(c: String, at: Option[Int]): DataFrame =
+    at.fold(catalog.read(c))(catalog.readVersion(c, _))
+
+  /** AT VERSION must name a committed version of `c`. */
+  private def requireCommittedVersion(c: String, at: Option[Int]): Unit =
+    at.foreach(v => if (!catalog.versions(c).contains(v))
+      throw new ParseException(s"No committed version $v on '$c'"))
+
+  /** `docs` (doc_id, text) of `c` restricted to the rows `c` gained in
+    * the committed window `FROM VERSION a TO b` — the CHANGES feed's
+    * inserts + update posts, semi-joined in before any derivation, so
+    * the cost downstream scales with the window's arrivals, not the
+    * corpus. The batch catch-up twin of the streaming ingest gates:
+    * payloads are the CURRENT tip's (a row edited after the window gates
+    * on its current content), and pre-window rows are never touched. */
+  private def gainedIn(c: String, docs: DataFrame,
+      window: Option[(Int, Int)], what: String): DataFrame = window match {
+    case None => docs
+    case Some((a, b)) =>
+      val gained = catalog.changes(c, a, Some(b))
+        .filter(col("_change_type").isin("insert", "update_postimage"))
+        .select(col(catalog.get(c).primaryKey).as("doc_id")).distinct()
+      note(s"$what: FROM VERSION $a TO $b — only rows '$c' gained in the " +
+        "window (CHANGES inserts + update posts) are probed; pre-window " +
+        "rows are never touched (the batch catch-up twin of the streaming " +
+        "gates)")
+      docs.join(gained, Seq("doc_id"), "left_semi")
+  }
+
+  /** The reference index of a near-dup statement on `c` and its verify
+    * threshold: the named (or the only) lsh/simhash/ivf index, after the
+    * AT VERSION check. The threshold is the statement's, else the kind's
+    * default on its exact measure: lsh Jaccard 0.2 (the curation lane's),
+    * simhash 29/32 (Hamming ≤ 3, the pigeonhole recall bound of the
+    * 4-band layout), ivf cosine 0.99 (the ANN ingest gate's). */
+  private def nearDupIndex(c: String, ixOpt: Option[String],
       thrOpt: Option[Double], atVersion: Option[Int],
-      what: String): BandFunnel = {
-    requireNotView(container, "a band index")
-    val d = catalog.get(container)
-    val pk = d.primaryKey
-    val defs = catalog.indexDefs(container)
+      what: String): (graft.catalog.Index.Def, Double) = {
+    requireCommittedVersion(c, atVersion)
+    val defs = catalog.indexDefs(c)
       .filter(x => x.kind == "lsh" || x.kind == "simhash" || x.kind == "ivf")
     val idef = ixOpt match {
       case Some(n) => defs.find(_.ix == n).getOrElse(throw new ParseException(
-        s"No lsh/simhash/ivf index '$n' on '$container'"))
+        s"No lsh/simhash/ivf index '$n' on '$c'"))
       case None => defs match {
         case Seq(one) => one
         case Seq() => throw new ParseException(
-          s"$what needs an lsh, simhash, or ivf index on '$container' " +
+          s"$what needs an lsh, simhash, or ivf index on '$c' " +
             "(CREATE INDEX … USING lsh|simhash|ivf)")
         case many => throw new ParseException(
-          s"'$container' has ${many.size} candidate indexes " +
+          s"'$c' has ${many.size} candidate indexes " +
             s"(${many.map(_.ix).mkString(", ")}) — pick one with USING")
       }
     }
-    // verify threshold: the exact measure ≥ t. lsh defaults to the
-    // curation lane's Jaccard 0.2; simhash to 29/32 (Hamming ≤ 3, the
-    // pigeonhole recall bound of the 4-band index layout); ivf to
-    // cosine 0.99 (the ANN ingest gate's near-dup default)
-    val thr = thrOpt.getOrElse(idef.kind match {
+    (idef, thrOpt.getOrElse(idef.kind match {
       case "lsh" => 0.2
       case "simhash" => 29.0 / 32.0
       case _ => 0.99
-    })
-    // AT VERSION: every version owns its index parts, so the funnel
-    // time-travels like any lookup — index rows AND the verify snapshot
-    // both read the requested committed version
-    atVersion.foreach(v =>
-      if (!catalog.versions(container).contains(v))
-        throw new ParseException(s"No committed version $v on '$container'"))
-    // bucket candidate pairs, deduplicated — the fixture lane's pinned
-    // shuffle-hash shape (TextDedup.lshPairs / sim_cell_neardup_pairs):
-    // identical subtrees collapse to ONE ReusedExchange, and at corpus
-    // scale the estimates rule out broadcast anyway. Band kinds bucket
-    // on (band, bk); ivf on the cell id — never all-pairs either way.
-    val ixRead = graft.catalog.Index.read(catalog, container, idef, atVersion)
-    val ix =
-      if (idef.kind == "ivf") ixRead.select(col("id"), col("cluster"))
-      else ixRead.select(col("id"), col("band"), col("bk"))
-    val a = ix.as("a")
-    val b = ix.as("b")
-    val pairCond =
-      if (idef.kind == "ivf")
-        col("a.cluster") === col("b.cluster") && col("a.id") < col("b.id")
-      else col("a.band") === col("b.band") && col("a.bk") === col("b.bk") &&
-        col("a.id") < col("b.id")
-    val pairs = a.hint("shuffle_hash").join(b, pairCond)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    // the snapshot the index covers (the requested committed version —
-    // a staged, uncommitted row has no index rows yet, like SIMILAR).
-    // `text` is the indexed payload: TEXT for band kinds, packed-float32
-    // BYTES for ivf — md5/length work on both.
-    val docsDf = (atVersion match {
-      case Some(v) => catalog.readVersion(container, v)
-      case None => catalog.read(container)
-    }).select(col(pk).as("doc_id"), col(idef.column).as("text"))
-    // exact-measure verification over the CANDIDATE pairs only — the
-    // corpus join fetches just the pair ids' payload; each measure has
-    // ONE definition (TextDedup for the band kinds, the codegen'd cosine
-    // for ivf — the same expression SCORED and the ANN gate verify with).
-    // Round 17 (guide §2.3 — don't compute what you throw away): the
-    // band kinds SEMI-JOIN the snapshot to the candidate ids BEFORE the
-    // shingle/simhash derivation, so exact-measure compute is
-    // ∝ candidates, never corpus — the round-16 crossDedupFunnel stance,
-    // now shared by the within-container funnel (before, both verify
-    // sides shingled the FULL corpus: at sf0.1 that was 2× ~20k-doc
-    // tokenize+3-gram passes per statement; at 100 TB it would be the
-    // whole corpus derived twice per SHOW DEDUP). ivf payloads join raw
-    // (no derivation to prune — the join itself is the pruning).
-    val verifiedOf: (DataFrame, Option[DataFrame]) => DataFrame = { (prs, cids) =>
-      // above-cap / EXPLAIN candidate-id fallback (round 18, r17 judge
-      // #2 — the bandExactScores canonicalization, adapted to the
-      // within-container funnel where ONE union id set serves both
-      // verify sides): the id set derives from the pairs frame with
-      // BOTH columns kept in the subtree (explode of the id pair —
-      // column pruning can never reshape the embedded pairs exchanges,
-      // so they stay canonically equal to the verify's own pairs spine
-      // and ReusedExchange serves every copy), and the semi-joins pin
-      // SHUFFLE-HASH with this ids-only frame as the build side (guide
-      // §3.1): ids are 8-bytes-a-row at any collision cardinality,
-      // while the default sort-merge paid a full sort of the
-      // corpus-side payloads (measured +0.9 s at sf0.1 in r17 when the
-      // under-cap path lost its broadcast hint).
-      lazy val candIds = cids.getOrElse(prs
-        .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
-        .distinct().hint("shuffle_hash"))
-      idef.kind match {
-        case "lsh" =>
-          import graft.operators.TextDedup.{jaccardSim, withShingles}
-          // shingles under the INDEX's analyzer — verify must measure the
-          // same token stream the bands were derived from
-          val sh = withShingles(
-              docsDf.join(candIds, Seq("doc_id"), "left_semi"), idef.analyzer)
-            .select(col("doc_id"), col("sg"))
-          prs
-            .join(sh.select(col("doc_id").as("id_a"), col("sg").as("sg_a")), Seq("id_a"))
-            .join(sh.select(col("doc_id").as("id_b"), col("sg").as("sg_b")), Seq("id_b"))
-            .filter(jaccardSim(col("sg_a"), col("sg_b")) >= thr)
-            .select(col("id_a"), col("id_b"))
-        case "simhash" =>
-          import graft.operators.TextDedup.{simhashSim, withSimhash}
-          val sh = withSimhash(
-              docsDf.join(candIds, Seq("doc_id"), "left_semi"),
-              Seq("doc_id"), idef.analyzer)
-            .select(col("doc_id"), col("simhash"))
-          prs
-            .join(sh.select(col("doc_id").as("id_a"), col("simhash").as("sh_a")), Seq("id_a"))
-            .join(sh.select(col("doc_id").as("id_b"), col("simhash").as("sh_b")), Seq("id_b"))
-            .filter(simhashSim(col("sh_a"), col("sh_b")) >= thr)
-            .select(col("id_a"), col("id_b"))
-        case _ =>
-          // exact cosine over the snapshot payloads (a NULL cosine — zero
-          // norm or undecodable payload — verifies nothing, like the
-          // gate). Round 18 (guide §1.2 — don't recompute per pair what
-          // is per-doc): payloads UNPACK ONCE PER SNAPSHOT ROW, below
-          // the pair joins — a vector in a c-candidate cell is a member
-          // of O(c) pairs, and the former per-pair unpack decoded it
-          // once per pair on both sides. Same expression, same numbers;
-          // only the evaluation point moves.
-          import graft.functions.CosineSimilarity.cosineSim
-          import graft.functions.Float32Unpack.float32Unpack
-          val unpacked = docsDf.select(col("doc_id"),
-            float32Unpack(col("text")).as("arr"))
-          prs
-            .join(unpacked.select(col("doc_id").as("id_a"), col("arr").as("arr_a")), Seq("id_a"))
-            .join(unpacked.select(col("doc_id").as("id_b"), col("arr").as("arr_b")), Seq("id_b"))
-            .filter(cosineSim(col("arr_a"), col("arr_b")) >= thr)
-            .select(col("id_a"), col("id_b"))
-      }
-    }
-    BandFunnel(idef, thr, pairs, docsDf, verifiedOf)
+    }))
   }
 
-  /** The SHOW DEDUP … AGAINST / DEDUP … AGAINST shared machinery (round
-    * 15): cross-container near-dup via c2's committed band index.
-    * `scored` = (id_a ∈ c1, id_b ∈ c2, score) for every VERIFIED pair —
-    * the exact measure the band family approximates (3-gram Jaccard for
-    * lsh, (32−hamming)/32 for simhash), each with its ONE shared
-    * definition (TextDedup), so the cross funnel, the within-container
-    * funnel and SIMILAR … SCORED can never disagree on what similar is.
+  /** Build the [[Funnel]] of `container` — within itself (`against`
+    * None) or against another container's committed index.
     *
-    * Scale shape: c1's rows band through the SAME derivation c2's index
-    * was built with (a stateless projection — minhash/simhash are
-    * row-local), and the (band, bk) equi-join against the index rows is
-    * ONE pinned shuffle-hash exchange carrying (id, band, bk) — never
-    * text, never a driver-side key collect (the set-oriented form of the
-    * round-14 literal-document probe, which collects keys ONLY because a
-    * single probe's bands are bounded metadata). Verification both JOINS
-    * and COMPUTES over the candidate pair ids only — each side semi-joins
-    * to the candidate id set before any shingle/simhash/payload
-    * derivation runs (round 16). The pairs subtree fans out to several
-    * consumers per statement (candidate counts, the verify stage, the
-    * per-probe top-k), all inside ONE served plan — Spark's exchange
-    * reuse hands every second consumer the first's shuffle output, so
-    * the banding derivation and the index join execute once per
-    * statement, never once per consumer (round 17, spec-pinned:
-    * CrossDedupSpec asserts the ReusedExchange nodes over the
-    * (id, band, bk) exchanges). Ids are never compared
-    * across containers — a c1 doc verbatim-equal to a c2 doc is a match
-    * at score 1, the cross-source curation semantics. */
-  /** `probed` = the funnel's c1 side — the whole container, or with
-    * `FROM VERSION a TO b` the window's arrivals. The SHOW summary's
-    * n_docs counts THIS population (round 17, code review): a windowed
-    * report's counts all share one scope, so matched_docs/n_docs reads
-    * as the window's contamination rate, never a corpus-diluted one. */
-  /** Like [[BandFunnel]]: `scoredOf` rebuilds the verify/rerank stage
-    * over any pairs frame, with optional pre-shaped (id_a, id_b)
-    * candidate-id frames for its two semi-joins; `scored` is the lazy
-    * composition every consumer serves. A round-17 A/B REJECTED eager
-    * pairs materialization here (the within-funnel SHOW DEDUP win):
-    * every AGAINST statement is a single-action plan whose pairs
-    * consumers already share the banding + index-join exchanges via
-    * ReusedExchange (spec-pinned), so a checkpoint only ADDED jobs —
-    * measured sf0.1 lanes: SIMILAR AGAINST lsh 0.43→0.64 s, ivf
-    * 0.42→0.82 s. The within-container funnel differs because its
-    * cluster stage is an eager multi-action loop. */
-  private case class XFunnel(idef: graft.catalog.Index.Def, thr: Double,
-      pairs: DataFrame, probed: DataFrame,
-      scoredOf: (DataFrame, Option[(DataFrame, DataFrame)]) => DataFrame,
-      candIdsAB: Option[(DataFrame, DataFrame)] = None) {
-    lazy val scored: DataFrame = scoredOf(pairs, candIdsAB)
-  }
-
-  /** `probeOpt` (round 16) widens the ivf assignment to the p nearest
-    * cells (the SIMILAR PROBE recall knob, cross-container); band kinds
-    * refuse ANY explicit PROBE — even 1 — they have no probe geometry.
-    * `atVersion` (round 16,
-    * r15 judge #4) pins the REFERENCE container c2's snapshot: index
-    * parts AND verify payloads read at that committed version, so a
-    * curation run against a moving reference corpus is reproducible.
-    * The index DEFINITION (frozen centroids / analyzer) is the current
-    * metadata, exactly like SIMILAR AT VERSION — a REBUILD between runs
-    * is a new definition, not a time-travel surface. */
-  /** `window` (round 17, r16 judge #8) — `FROM VERSION a TO b`: gate
-    * only the rows c1 GAINED in the committed window (the CHANGES
-    * feed's inserts + update posts, semi-joined into the funnel's c1
-    * side), the batch catch-up twin of the streaming ingest gate. Gated
-    * payloads are the CURRENT tip's (removal operates on what exists
-    * now; a row edited after the window gates on its current content),
-    * pre-window rows are never probed — at 100 TB the funnel's banding
-    * and verify cost become ∝ the window's arrivals, not the corpus. */
-  private def crossDedupFunnel(container: String, against: String,
+    * AT VERSION pins the REFERENCE snapshot: index parts and verify
+    * payloads read that committed version, so a curation run against a
+    * moving reference corpus is reproducible. The index DEFINITION
+    * (frozen centroids / analyzer) is the current metadata, exactly like
+    * SIMILAR AT VERSION. `probeOpt` (cross ivf only) widens the
+    * assignment to the p nearest cells, the SIMILAR PROBE recall dial;
+    * band kinds refuse ANY explicit PROBE — even 1 — they have no probe
+    * geometry. `window` (cross only) probes just the rows `container`
+    * gained in `FROM VERSION a TO b` ([[gainedIn]]).
+    *
+    * Candidates are never all-pairs. Within a container they are the
+    * index's bucket self-join — on (band, bk) for band kinds, on the
+    * cell id for ivf — pinned shuffle-hash like the fixture lane
+    * (TextDedup.lshPairs), so the identical subtrees collapse to ONE
+    * ReusedExchange. Across containers the probe side derives through the
+    * SAME derivation the reference index was built with (bands, or
+    * nearest-frozen-centroid assignment), then ONE pinned shuffle-hash
+    * equi-join against the index rows; the exchange carries ids, never
+    * payloads. Every consumer's copy of the pairs subtree stays
+    * canonically equal (explicit id not-nulls), so one statement runs the
+    * banding and the index join once (CrossDedupSpec pins the
+    * ReusedExchange nodes). */
+  private def nearDupFunnel(container: String, against: Option[String],
       ixOpt: Option[String], thrOpt: Option[Double], what: String,
       probeOpt: Option[Int] = None, atVersion: Option[Int] = None,
-      window: Option[(Int, Int)] = None): XFunnel = {
-    requireNotView(container, "its content")
-    requireNotView(against, "a band index")
-    if (container.equalsIgnoreCase(against))
-      throw new ParseException(
-        s"$what AGAINST the container itself is the within-container " +
-          s"funnel — use `$what $container` (no AGAINST)")
-    val d1 = catalog.get(container)
-    val d2 = catalog.get(against)
-    // c2 must serve a COMMITTED index: an unversioned external corpus
-    // reads an empty index, which would report a clean "no matches" —
-    // a wrong answer wearing an honest face (the same trap the
-    // within-container DEDUP refuses upfront)
-    catalog.requireVersioned(against, s"$what AGAINST")
-    atVersion.foreach(v =>
-      if (!catalog.versions(against).contains(v))
-        throw new ParseException(s"No committed version $v on '$against'"))
-    val defs = catalog.indexDefs(against)
-      .filter(x => x.kind == "lsh" || x.kind == "simhash" || x.kind == "ivf")
-    val idef = ixOpt match {
-      case Some(n) => defs.find(_.ix == n).getOrElse(throw new ParseException(
-        s"No lsh/simhash/ivf index '$n' on '$against'"))
-      case None => defs match {
-        case Seq(one) => one
-        case Seq() => throw new ParseException(
-          s"$what AGAINST needs an lsh, simhash, or ivf index on " +
-            s"'$against' (CREATE INDEX … USING lsh|simhash|ivf)")
-        case many => throw new ParseException(
-          s"'$against' has ${many.size} candidate indexes " +
-            s"(${many.map(_.ix).mkString(", ")}) — pick one with USING")
-      }
+      window: Option[(Int, Int)] = None): Funnel = {
+    val ref = against.getOrElse(container)
+    val whatRef = if (against.isEmpty) what else s"$what AGAINST"
+    against.foreach { a =>
+      requireNotView(container, "its content")
+      if (container.equalsIgnoreCase(a))
+        throw new ParseException(
+          s"$what AGAINST the container itself is the within-container " +
+            s"funnel — use `$what $container` (no AGAINST)")
     }
-    // c1 must carry the indexed column's NAME with the indexed TYPE —
-    // the probe derivation runs over c1's own payloads (TEXT for band
-    // kinds, packed-float32 BYTES for ivf)
+    requireNotView(ref, "a band index")
+    val d1 = catalog.get(container)
+    val d2 = catalog.get(ref)
+    // a cross reference must serve a COMMITTED index: an unversioned
+    // external corpus reads an empty index, which would report a clean
+    // "no matches" — a wrong answer wearing an honest face
+    if (against.isDefined) catalog.requireVersioned(ref, whatRef)
+    val (idef, thr) = nearDupIndex(ref, ixOpt, thrOpt, atVersion, whatRef)
+    // `text` is the indexed payload: TEXT for band kinds, packed-float32
+    // BYTES for ivf
+    val refDocs = committed(ref, atVersion)
+      .select(col(d2.primaryKey).as("doc_id"), col(idef.column).as("text"))
+    val ixRows = graft.catalog.Index.read(catalog, ref, idef, atVersion)
+    val cellKeys = if (idef.kind == "ivf") Seq("cluster") else Seq("band", "bk")
+    if (against.isEmpty) {
+      val ix = ixRows.select((col("id") +: cellKeys.map(col)): _*)
+      val pairs = ix.as("a").hint("shuffle_hash").join(ix.as("b"),
+          cellKeys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+            col("a.id") < col("b.id"))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+        .distinct()
+      return Funnel(idef, thr, pairs, probed = refDocs, reference = None)
+    }
+    // the probe derivation runs over c1's own payloads, so c1 must carry
+    // the indexed column's NAME with the indexed TYPE
     val wantType =
       if (idef.kind == "ivf") org.apache.spark.sql.types.BinaryType
       else org.apache.spark.sql.types.StringType
     val cCol = d1.columns.find(_._1.equalsIgnoreCase(idef.column)) match {
       case Some((n, t)) if t.spark == wantType => n
       case Some((n, t)) => throw new ParseException(
-        s"$what AGAINST: column $n on '$container' is ${t} — " +
-          s"'${against}''s ${idef.kind} index probes " +
+        s"$whatRef: column $n on '$container' is ${t} — " +
+          s"'$ref''s ${idef.kind} index probes " +
           (if (idef.kind == "ivf") "packed-float32 BYTES" else "text"))
       case None => throw new ParseException(
-        s"$what AGAINST: '$container' has no column '${idef.column}' to " +
-          s"probe '${against}''s ${idef.kind} index")
+        s"$whatRef: '$container' has no column '${idef.column}' to " +
+          s"probe '$ref''s ${idef.kind} index")
     }
-    // verify thresholds: the within-container funnel's defaults
-    val thr = thrOpt.getOrElse(idef.kind match {
-      case "lsh" => 0.2
-      case "simhash" => 29.0 / 32.0
-      case _ => 0.99
-    })
-    // an EXPLICIT PROBE — even PROBE 1 — on a band index refuses like
-    // the SIMILAR pk/vector form (r16 code review: silently ignoring
-    // the knob on one surface while the other errors hides the same
-    // recall-knob misunderstanding)
     probeOpt.foreach { p =>
       if (idef.kind != "ivf") throw new ParseException(
         s"$what PROBE serves from an ivf index; '${idef.ix}' is a " +
           s"${idef.kind} index (band probes have no cell count to widen)")
-      val k = catalog.ivfK(against, idef.ix)
+      val k = catalog.ivfK(ref, idef.ix)
       if (p > k) throw new ParseException(
         s"$what PROBE $p exceeds index '${idef.ix}' trained cell count $k")
     }
     val probe = probeOpt.getOrElse(1)
-    atVersion.foreach(v => note(s"$what against: reference '$against' " +
+    atVersion.foreach(v => note(s"$what against: reference '$ref' " +
       s"pinned AT VERSION $v — index parts and verify payloads read " +
       "that snapshot (the index definition stays the current frozen " +
       "metadata, the SIMILAR AT VERSION contract)"))
-    import graft.operators.TextDedup.{bandsOf, jaccardSim, simhashBands,
-      simhashSim, withShingles, withSignatures, withSimhash}
-    val c1All = catalog.read(container)
-      .select(col(d1.primaryKey).as("doc_id"), col(cCol).as("text"))
-    val c1Docs = window match {
-      case None => c1All
-      case Some((a, b)) =>
-        // the CHANGES feed names what the window gained; the semi-join
-        // prunes the funnel's c1 side BEFORE banding/assignment, so
-        // derivation cost scales with the window, not the corpus
-        val gained = catalog.changes(container, a, Some(b))
-          .filter(col("_change_type").isin("insert", "update_postimage"))
-          .select(col(d1.primaryKey).as("doc_id")).distinct()
-        note(s"$what against: FROM VERSION $a TO $b — only rows " +
-          s"'$container' gained in the window (CHANGES inserts + update " +
-          "posts) probe the funnel; pre-window rows are never gated " +
-          "(the batch catch-up twin of the streaming ingest gate)")
-        c1All.join(gained, Seq("doc_id"), "left_semi")
+    val c1Docs = gainedIn(container, catalog.read(container)
+        .select(col(d1.primaryKey).as("doc_id"), col(cCol).as("text")),
+      window, s"$what against")
+    val refIx = ixRows.select((col("id").as("id_b") +: cellKeys.map(col)): _*)
+    val pairs = if (idef.kind != "ivf") {
+      note(s"dedup against: c1 bands ⋈ '$ref'.${idef.ix} index rows " +
+        "on (band, bk) — one pinned shuffle-hash exchange of (id, band, " +
+        f"bk), never text; exact-measure verify (threshold $thr%.6f) " +
+        "over candidate pairs only")
+      graft.operators.TextDedup.bandCollisions(
+        c1Docs, refIx, idef.kind, idef.analyzer)
+    } else {
+      note(s"dedup against: c1 vectors assign to '$ref'.${idef.ix}'s " +
+        "frozen centroids (broadcast row-local map) ⋈ index rows on the " +
+        "cell id — one pinned shuffle-hash exchange of (id, cluster); " +
+        f"exact-cosine verify (threshold $thr%.6f) over candidate pairs")
+      // recall contract: a FIXED cell count per c1 vector — a verified
+      // near-dup in a further cell is out of reach, unlike filtered
+      // SIMILAR, which widens probes until the LIMIT fills
+      note(s"$what against (ivf): candidates are bounded to each c1 " +
+        s"vector's $probe nearest-centroid cell(s) — a near-dup " +
+        "assigned to a further cell of c2's index is not probed " +
+        "(PROBE widens; band kinds have the same single-derivation " +
+        "recall shape)")
+      graft.catalog.Index.ivfAssign(catalog, ref, idef,
+          c1Docs.select(col("doc_id").as(d2.primaryKey),
+            col("text").as(idef.column)), nprobe = probe)
+        .select(col("qid").as("id_a"), col("qcluster").as("cluster"))
+        .filter(col("id_a").isNotNull).hint("shuffle_hash")
+        .join(refIx.filter(col("id_b").isNotNull), Seq("cluster"))
+        .select(col("id_a"), col("id_b")).distinct()
     }
-    // candidate pairs: c1 derives through the SAME derivation c2's
-    // index was built with (bands for lsh/simhash; nearest-frozen-
-    // centroid assignment for ivf — Index.ivfAssign, the streaming ANN
-    // gate's probe), then ONE pinned shuffle-hash equi-join against the
-    // index rows — (id, band/cluster) tuples only, never payloads
-    val pairs = idef.kind match {
-      case "lsh" | "simhash" =>
-        // the ONE shared band candidate stage (round 17, code review):
-        // TextDedup.bandCollisions also serves the streaming band
-        // enrichment, so the funnel and its streaming twin cannot drift
-        val ixRows = graft.catalog.Index.read(catalog, against, idef, atVersion)
-          .select(col("id").as("id_b"), col("band"), col("bk"))
-        note(s"dedup against: c1 bands ⋈ '$against'.${idef.ix} index rows " +
-          "on (band, bk) — one pinned shuffle-hash exchange of (id, band, " +
-          f"bk), never text; exact-measure verify (threshold $thr%.6f) " +
-          "over candidate pairs only")
-        graft.operators.TextDedup.bandCollisions(
-          c1Docs, ixRows, idef.kind, idef.analyzer)
-      case _ =>
-        val probeCells = graft.catalog.Index.ivfAssign(catalog, against,
-            idef, c1Docs.select(
-              col("doc_id").as(d2.primaryKey),
-              col("text").as(idef.column)), nprobe = probe)
-          .select(col("qid").as("id_a"), col("qcluster").as("cluster"))
-        val ixRows = graft.catalog.Index.read(catalog, against, idef, atVersion)
-          .select(col("id").as("id_b"), col("cluster"))
-        note(s"dedup against: c1 vectors assign to '$against'.${idef.ix}'s " +
-          "frozen centroids (broadcast row-local map) ⋈ index rows on the " +
-          "cell id — one pinned shuffle-hash exchange of (id, cluster); " +
-          f"exact-cosine verify (threshold $thr%.6f) over candidate pairs")
-        // recall contract (r15 advisor): the cross assignment probes a
-        // FIXED cell count per c1 vector (`probe`, default 1) — a
-        // verified near-dup sitting in a further cell is out of reach,
-        // unlike filtered SIMILAR, which widens probes until the LIMIT
-        // fills. Surface the bound instead of implying completeness.
-        note(s"$what against (ivf): candidates are bounded to each c1 " +
-          s"vector's $probe nearest-centroid cell(s) — a near-dup " +
-          "assigned to a further cell of c2's index is not probed " +
-          "(PROBE widens; band kinds have the same single-derivation " +
-          "recall shape)")
-        // explicit id not-nulls: the bandCollisions canonicalization
-        // stance (round 17) — every consumer's copy of this subtree
-        // stays exchange-reusable regardless of which id columns its
-        // own joins infer not-null for
-        probeCells.filter(col("id_a").isNotNull).hint("shuffle_hash")
-          .join(ixRows.filter(col("id_b").isNotNull), Seq("cluster"))
-          .select(col("id_a"), col("id_b")).distinct()
-    }
-    // verify computation ∝ CANDIDATES, not corpora (round 16, r15 judge
-    // #3): each side SEMI-JOINS to the candidate pair ids BEFORE the
-    // shingle/simhash/payload derivation runs, so the exact-measure
-    // stage derives (and shuffles) per-doc state only for docs that
-    // actually collided — at 100 TB with a selective probe, deriving
-    // both full corpora (the r15 shape) would dominate the funnel even
-    // though the join itself already restricted the PAIRS. Round 17:
-    // the stage is a CLOSURE over any pairs frame, so eager consumers
-    // re-base it on checkpointed pairs + broadcast local id relations
-    // (materializedXFunnel) while EXPLAIN keeps the lazy composition.
-    val c2Snapshot = atVersion.map(v => catalog.readVersion(against, v))
-      .getOrElse(catalog.read(against))
-    val scoredOf: (DataFrame, Option[(DataFrame, DataFrame)]) => DataFrame =
-      (prs, ids) => idef.kind match {
-        case "lsh" | "simhash" =>
-          // the ONE shared verify stage (round 17): bandExactScores
-          // semi-joins BOTH sides to the colliding ids before any
-          // shingle/simhash derivation (the r15 judge #3 discipline) and
-          // also serves the streaming band enrichment — one definition,
-          // no drift
-          graft.operators.TextDedup.bandExactScores(prs, c1Docs,
-              c2Snapshot.select(col(d2.primaryKey).as("doc_id"),
-                col(idef.column).as("text")),
-              idef.kind, idef.analyzer,
-              aIds = ids.map(_._1), bIds = ids.map(_._2))
-            .filter(col("score") >= thr)
-        case _ =>
-          // exact cosine over both snapshots' payloads — the within-
-          // funnel's ivf verify (a NULL cosine verifies nothing).
-          // Round 17 (guide §2.4): the pair join binds payloads
-          // DIRECTLY — unlike the band kinds there is no per-doc
-          // derivation to prune (float32 unpack runs inside the
-          // measure), so the inner join on the pair ids IS the pruning
-          // and a candidate-id semi-join (the r16 shape) only
-          // instantiated the whole pairs subtree twice more per
-          // statement (assignment + index join + distinct, re-executed
-          // past what ReusedExchange could share — measured in the
-          // sf0.1 SIMILAR AGAINST ivf lane's plan). Semantically
-          // identical: semi-join-then-inner-join on one key ≡ the
-          // inner join.
-          // Round 18 (guide §1.2): payloads unpack ONCE PER SNAPSHOT ROW
-          // below the pair joins — at sf1 the cosine-verify stage
-          // dominated this lane and each pair decoded both 512-byte
-          // payloads (a vector in a c-candidate cell decodes O(c)
-          // times). Same expression, same numbers; only the evaluation
-          // point moves.
-          import graft.functions.CosineSimilarity.cosineSim
-          import graft.functions.Float32Unpack.float32Unpack
-          prs
-            .join(c1Docs.select(col("doc_id").as("id_a"),
-              float32Unpack(col("text")).as("arr_a")), Seq("id_a"))
-            .join(c2Snapshot.select(col(d2.primaryKey).as("id_b"),
-              float32Unpack(col(idef.column)).as("arr_b")), Seq("id_b"))
-            .select(col("id_a"), col("id_b"),
-              round(cosineSim(col("arr_a"), col("arr_b")), 6).as("score"))
-            .filter(col("score") >= thr)
-      }
-    XFunnel(idef, thr, pairs, probed = c1Docs, scoredOf = scoredOf)
+    Funnel(idef, thr, pairs, probed = c1Docs, reference = Some(refDocs))
   }
 
   /** The SIMILAR c1 AGAINST c2 served DataFrame (round 16, r15 judge
     * #2): the batch k-NN join. One construction for execute and
     * EXPLAIN.
     *
-    * Scale shape: candidates come from [[crossDedupFunnel]]'s
+    * Scale shape: candidates come from [[nearDupFunnel]]'s
     * set-oriented derivation — ONE pinned shuffle-hash (band,bk)/(cell)
     * id exchange, never an all-pairs join, verify/rerank computation
     * semi-joined to candidate ids only. Per-probe top-k runs on the
@@ -3243,7 +2962,7 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
   private def similarAgainstDf(sa: Ast.SimilarAgainst): DataFrame = {
     // threshold −1 keeps every scored candidate: a k-NN join ranks, it
     // does not gate (scores are bounded below by −1 in every family)
-    val f = crossDedupFunnel(sa.container, sa.against, sa.ix,
+    val f = nearDupFunnel(sa.container, Some(sa.against), sa.ix,
       thrOpt = Some(-1.0), what = "SIMILAR",
       probeOpt = sa.probe, atVersion = sa.atVersion, window = sa.window)
     val pk = catalog.get(sa.container).primaryKey
@@ -3260,9 +2979,7 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
       case Some(w) =>
         val d2 = catalog.get(sa.against)
         val pred = lowerWhere(w, d2)
-        val refSnap = sa.atVersion
-          .map(v => catalog.readVersion(sa.against, v))
-          .getOrElse(catalog.read(sa.against))
+        val refSnap = committed(sa.against, sa.atVersion)
         note("similar against filtered: WHERE binds to the REFERENCE " +
           "container and filters matches before each probe's top-" +
           s"${sa.limit}; the batch form has no per-probe widening " +
@@ -3302,7 +3019,7 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
   /** The SHOW DEDUP … AGAINST served DataFrame — one construction for
     * execute and EXPLAIN, like [[showDecontaminateDf]]. */
   private def showDedupAgainstDf(sd: Ast.ShowDedupAgainst): (DataFrame, Boolean) = {
-    val f = crossDedupFunnel(sd.container, sd.against, sd.ix, sd.threshold,
+    val f = nearDupFunnel(sd.container, Some(sd.against), sd.ix, sd.threshold,
       "SHOW DEDUP", probeOpt = sd.probe, atVersion = sd.atVersion,
       window = sd.window)
     if (sd.docs) {
@@ -3350,7 +3067,7 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     * vice versa, so any-hit n-gram membership IS span membership. */
   /** `probed` = the measured corpus population (whole container, or
     * with `FROM VERSION a TO b` the window's arrivals) — the SHOW
-    * summary's n_docs, the XFunnel.probed contract. */
+    * summary's n_docs, the Funnel.probed contract. */
   private case class DecontFunnel(thr: Double, contamination: DataFrame,
       n: Int, spanMode: Boolean, probed: DataFrame) {
     /** The ONE removal rule — report, DOCS detail and the applied
@@ -3408,13 +3125,10 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     // AT VERSION (round 16, r15 judge #4): pin the EVAL container's
     // committed snapshot — a growing eval suite must not silently
     // change which corpus docs a reproduced curation run removes
-    atVersion.foreach(v =>
-      if (!catalog.versions(against).contains(v))
-        throw new ParseException(s"No committed version $v on '$against'"))
+    requireCommittedVersion(against, atVersion)
     atVersion.foreach(v => note(s"decontaminate: eval container " +
       s"'$against' pinned AT VERSION $v"))
-    val evalRows = atVersion.map(v => catalog.readVersion(against, v))
-      .getOrElse(catalog.read(against))
+    val evalRows = committed(against, atVersion)
     // ONE measure definition (TextDedup.contaminationFractions), shared
     // with the streaming decontamination ingest gate
     val evalGrams = graft.operators.TextDedup.evalGramSet(
@@ -3427,20 +3141,9 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
       note(s"decontaminate: eval gram set of '$against' exceeds " +
         s"decont_broadcast_cap $cap — broadcast hint dropped, AQE plans " +
         "the gram join (slow-but-correct, never an executor OOM)")
-    val corpusAll = catalog.read(container)
-      .select(col(d.primaryKey).as("doc_id"), col(cCol).as("text"))
-    val corpus = window match {
-      case None => corpusAll
-      case Some((a, b)) =>
-        val gained = catalog.changes(container, a, Some(b))
-          .filter(col("_change_type").isin("insert", "update_postimage"))
-          .select(col(d.primaryKey).as("doc_id")).distinct()
-        note(s"decontaminate: FROM VERSION $a TO $b — only docs " +
-          s"'$container' gained in the window (CHANGES inserts + update " +
-          "posts) are measured and removable; pre-window docs are never " +
-          "touched (the batch catch-up twin of the streaming gate)")
-        corpusAll.join(gained, Seq("doc_id"), "left_semi")
-    }
+    val corpus = gainedIn(container, catalog.read(container)
+        .select(col(d.primaryKey).as("doc_id"), col(cCol).as("text")),
+      window, "decontaminate")
     val contamination = graft.operators.TextDedup.contaminationFractions(
       corpus, evalGrams, n = n, broadcastEval = evalBounded, analyzer = an)
     DecontFunnel(thr, contamination, n, spans.isDefined, probed = corpus)
@@ -3487,7 +3190,7 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     * detail view and the DEDUP removal, so the dry-run detail and the
     * applied decision can never disagree. Eager (runs the
     * pointer-jumping loop). */
-  private def clusterRanking(f: BandFunnel): (DataFrame, DataFrame) = {
+  private def clusterRanking(f: Funnel): (DataFrame, DataFrame) = {
     val comp = graft.operators.TextDedup.connectedComponents(f.verified)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("l"))
@@ -3504,7 +3207,7 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     // checkpointed label table (near-dup-graph-sized), so the payload
     // aggregation exchanges only member rows — before, the group-by ran
     // over the FULL corpus and the inner join pruned after the fact
-    val docs1 = f.docsDf
+    val docs1 = f.probed
       .join(comp.select(col("v").as("doc_id")), Seq("doc_id"), "left_semi")
       .groupBy(col("doc_id")).agg(min(col("text")).as("text"))
     val ranked = comp.join(docs1, col("v") === col("doc_id"))
@@ -3512,9 +3215,23 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     (comp, ranked)
   }
 
+  /** SHOW DEDUP lowering (round 13): the dedup funnel report served from
+    * a persisted band index — the AQL surface of the `dd_dedup_report`
+    * lane, so an AQL-only client with an lsh/simhash index gets the
+    * exact-groups → band-candidates → verified-pairs → clusters summary
+    * in one statement. Candidate pairs come from the commit-maintained
+    * index's band table (a band-bucket equi-self-join, pinned
+    * shuffle-hash like the fixture lane — NEVER all-pairs; the exchange
+    * carries (band, bk, id), not text). Verification recomputes the
+    * exact measure the band family approximates over the CANDIDATE pairs
+    * only (3-gram Jaccard for lsh, `(32−hamming)/32` signature
+    * similarity for simhash); clusters are pointer-jumping connected
+    * components over the verified graph (O(log diameter) rounds). Every
+    * stage is the already-oracle-pinned pipeline; this statement pins
+    * their composition against the index-served candidates. */
   private def showDedupDf(sd: Ast.ShowDedup, explainOnly: Boolean = false): DataFrame = {
-    val f = bandFunnel(sd.container, sd.ix, sd.threshold, sd.atVersion,
-      "SHOW DEDUP")
+    val f = nearDupFunnel(sd.container, None, sd.ix, sd.threshold,
+      "SHOW DEDUP", atVersion = sd.atVersion)
     note(s"show dedup: ${f.idef.kind} index '${f.idef.ix}' bucket self-join → " +
       f"exact-measure verify (threshold ${f.thr}%.6f) → pointer-jumping " +
       "clusters; all-aggregate 1-row dimensions cross-joined")
@@ -3570,7 +3287,7 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     // 100 TB stage-level parallelism inside the one serve action (the
     // above-cap branch's cross-joined aggregates) already overlaps the
     // independent scans where it matters.
-    val totEx = fe.docsDf.groupBy(md5(col("text")).as("h"))
+    val totEx = fe.probed.groupBy(md5(col("text")).as("h"))
       .agg(count(lit(1)).as("n"))
       .agg(coalesce(sum(col("n")), lit(0L)).cast("long").as("n_docs"),
         coalesce(sum(when(col("n") > 1, col("n"))), lit(0L))

@@ -1,7 +1,7 @@
 package graft.catalog
 
 import graft.aql.AlbaType
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Path, StandardCopyOption}
@@ -492,24 +492,12 @@ object Index {
         .select(col("emb")).collect().toSeq.zipWithIndex
         .map { case (r, i) => i -> r.getSeq[Float](0).toArray }
       require(cents.nonEmpty, s"ivf rebuild on '$container': no decodable vectors")
-      // ROW-LOCAL per-iteration assignment (round 18, guide §2.4 — the
-      // ivfAssign form): each round's centroids are driver metadata
-      // (≤k × dims), so nearest-centroid is a projection over a literal
-      // centroid-struct array — same (d2 rounded 6, sid) ordering the
-      // former broadcast-crossJoin + row_number window computed, without
-      // hash-partitioning the sample vectors by id for the window sort.
-      // NULL d2 (never expected here — the sample is decodable by
-      // construction) keeps its nulls-first pick via the -Inf key.
+      // each round's nearest cell is a row-local projection over that
+      // round's centroids ([[rankedCells]]) — no exchange of the sample
       for (_ <- 1 to iters) {
-        val centArr = array(cents.map { case (sid, arr) =>
-          struct(typedLit(arr.toSeq).as("semb"), lit(sid).as("sid"))
-        }: _*)
-        val best = element_at(array_sort(transform(centArr, c => struct(
-          coalesce(round(graft.operators.Similarity.d2(col("emb"),
-            c.getField("semb")), 6), lit(Double.NegativeInfinity)).as("d2"),
-          c.getField("sid").as("sid")))), 1)
-        val assigned = vecs
-          .select(best.getField("sid").as("cluster"), col("emb"))
+        val assigned = vecs.select(
+          element_at(rankedCells(col("emb"), cents), 1).getField("sid")
+            .as("cluster"), col("emb"))
         val means = assigned
           .select(col("cluster"), posexplode(col("emb")).as(Seq("pos", "f")))
           .groupBy(col("cluster"), col("pos"))
@@ -706,31 +694,15 @@ object Index {
       queries: DataFrame, nprobe: Int = 1): DataFrame = {
     require(idef.kind == "ivf", s"index '${idef.ix}' is not an ivf index")
     val pk = cat.get(container).primaryKey
-    // ROW-LOCAL assignment (round 17, guide §2.4 — remove shuffles
-    // outright): the frozen centroid set is bounded driver metadata
-    // (≤k × dims), so each query row's top-nprobe cells are a pure
-    // PROJECTION over a literal centroid array — sort the per-row
-    // (d2 rounded to 6, sid) structs and slice. Same numbers, same
-    // tie-break as the committed assignment. The prior shape cross-
-    // joined a broadcast centroid dim and ranked with a row_number
-    // window, which hash-partitioned every probe VECTOR by qid for the
-    // window sort — a full exchange of query embeddings that this
-    // projection never pays, at any scale. A NULL d2 (dim-mismatched
-    // probe) keeps its nulls-first window ordering via the -Inf key.
-    val centArr = array(centroids(cat, container, idef.ix).map {
-      case (sid, arr) =>
-        struct(typedLit(arr.toSeq).as("semb"), lit(sid).as("sid"))
-    }: _*)
-    val rankedCells = array_sort(transform(centArr, c => struct(
-      coalesce(round(graft.operators.Similarity.d2(col("emb"),
-        c.getField("semb")), 6), lit(Double.NegativeInfinity)).as("d2"),
-      c.getField("sid").as("sid"))))
+    // each query row's top-nprobe cells slice its ranked cells — the
+    // committed assignment's numbers, with no exchange of query vectors
+    val cells = rankedCells(col("emb"), centroids(cat, container, idef.ix))
     queries
       .select(col(pk).as("qid"),
         graft.functions.Float32Unpack.float32Unpack(col(idef.column)).as("emb"))
       .filter(col("emb").isNotNull)
       .select(col("qid"),
-        explode(slice(rankedCells, 1, nprobe)).as("_cell"))
+        explode(slice(cells, 1, nprobe)).as("_cell"))
       .select(col("qid"), col("_cell.sid").as("qcluster"))
   }
 
@@ -1176,29 +1148,33 @@ object Index {
     }
   }
 
-  /** (id, emb, keep…) → (id, cluster, keep…): nearest-centroid assignment
-    * with deterministic ties (d2 rounded to 6, then sid). ROW-LOCAL
-    * (round 17, guide §2.4): the frozen centroids are bounded driver
-    * metadata, so the nearest cell is a projection over a literal
-    * centroid-struct array — the committed assignment pays NO exchange
-    * at all (the r16 shape cross-joined a broadcast centroid dim and
-    * min_by-grouped back by id: map-side combined, but still one
-    * groupBy exchange of every packed vector per commit). The sorted
-    * (d2, sid) struct array reproduces the min_by/window tie-break
-    * exactly; a NULL d2 (dim-mismatched row) keeps its sorts-first
-    * pick via the -Inf key. */
+  /** (id, emb, keep…) → (id, cluster, keep…): the committed
+    * nearest-centroid assignment, the first of [[rankedCells]] — a
+    * projection, so a commit exchanges no packed vectors. */
   private def assignClusters(vecs: DataFrame,
-      cents: Seq[(Int, Array[Float])], keep: Seq[String]): DataFrame = {
+      cents: Seq[(Int, Array[Float])], keep: Seq[String]): DataFrame =
+    vecs.filter(col("emb").isNotNull)
+      .select(col("id") +:
+        element_at(rankedCells(col("emb"), cents), 1).getField("sid")
+          .as("cluster") +: keep.map(col): _*)
+
+  /** Every centroid of `cents` ranked nearest-first for the vector
+    * column `emb`: (d2, sid) structs sorted by d2 rounded to 6, ties to
+    * the lower seed id — the ONE cell ordering of Lloyd training, the
+    * committed assignment ([[assignClusters]]) and probe assignment
+    * ([[ivfAssign]]). The centroids are bounded driver metadata (≤k ×
+    * dims) spliced in as a literal struct array, so assignment is a
+    * row-local projection with no exchange; a NULL d2 (dim-mismatched
+    * row) sorts first via the -Inf key. */
+  private def rankedCells(emb: Column,
+      cents: Seq[(Int, Array[Float])]): Column = {
     val centArr = array(cents.map { case (sid, arr) =>
       struct(typedLit(arr.toSeq).as("semb"), lit(sid).as("sid"))
     }: _*)
-    val best = element_at(array_sort(transform(centArr, c => struct(
-      coalesce(round(graft.operators.Similarity.d2(col("emb"),
+    array_sort(transform(centArr, c => struct(
+      coalesce(round(graft.operators.Similarity.d2(emb,
         c.getField("semb")), 6), lit(Double.NegativeInfinity)).as("d2"),
-      c.getField("sid").as("sid")))), 1)
-    vecs.filter(col("emb").isNotNull)
-      .select(col("id") +: best.getField("sid").as("cluster") +:
-        keep.map(col): _*)
+      c.getField("sid").as("sid"))))
   }
 
   /** (id, text, src) → (id, band, bk, src): the MinHash shingle →

@@ -556,62 +556,84 @@ object TextDedup {
       .select(col("id_a"), col("id_b")).distinct()
   }
 
-  /** The exact-measure verify stage over band candidates — defined once
-    * with [[bandCollisions]] (round 17). Computation ∝ CANDIDATES: both
-    * sides semi-join to the colliding ids BEFORE any shingle/simhash
-    * derivation runs (the r15 judge #3 discipline, now shared by every
-    * consumer). Returns (id_a, id_b, score) UNFILTERED — the caller
-    * applies its threshold (a funnel gates, a k-NN join ranks). */
-  /** `aIds`/`bIds` (round 17): optional PRE-SHAPED candidate-id frames
-    * (one `doc_id` column — e.g. a broadcast local relation built from
-    * materialized pairs) for the two semi-joins; None derives the id
-    * sets from the pairs frame (the lazy/EXPLAIN shape). */
-  private[graft] def bandExactScores(pairs: DataFrame, aDocs: DataFrame,
-      bDocs: DataFrame, kind: String, analyzer: String,
-      aIds: Option[DataFrame] = None, bIds: Option[DataFrame] = None): DataFrame = {
-    // candidate-id sets as distinct-THEN-project (round 17, guide §2.4):
-    // `pairs.select(id).distinct()` lets column pruning drop the OTHER id
-    // from the embedded pairs subtree, which changes its exchanges'
-    // schemas and blocks ReusedExchange — the banding derivation (and
-    // the index-side exchange) then re-executed once per verify side,
-    // measured as a second full tokenize+shingle+minhash pass of the
-    // probe corpus in the sf0.1 SIMILAR AGAINST lsh plan. Keeping the
-    // distinct over BOTH columns pins every copy canonically equal to
-    // the pairs spine, so both its exchanges reuse; a semi-join ignores
-    // build-side multiplicity, so the result is unchanged.
-    // the semi-joins pin SHUFFLE-HASH with the id frame as the build
-    // side (guide §3.1): the build is ids-only (8 bytes/row — the same
-    // scale class as the banded id exchange itself), so hashing it is
-    // bounded-memory-safe at any collision cardinality, while the
-    // default sort-merge paid a full sort of the corpus-side payloads
-    val aCand = aDocs.join(aIds.getOrElse(
-        pairs.distinct().select(col("id_a").as("doc_id"))
-          .hint("shuffle_hash")),
-      Seq("doc_id"), "left_semi")
-    val bCand = bDocs.join(bIds.getOrElse(
-        pairs.distinct().select(col("id_b").as("doc_id"))
-          .hint("shuffle_hash")),
-      Seq("doc_id"), "left_semi")
-    kind match {
-      case "lsh" =>
-        val shA = withShingles(aCand, analyzer)
-          .select(col("doc_id").as("id_a"), col("sg").as("sg_a"))
-        val shB = withShingles(bCand, analyzer)
-          .select(col("doc_id").as("id_b"), col("sg").as("sg_b"))
-        pairs.join(shA, Seq("id_a")).join(shB, Seq("id_b"))
-          .select(col("id_a"), col("id_b"),
-            jaccardSim(col("sg_a"), col("sg_b")).as("score"))
-      case "simhash" =>
-        val shA = withSimhash(aCand, Seq("doc_id"), analyzer)
-          .select(col("doc_id").as("id_a"), col("simhash").as("sh_a"))
-        val shB = withSimhash(bCand, Seq("doc_id"), analyzer)
-          .select(col("doc_id").as("id_b"), col("simhash").as("sh_b"))
-        pairs.join(shA, Seq("id_a")).join(shB, Seq("id_b"))
-          .select(col("id_a"), col("id_b"),
-            simhashSim(col("sh_a"), col("sh_b")).as("score"))
-      case other => throw new IllegalArgumentException(
-        s"bandExactScores serves lsh/simhash, got '$other'")
+  /** An index kind's exact measure, defined once for every consumer:
+    * the per-doc value it compares, derived from (doc_id, text) rows as
+    * (doc_id, [[exactCol]]) — 3-gram shingles `sg` under the index's
+    * analyzer (lsh), the simhash-32 signature `simhash`, the unpacked
+    * float32 vector `arr` (ivf). [[exactScore]] compares two of them. */
+  private[graft] def exactDerive(docs: DataFrame, kind: String,
+      analyzer: String): DataFrame = kind match {
+    case "lsh" => withShingles(docs, analyzer).select(col("doc_id"), col("sg"))
+    case "simhash" => withSimhash(docs, Seq("doc_id"), analyzer)
+    case "ivf" => docs.select(col("doc_id"),
+      graft.functions.Float32Unpack.float32Unpack(col("text")).as("arr"))
+    case other => throw new IllegalArgumentException(
+      s"no exact measure for a '$other' index")
+  }
+
+  /** The value column of [[exactDerive]]. */
+  private[graft] def exactCol(kind: String): String = kind match {
+    case "lsh" => "sg"
+    case "ivf" => "arr"
+    case _ => "simhash"
+  }
+
+  /** The score of two [[exactDerive]] values, rounded to 6: 3-gram
+    * Jaccard (lsh), (32 − hamming)/32 (simhash), cosine (ivf; NULL for a
+    * zero norm or an undecodable payload, which verifies nothing). Every
+    * funnel, k-NN join and ingest gate compares THIS column with its
+    * threshold, so a pair verifies alike wherever it is measured. */
+  private[graft] def exactScore(kind: String, a: org.apache.spark.sql.Column,
+      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column = kind match {
+    case "lsh" => jaccardSim(a, b)
+    case "simhash" => simhashSim(a, b)
+    case _ => round(graft.functions.CosineSimilarity.cosineSim(a, b), 6)
+  }
+
+  /** The exact-measure verify stage of every near-dup funnel and band
+    * k-NN join: (id_a, id_b, score) for each candidate pair, UNFILTERED —
+    * the caller gates (a funnel) or ranks (a k-NN join). `probe` holds
+    * the id_a docs and `reference` the id_b docs, both (doc_id, text);
+    * `reference` None means one frame holds both sides (the
+    * within-container funnel), derived ONCE over the union of the pair
+    * ids.
+    *
+    * Computation ∝ CANDIDATES: band kinds semi-join each side to the
+    * candidate ids BEFORE the shingle/simhash derivation. The id sets are
+    * distinct-THEN-project (or an explode of both ids), never
+    * `select(id).distinct()`: column pruning would then drop the other id
+    * from the embedded pairs subtree, change its exchanges' schemas and
+    * block ReusedExchange, re-running the banding per verify side. The
+    * semi-joins pin SHUFFLE-HASH with the ids-only frame as the build
+    * side: bounded memory at any collision cardinality, where the default
+    * sort-merge sorts the corpus-side payloads. ivf payloads join raw:
+    * there is no derivation to prune, and the pair join is the pruning.
+    * `candIds` (one `doc_id` column, e.g. a broadcast local relation of
+    * materialized pairs) replaces the derived id sets. */
+  private[graft] def exactScores(pairs: DataFrame, probe: DataFrame,
+      reference: Option[DataFrame], kind: String, analyzer: String,
+      candIds: Option[DataFrame] = None): DataFrame = {
+    def derived(docs: DataFrame, ids: => DataFrame): DataFrame = exactDerive(
+      if (kind == "ivf") docs
+      else docs.join(candIds.getOrElse(ids.hint("shuffle_hash")),
+        Seq("doc_id"), "left_semi"),
+      kind, analyzer)
+    val (a, b) = reference match {
+      case None =>
+        val both = derived(probe, pairs
+          .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
+          .distinct())
+        (both, both)
+      case Some(ref) =>
+        (derived(probe, pairs.distinct().select(col("id_a").as("doc_id"))),
+          derived(ref, pairs.distinct().select(col("id_b").as("doc_id"))))
     }
+    val m = exactCol(kind)
+    pairs
+      .join(a.select(col("doc_id").as("id_a"), col(m).as(s"${m}_a")), Seq("id_a"))
+      .join(b.select(col("doc_id").as("id_b"), col(m).as(s"${m}_b")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        exactScore(kind, col(s"${m}_a"), col(s"${m}_b")).as("score"))
   }
 
   /** Jaccard-verified near-dup pairs (exact set check over the LSH
@@ -623,8 +645,7 @@ object TextDedup {
       .join(sh.select(col("doc_id").as("id_a"), col("sg").as("sg_a")), Seq("id_a"))
       .join(sh.select(col("doc_id").as("id_b"), col("sg").as("sg_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(size(array_intersect(col("sg_a"), col("sg_b"))).cast("double")
-          / size(array_union(col("sg_a"), col("sg_b"))), 6).as("jaccard"))
+        jaccardSim(col("sg_a"), col("sg_b")).as("jaccard"))
       .filter(col("jaccard") >= 0.2)
   }
 

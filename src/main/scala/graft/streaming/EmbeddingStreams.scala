@@ -73,13 +73,14 @@ object EmbeddingStreams {
     * the persisted ivf index, whose list rows CARRY the candidate vector
     * (cand_emb), so the verify is index-local; (c) within-batch
     * near-dups — history-gate SURVIVORS assigned to the index's frozen
-    * cells (`Index.ivfAssign`), same-cell pairs cosine-verified, lower
+    * cells (`Index.ivfAssign`), same-cell pairs cosine-verified (both
+    * gates compare the rounded `TextDedup.exactScore`), lower
     * pk kept; rows stage (b) drops never join the pairing, so one-batch
     * and split delivery agree. Then append the survivors. */
   private[graft] def annDedupBatch(batch: DataFrame,
       catalog: graft.catalog.Catalog, container: String, ix: String,
       threshold: Double): Unit = {
-    import graft.functions.CosineSimilarity.cosineSim
+    import graft.operators.TextDedup.exactScore
     import graft.functions.Float32Unpack.float32Unpack
     val d = catalog.get(container)
     val pk = d.primaryKey
@@ -123,7 +124,8 @@ object EmbeddingStreams {
         idef, pk, embCol)
       val histDups = histCands
         .join(qEmb, col("qid") === col("ida"))
-        .filter(cosineSim(col("va"), float32Unpack(col("cand_emb"))) >= threshold)
+        .filter(exactScore("ivf", col("va"), float32Unpack(col("cand_emb")))
+          >= threshold)
         .select(col("ida"))
       // (c) within-batch near-dups: the INDEX's cell geometry on both
       // sides (results must not depend on how arrivals were batched),
@@ -145,7 +147,7 @@ object EmbeddingStreams {
       val batchDups = batchCands
         .join(qEmb, Seq("ida"))
         .join(qEmb.select(col("ida").as("idb"), col("va").as("vb")), Seq("idb"))
-        .filter(cosineSim(col("va"), col("vb")) >= threshold)
+        .filter(exactScore("ivf", col("va"), col("vb")) >= threshold)
         .select(col("ida"))
       val dropIds = histDups.unionByName(batchDups).distinct()
         .select(col("ida").as(pk))
@@ -205,7 +207,7 @@ object EmbeddingStreams {
   private[graft] def knnEnrichBatch(batch: DataFrame,
       catalog: graft.catalog.Catalog, against: String, ix: String,
       k: Int, nprobe: Int = 1): DataFrame = {
-    import graft.functions.CosineSimilarity.cosineSim
+    import graft.operators.TextDedup.exactScore
     import graft.functions.Float32Unpack.float32Unpack
     val d = catalog.get(against)
     val pk = d.primaryKey
@@ -238,7 +240,7 @@ object EmbeddingStreams {
         pk, embCol)
       .join(qEmb, col("qid") === col("qid0"))
       .select(col("qid"), col("cand"),
-        round(cosineSim(col("va"), float32Unpack(col("cand_emb"))), 6)
+        exactScore("ivf", col("va"), float32Unpack(col("cand_emb")))
           .as("score"))
       .filter(col("score").isNotNull)
     val top = graft.plans.TopK.perGroup(scored, Seq("qid"),
@@ -268,7 +270,7 @@ object EmbeddingStreams {
   private def bandEnrichBatch(batch: DataFrame,
       catalog: graft.catalog.Catalog, against: String,
       idef: graft.catalog.Index.Def, pk: String, k: Int): DataFrame = {
-    import graft.operators.TextDedup.{bandCollisions, bandExactScores}
+    import graft.operators.TextDedup.{bandCollisions, exactScores}
     val txtCol = idef.column
     // ONE row per probe pk on within-batch replay duplicates —
     // min-by-payload representative, the knnEnrichBatch stance
@@ -276,16 +278,15 @@ object EmbeddingStreams {
       .groupBy(col(pk)).agg(min(col(txtCol)).as(txtCol))
       .select(col(pk).as("doc_id"), col(txtCol).as("text"))
     // the SAME candidate + verify stages the Engine's AGAINST funnel
-    // runs (TextDedup.bandCollisions/bandExactScores — one definition,
-    // so statement and stream cannot drift): banded id collisions, then
+    // runs (TextDedup.bandCollisions/exactScores — one definition, so
+    // statement and stream cannot drift): banded id collisions, then
     // the exact measure over candidate-pruned sides, threshold −1
     // (a k-NN join ranks, never gates)
     val ixRows = graft.catalog.Index.read(catalog, against, idef, None)
       .select(col("id").as("id_b"), col("band"), col("bk"))
     val pairs = bandCollisions(docs, ixRows, idef.kind, idef.analyzer)
-    val scored = bandExactScores(pairs, docs,
-        catalog.read(against)
-          .select(col(pk).as("doc_id"), col(txtCol).as("text")),
+    val scored = exactScores(pairs, docs, Some(catalog.read(against)
+          .select(col(pk).as("doc_id"), col(txtCol).as("text"))),
         idef.kind, idef.analyzer)
       .filter(col("score") >= -1.0)
       .select(col("id_a").as("qid"), col("id_b").as("cand"), col("score"))

@@ -443,6 +443,27 @@ class AqlServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     post(s"QYCNEXT $cursor")
   }
 
+  test("a page of held rows replies without a delayed-ACK stall") {
+    // a held cursor's QYCNNXT starts no Spark job, so its round trip is
+    // the HTTP exchange alone: without TCP_NODELAY the reply body waits
+    // out the client's delayed ACK (~40 ms per call)
+    post("CREATE CONTAINER held ['n'] [INT]")
+    (1 to 3).foreach(i => post(s"CREATE ROW ['n'] [$i] ON held"))
+    post("COMMIT held")
+    val (_, first) = post("SEARCH [] ON held")
+    val cursor = """"cursor":"([^"]+)"""".r.findFirstMatchIn(first).get.group(1)
+    post(s"QYCNNXT $cursor") // warm the connection
+    val ms = (1 to 20).map { _ =>
+      val t0 = System.nanoTime()
+      val (code, body) = post(s"QYCNNXT $cursor")
+      assert(code == 200, body)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    val median = (ms(9) + ms(10)) / 2
+    assert(median < 20.0, f"median QYCNNXT round trip $median%.1f ms: $ms")
+    post(s"QYCNEXT $cursor")
+  }
+
   test("auth_token gates /query behind a /session handshake (database.rs:1110-1143)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-auth-spec")
     java.nio.file.Files.writeString(dir.resolve("settings.yaml"),
