@@ -52,35 +52,10 @@ object PlanDump {
       // optional timing pass over the SAME engine fixture: per-lane best
       // seconds (Bench protocol) + job/stage/task counts
       if (sys.env.contains("GRAFT_PROFILE_LANES")) {
-        val jobs = new java.util.concurrent.atomic.AtomicInteger
-        val stages = new java.util.concurrent.atomic.AtomicInteger
-        val tasks = new java.util.concurrent.atomic.AtomicInteger
         // GRAFT_TASKLOG=1: per-stage task-duration spread (max/median) +
-        // shuffle-read spread for the counted run — the §2.5 skew
-        // evidence (a max/median ratio ≳5 on a shuffle-fed stage is a
-        // skewed partition, not a slow node). Buckets are keyed by
-        // (stageId, stageAttemptId): a retried attempt is its own bucket,
-        // so its re-run tasks cannot skew the first attempt's spread
+        // shuffle-read spread for the counted run — the §2.5 skew evidence
         val taskLog = sys.env.contains("GRAFT_TASKLOG")
-        val stageTasks = new java.util.concurrent.ConcurrentHashMap[
-          (Int, Int), scala.collection.mutable.ArrayBuffer[(Long, Long)]]()
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            jobs.incrementAndGet(); ()
-          }
-          override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (taskLog && t.taskMetrics != null) {
-              val buf = stageTasks.computeIfAbsent((t.stageId, t.stageAttemptId),
-                _ => scala.collection.mutable.ArrayBuffer.empty)
-              buf.synchronized {
-                buf += ((t.taskMetrics.executorRunTime,
-                  t.taskMetrics.shuffleReadMetrics.totalBytesRead)); ()
-              }
-            }
-          override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            stages.incrementAndGet(); tasks.addAndGet(s.stageInfo.numTasks); ()
-          }
-        })
+        val counters = RunCounters.attach(spark, taskLog = taskLog)
         laneNamesReq.foreach { n =>
           def body(): Unit = eng.execute(RetrievalBench.laneAql(n)) match {
             case rs: graft.aql.Engine.ResultSet => rs.df.count(); ()
@@ -91,24 +66,11 @@ object PlanDump {
           // counted run for the job/stage/task structure
           val sec = Bench.bestOfProtocol(() => body())
           Thread.sleep(150)
-          jobs.set(0); stages.set(0); tasks.set(0); stageTasks.clear()
+          counters.reset()
           body()
           Thread.sleep(150) // drain listener events
-          println(f"[laneprofile] $n%-26s $sec%.3fs jobs=${jobs.get} " +
-            s"stages=${stages.get} tasks=${tasks.get}")
-          if (taskLog) {
-            import scala.jdk.CollectionConverters._
-            stageTasks.asScala.toSeq.sortBy(_._1).foreach { case ((sid, att), buf) =>
-              val (durs, srs) = buf.synchronized {
-                (buf.map(_._1).sorted.toIndexedSeq,
-                  buf.map(_._2).sorted.toIndexedSeq)
-              }
-              if (durs.nonEmpty && durs.last >= 50) // skip trivial stages
-                println(s"[tasklog] $n stage=$sid attempt=$att n=${durs.size} " +
-                  s"durMed=${durs(durs.size / 2)}ms durMax=${durs.last}ms " +
-                  s"srMed=${srs(srs.size / 2)}B srMax=${srs.last}B")
-            }
-          }
+          println(f"[laneprofile] $n%-26s $sec%.3fs " + counters.counts)
+          if (taskLog) counters.printTaskLog(n)
         }
       }
     }

@@ -32,37 +32,9 @@ object ProfileQuery {
       else if (name.startsWith("_scan:"))
         (s, dir) => Tables.load(s, dir, name.stripPrefix("_scan:"))
       else SparkEntry.queries(name)
-    // Count scheduler activity per run: jobs and stages are the fixed-cost
-    // units of local-mode latency (each stage wave ≈ tens of ms).
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.atomic.AtomicInteger
-    val tasks = new java.util.concurrent.atomic.AtomicInteger
-    // per-job wall clock (GRAFT_JOBLOG=1): shows which stage waves
-    // serialize on the critical path vs overlap
-    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); jobStart.put(j.jobId, System.nanoTime())
-      }
-      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        if (sys.env.contains("GRAFT_JOBLOG")) {
-          val t0 = Option(jobStart.get(j.jobId)).getOrElse(0L)
-          println(f"[job] id=${j.jobId} dur=${(System.nanoTime() - t0) / 1e6}%.0fms")
-        }
-      override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet(); tasks.addAndGet(s.stageInfo.numTasks)
-        if (sys.env.contains("GRAFT_JOBLOG")) {
-          val dur = for {
-            t0 <- s.stageInfo.submissionTime; t1 <- s.stageInfo.completionTime
-          } yield t1 - t0
-          println(s"[stage] id=${s.stageInfo.stageId} tasks=${s.stageInfo.numTasks} " +
-            s"dur=${dur.getOrElse(-1L)}ms exec=${s.stageInfo.taskMetrics.executorRunTime}ms " +
-            s"gc=${s.stageInfo.taskMetrics.jvmGCTime}ms " +
-            s"cpu=${s.stageInfo.taskMetrics.executorCpuTime / 1000000}ms " +
-            s"name=${s.stageInfo.name.takeWhile(_ != '\n').take(90)}")
-        }
-      }
-    })
+    // per-job/per-stage wall clock (GRAFT_JOBLOG=1): shows which stage
+    // waves serialize on the critical path vs overlap
+    val counters = RunCounters.attach(spark, jobLog = sys.env.contains("GRAFT_JOBLOG"))
     fn(spark, sfDir).count() // warm-up
     if (sys.env.contains("GRAFT_EXPLAIN")) {
       import spark.implicits._
@@ -70,7 +42,7 @@ object ProfileQuery {
     }
     val runs = sys.env.get("GRAFT_RUNS").map(_.toInt).getOrElse(3)
     for (i <- 1 to runs) {
-      jobs.set(0); stages.set(0); tasks.set(0)
+      counters.reset()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val t1 = System.nanoTime()
@@ -83,7 +55,7 @@ object ProfileQuery {
       Thread.sleep(100) // let listener events drain
       println(f"[profile] $name run$i build=${(t1 - t0) / 1e9}%.3fs " +
         f"plan=${(t15 - t1) / 1e9}%.3fs run=${(t2 - t15) / 1e9}%.3fs " +
-        s"jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get}")
+        counters.counts)
     }
     spark.stop()
   }
@@ -97,26 +69,17 @@ object ProfileQuery {
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val spark = GraftSession.create(
       cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), appName = "graft-profile")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.atomic.AtomicInteger
-    val tasks = new java.util.concurrent.atomic.AtomicInteger
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet(); tasks.addAndGet(s.stageInfo.numTasks)
-      }
-    })
+    val c = RunCounters.attach(spark)
     val rows = SparkEntry.benchQueries.map { n =>
       val fn = SparkEntry.queries(n)
       (1 to 2).foreach(_ => fn(spark, sfDir).count())
       Thread.sleep(150)
-      jobs.set(0); stages.set(0); tasks.set(0)
+      c.reset()
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val sec = (System.nanoTime() - t0) / 1e9
       Thread.sleep(150) // drain listener events
-      (n, sec, jobs.get, stages.get, tasks.get)
+      (n, sec, c.jobs.get, c.stages.get, c.tasks.get)
     }
     rows.sortBy(-_._2).foreach { case (n, sec, j, st, tk) =>
       println(f"[profile] $n%-28s ${sec}%.3fs jobs=$j stages=$st tasks=$tk")

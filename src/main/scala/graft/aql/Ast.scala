@@ -468,8 +468,8 @@ object Ast {
     * exact measure each index approximates (3-gram Jaccard ≥ t for
     * lsh, default 0.2; `(32−hamming)/32 ≥ t` for simhash, default
     * 29/32 — Hamming ≤ 3, the pigeonhole bound of the 4-band layout;
-    * cosine ≥ t for ivf, default 0.99 — the ANN gate's near-dup
-    * default, so the VECTOR corpus gets the same funnel). */
+    * cosine ≥ t for ivf, default 0.99, so the VECTOR corpus gets the
+    * same funnel; the near-dup ingest gate shares the defaults). */
   final case class ShowDedup(container: String, ix: Option[String],
       threshold: Option[Double] = None,
       /** `AT VERSION n` — the funnel over a committed snapshot (each

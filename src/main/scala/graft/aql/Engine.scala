@@ -2790,15 +2790,13 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
   /** The reference index of a near-dup statement on `c` and its verify
     * threshold: the named (or the only) lsh/simhash/ivf index, after the
     * AT VERSION check. The threshold is the statement's, else the kind's
-    * default on its exact measure: lsh Jaccard 0.2 (the curation lane's),
-    * simhash 29/32 (Hamming ≤ 3, the pigeonhole recall bound of the
-    * 4-band layout), ivf cosine 0.99 (the ANN ingest gate's). */
+    * default on its exact measure (`TextDedup.defaultThreshold`). */
   private def nearDupIndex(c: String, ixOpt: Option[String],
       thrOpt: Option[Double], atVersion: Option[Int],
       what: String): (graft.catalog.Index.Def, Double) = {
     requireCommittedVersion(c, atVersion)
     val defs = catalog.indexDefs(c)
-      .filter(x => x.kind == "lsh" || x.kind == "simhash" || x.kind == "ivf")
+      .filter(x => graft.operators.TextDedup.nearDupKinds(x.kind))
     val idef = ixOpt match {
       case Some(n) => defs.find(_.ix == n).getOrElse(throw new ParseException(
         s"No lsh/simhash/ivf index '$n' on '$c'"))
@@ -2812,11 +2810,7 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
             s"(${many.map(_.ix).mkString(", ")}) — pick one with USING")
       }
     }
-    (idef, thrOpt.getOrElse(idef.kind match {
-      case "lsh" => 0.2
-      case "simhash" => 29.0 / 32.0
-      case _ => 0.99
-    }))
+    (idef, thrOpt.getOrElse(graft.operators.TextDedup.defaultThreshold(idef.kind)))
   }
 
   /** Build the [[Funnel]] of `container` — within itself (`against`

@@ -376,8 +376,7 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
 
   /** Candidate lookup for `queries` (rows shaped like the container):
     * near-dup candidates from an lsh/simhash band index, ANN candidates
-    * from an ivf index — see [[Index.lshLookup]] / [[Index.simhashLookup]]
-    * / [[Index.ivfLookup]]. */
+    * from an ivf index — see [[Index.bandLookup]] / [[Index.ivfLookup]]. */
   def indexLookup(name: String, ix: String, queries: DataFrame,
       at: Option[Int] = None, nprobe: Int = 1,
       selfExclude: Boolean = true): DataFrame = {
@@ -386,8 +385,8 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     require(nprobe == 1 || d.kind == "ivf",
       s"nprobe applies to ivf indexes only; '$ix' is a ${d.kind} index")
     d.kind match {
-      case "lsh" => Index.lshLookup(this, name, d, queries, at, selfExclude)
-      case "simhash" => Index.simhashLookup(this, name, d, queries, at, selfExclude)
+      case "lsh" | "simhash" =>
+        Index.bandLookup(this, name, d, queries, at, selfExclude)
       case "ivf" => Index.ivfLookup(this, name, d, queries, nprobe, at = at,
         selfExclude = selfExclude)
       case "text" => sys.error(

@@ -550,42 +550,26 @@ object Index {
       .parquet(ixDir(cat, container, v, idef.ix).toString)
   }
 
-  /** Near-dup lookup served from an `lsh` index: derive the query docs'
-    * band keys (a pure projection over the handful of probe documents),
-    * then scan the index filtered to those LITERAL keys. The collected key
-    * list is bounded per-lookup metadata (≤4 bands × #query docs), the
-    * IVF-probe-list idiom — never data.
-    */
-  def lshLookup(cat: Catalog, container: String, idef: Def,
-      queries: DataFrame, at: Option[Int] = None,
-      selfExclude: Boolean = true): DataFrame = {
-    require(idef.kind == "lsh", s"index '${idef.ix}' is not an lsh index")
-    bandLookup(cat, container, idef, queries,
-      deriveLsh(_, idef.analyzer), at, selfExclude)
-  }
-
-  /** Near-dup lookup from a `simhash` index — identical serving shape to
-    * [[lshLookup]] over the simhash banding. */
-  def simhashLookup(cat: Catalog, container: String, idef: Def,
-      queries: DataFrame, at: Option[Int] = None,
-      selfExclude: Boolean = true): DataFrame = {
-    require(idef.kind == "simhash", s"index '${idef.ix}' is not a simhash index")
-    bandLookup(cat, container, idef, queries,
-      deriveSimhash(_, idef.analyzer), at, selfExclude)
-  }
-
-  /** `selfExclude = false` serves LITERAL (non-corpus) probes — a
+  /** Near-dup lookup served from an `lsh` or `simhash` index: derive the
+    * query docs' band keys (a pure projection over the handful of probe
+    * documents), then scan the index filtered to those LITERAL keys. The
+    * collected key list is bounded per-lookup metadata (≤4 bands ×
+    * #query docs), the IVF-probe-list idiom — never data.
+    *
+    * `selfExclude = false` serves LITERAL (non-corpus) probes — a
     * query-by-text SIMILAR or an ingest-gate check probes with a
     * synthetic qid that names no corpus row, so excluding `id === qid`
     * would be meaningless at best and (on an unlucky sentinel collision)
     * silently lossy. */
-  private def bandLookup(cat: Catalog, container: String, idef: Def,
-      queries: DataFrame, derive: DataFrame => DataFrame,
-      at: Option[Int] = None, selfExclude: Boolean = true): DataFrame = {
+  def bandLookup(cat: Catalog, container: String, idef: Def,
+      queries: DataFrame, at: Option[Int] = None,
+      selfExclude: Boolean = true): DataFrame = {
+    require(idef.kind == "lsh" || idef.kind == "simhash",
+      s"index '${idef.ix}' is not an lsh or simhash index")
     val pk = cat.get(container).primaryKey
-    val qBands = derive(queries
+    val qBands = deriveBands(queries
         .select(col(pk).as("id"), col(idef.column).as("text"))
-        .withColumn("src", lit("query")))
+        .withColumn("src", lit("query")), idef.kind, idef.analyzer)
       .select(col("id").as("qid"), col("band").as("qband"), col("bk").as("qbk"))
     val keys = qBands.select(col("qbk")).distinct().collect().map(_.getString(0))
     val selfGuard =
@@ -685,9 +669,9 @@ object Index {
   /** Query-side cell assignment against an ivf index's frozen centroids:
     * (qid, qcluster) — each query row's `nprobe` nearest cells, the same
     * numbers (d2 rounded to 6, seed-id tie-break) the committed
-    * assignment uses. Shared by [[ivfLookup]] and the streaming ANN
-    * ingest gate's within-batch candidate generation
-    * (`EmbeddingStreams.annDedupBatch` — batch-vs-batch candidates must
+    * assignment uses. Shared by [[ivfLookup]] and the streaming near-dup
+    * ingest gate's within-batch candidate generation on ivf
+    * (`IngestSinks.nearDupBatch` — batch-vs-batch candidates must
     * use the INDEX's cell geometry, so results never depend on how
     * arrivals were batched). */
   private[graft] def ivfAssign(cat: Catalog, container: String, idef: Def,
@@ -1104,12 +1088,9 @@ object Index {
       rows: DataFrame): DataFrame = {
     requireBandTokV(d.name, idef)
     idef.kind match {
-      case "lsh" =>
-        deriveLsh(rows.select(col(d.primaryKey).as("id"),
-          col(idef.column).as("text"), col("src")), idef.analyzer)
-      case "simhash" =>
-        deriveSimhash(rows.select(col(d.primaryKey).as("id"),
-          col(idef.column).as("text"), col("src")), idef.analyzer)
+      case "lsh" | "simhash" =>
+        deriveBands(rows.select(col(d.primaryKey).as("id"),
+          col(idef.column).as("text"), col("src")), idef.kind, idef.analyzer)
       case "text" =>
         deriveText(rows.select(col(d.primaryKey).as("id"),
           col(idef.column).as("text"), col("src")),
@@ -1177,35 +1158,21 @@ object Index {
       c.getField("sid").as("sid"))))
   }
 
-  /** (id, text, src) → (id, band, bk, src): the MinHash shingle →
-    * signature → band derivation shared with the fixture-side LSH paths
-    * (`operators/TextDedup`), with `src` carried through the aggregation
-    * (functionally dependent on `id`, so the minima are unchanged).
-    */
-  private def deriveLsh(docs: DataFrame,
-      analyzer: String = graft.operators.Analyzer.Whitespace): DataFrame = {
-    import graft.operators.TextDedup.{bandsOf, withShingles, withSignatures}
-    bandsOf(withSignatures(
-        withShingles(docs.withColumnRenamed("id", "doc_id"), analyzer),
-        Seq("doc_id", "src")), Seq("doc_id", "src"))
-      .select(col("doc_id").as("id"), col("band"), col("bk"), col("src"))
-  }
-
-  /** (id, text, src) → (id, band, bk, src): the simhash-32 banding shared
-    * with `dd_simhash_neardup` — 4 bands of 8 bits, band key `"b:v"`
+  /** (id, text, src) → (id, band, bk, src): the band keys of an lsh or
+    * simhash index (`TextDedup.bandKeys` — the banding the fixture-side
+    * lanes and the funnels' probe side share), with `src` carried
+    * through the aggregation (functionally dependent on `id`, so the
+    * minima and signatures are unchanged). simhash keys are `"b:v"`
     * (band qualifies the bucket value so the single `bk` prune column
-    * stays selective across bands, matching the lsh index's shape). Two
-    * docs within Hamming distance 3 of each other share at least one
-    * unchanged band (pigeonhole), so candidates = near-dups plus a
-    * verifiable false-positive tail, exactly like the banded batch query.
+    * stays selective across bands). Two docs within Hamming distance 3
+    * share at least one unchanged simhash band (pigeonhole), so
+    * candidates = near-dups plus a verifiable false-positive tail.
     */
-  private def deriveSimhash(docs: DataFrame,
-      analyzer: String = graft.operators.Analyzer.Whitespace): DataFrame = {
-    import graft.operators.TextDedup.{simhashBands, withSimhash}
-    simhashBands(withSimhash(docs.withColumnRenamed("id", "doc_id"),
-        Seq("doc_id", "src"), analyzer), Seq("doc_id", "src"))
+  private def deriveBands(docs: DataFrame, kind: String,
+      analyzer: String): DataFrame =
+    graft.operators.TextDedup.bandKeys(docs.withColumnRenamed("id", "doc_id"),
+        kind, analyzer, Seq("doc_id", "src"))
       .select(col("doc_id").as("id"), col("band"), col("bk"), col("src"))
-  }
 
   /** (id, text, src) → (id, term, tf, dl, pos, src): inverted postings
     * under the ONE tokenization shared with the fixture-side full-text

@@ -533,14 +533,8 @@ object TextDedup {
     * never payloads, never an all-pairs join. */
   private[graft] def bandCollisions(probe: DataFrame, ixRows: DataFrame,
       kind: String, analyzer: String): DataFrame = {
-    val probeBands = (kind match {
-      case "lsh" => bandsOf(withSignatures(
-        withShingles(probe, analyzer), Seq("doc_id")), Seq("doc_id"))
-      case "simhash" => simhashBands(
-        withSimhash(probe, Seq("doc_id"), analyzer), Seq("doc_id"))
-      case other => throw new IllegalArgumentException(
-        s"bandCollisions serves lsh/simhash, got '$other'")
-    }).select(col("doc_id").as("id_a"), col("band"), col("bk"))
+    val probeBands = bandKeys(probe, kind, analyzer)
+      .select(col("doc_id").as("id_a"), col("band"), col("bk"))
       // EXPLICIT id not-null (round 17, guide §2.4): downstream verify
       // joins make the optimizer INFER `isnotnull(id_a)` into some
       // copies of this subtree and not others (a consumer that projects
@@ -554,6 +548,37 @@ object TextDedup {
     probeBands.hint("shuffle_hash")
       .join(ixRows.filter(col("id_b").isNotNull), Seq("band", "bk"))
       .select(col("id_a"), col("id_b")).distinct()
+  }
+
+  /** (keys…, band, bk) for (keys…, text) rows: the band keys of a band
+    * index kind — minhash bands over 3-gram shingles (lsh), byte bands
+    * of the simhash-32 signature (simhash) — under `analyzer`. The one
+    * banding of the committed band indexes, the cross funnels' probe
+    * side and the near-dup ingest gate's within-batch pairing. Docs
+    * with no shingle or no token have no band keys. */
+  private[graft] def bandKeys(docs: DataFrame, kind: String,
+      analyzer: String, keys: Seq[String] = Seq("doc_id")): DataFrame =
+    kind match {
+      case "lsh" => bandsOf(withSignatures(withShingles(docs, analyzer), keys), keys)
+      case "simhash" => simhashBands(withSimhash(docs, keys, analyzer), keys)
+      case other => throw new IllegalArgumentException(
+        s"no band keys for a '$other' index")
+    }
+
+  /** The index kinds a near-dup funnel or ingest gate serves from. */
+  private[graft] val nearDupKinds = Set("lsh", "simhash", "ivf")
+
+  /** A near-dup index kind's default verify threshold on its
+    * [[exactScore]]: lsh Jaccard 0.2 (the curation lane's), simhash
+    * 29/32 (Hamming ≤ 3, the pigeonhole recall bound of the 4-band
+    * layout), ivf cosine 0.99. The statements and the ingest gate take
+    * it when no threshold is given. */
+  private[graft] def defaultThreshold(kind: String): Double = kind match {
+    case "lsh" => 0.2
+    case "simhash" => 29.0 / 32.0
+    case "ivf" => 0.99
+    case other => throw new IllegalArgumentException(
+      s"no near-dup threshold for a '$other' index")
   }
 
   /** An index kind's exact measure, defined once for every consumer:

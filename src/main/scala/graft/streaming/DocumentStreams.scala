@@ -256,17 +256,13 @@ object DocumentStreams {
   def ingestToCatalog(docs: DataFrame, catalog: graft.catalog.Catalog,
       container: String): org.apache.spark.sql.streaming.DataStreamWriter[
       org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) { catalog.append(container, batch); () }
-      }
+    IngestSinks.sink(docs)(IngestSinks.land(catalog, container, _))
 
   /** Decontamination-gated ingest (round 14) — the DECONTAMINATE
-    * statement's streaming sibling, the third gate next to
-    * [[dedupIngestToCatalog]] and `EmbeddingStreams.annIngestToCatalog`:
-    * each micro-batch drops (a) rows whose pk is already committed
-    * (at-least-once replay idempotence, the pk-range-pruned anti-join
-    * every gate uses) and (b) documents whose distinct-4-gram overlap
+    * statement's streaming sibling, the gate next to
+    * `IngestSinks.nearDupIngestToCatalog`: each micro-batch drops (a)
+    * rows whose pk is already committed (`IngestSinks.unseen`, the replay
+    * guard every gate uses) and (b) documents whose distinct-4-gram overlap
     * with the committed EVAL container reaches `threshold` — computed by
     * the SAME `TextDedup.contaminationFractions` derivation the batch
     * statement applies, so ingest-time and after-the-fact curation can
@@ -286,12 +282,8 @@ object DocumentStreams {
       broadcastCap: Int = graft.catalog.Settings.default.decontBroadcastCap,
       analyzer: String = graft.operators.Analyzer.Whitespace)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          decontBatch(batch, catalog, container, against, textCol, threshold,
-            grams, spans, broadcastCap, analyzer)
-      }
+    IngestSinks.sink(docs)(decontBatch(_, catalog, container, against,
+      textCol, threshold, grams, spans, broadcastCap, analyzer))
 
   private[graft] def decontBatch(batch: DataFrame,
       catalog: graft.catalog.Catalog, container: String, against: String,
@@ -300,33 +292,29 @@ object DocumentStreams {
       broadcastCap: Int = graft.catalog.Settings.default.decontBroadcastCap,
       analyzer: String = graft.operators.Analyzer.Whitespace): Unit = {
     val pk = catalog.get(container).primaryKey
-    // (a) replay idempotence: pk-range-pruned anti-join (the gate idiom)
-    val bounds = batch.agg(min(col(pk)), max(col(pk))).head()
-    val committedInRange = catalog.read(container).select(col(pk))
-      .filter(col(pk).between(lit(bounds.get(0)), lit(bounds.get(1))))
-    val fresh = batch.join(committedInRange, Seq(pk), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // (b) the contamination gate — ONE measure definition shared with
-      // DECONTAMINATE / SHOW DECONTAMINATE: gram size n (= spans length
-      // in span mode), any-hit rule under spans, and the same broadcast
-      // count-guard (a bounded limit(cap+1).count() per batch — the eval
-      // set re-derives per batch anyway, so the guard rides that read)
-      val n = spans.getOrElse(grams)
-      val evalGrams = graft.operators.TextDedup.evalGramSet(
-        catalog.read(against).select(col(textCol).as("text")), n, analyzer)
-      val evalBounded = evalGrams.limit(broadcastCap + 1).count() <= broadcastCap
-      val removePred =
-        if (spans.isDefined) col("n_contaminated") >= 1
-        else col("contamination") >= threshold
-      val contaminated = graft.operators.TextDedup.contaminationFractions(
-          fresh.select(col(pk).as("doc_id"), col(textCol).as("text")),
-          evalGrams, n = n, broadcastEval = evalBounded, analyzer = analyzer)
-        .filter(removePred)
-        .select(col("doc_id").as(pk))
-      val kept = fresh.join(contaminated, Seq(pk), "left_anti")
-      if (!kept.isEmpty) { catalog.append(container, kept); () }
-    } finally fresh.unpersist(blocking = false)
+    // (a) replay idempotence
+    for (unseen <- IngestSinks.unseen(batch, pk, catalog.read(container)))
+      IngestSinks.persisted(unseen) { fresh =>
+        // (b) the contamination gate — ONE measure definition shared with
+        // DECONTAMINATE / SHOW DECONTAMINATE: gram size n (= spans length
+        // in span mode), any-hit rule under spans, and the same broadcast
+        // count-guard (a bounded limit(cap+1).count() per batch — the eval
+        // set re-derives per batch anyway, so the guard rides that read)
+        val n = spans.getOrElse(grams)
+        val evalGrams = graft.operators.TextDedup.evalGramSet(
+          catalog.read(against).select(col(textCol).as("text")), n, analyzer)
+        val evalBounded = evalGrams.limit(broadcastCap + 1).count() <= broadcastCap
+        val removePred =
+          if (spans.isDefined) col("n_contaminated") >= 1
+          else col("contamination") >= threshold
+        val contaminated = graft.operators.TextDedup.contaminationFractions(
+            fresh.select(col(pk).as("doc_id"), col(textCol).as("text")),
+            evalGrams, n = n, broadcastEval = evalBounded, analyzer = analyzer)
+          .filter(removePred)
+          .select(col("doc_id").as(pk))
+        IngestSinks.land(catalog, container,
+          fresh.join(contaminated, Seq(pk), "left_anti"))
+      }
   }
 
   /** Upserting ingest — the CDC-consumer shape: each micro-batch lands as
@@ -352,158 +340,26 @@ object DocumentStreams {
   def upsertIngestToCatalog(rows: DataFrame, catalog: graft.catalog.Catalog,
       container: String, orderCol: Option[String] = None)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val pk = catalog.get(container).primaryKey
-          val src = orderCol match {
-            case Some(oc) =>
-              val others = batch.columns.filter(c => c != pk && c != oc)
-              val w = org.apache.spark.sql.expressions.Window
-                .partitionBy(col(pk))
-                .orderBy(col(oc).desc +: others.map(col(_).asc): _*)
-              // case-insensitive: withColumn/drop resolve that way
-              val rn = Iterator.iterate("__rn")(_ + "_")
-                .dropWhile(n => batch.columns.exists(_.equalsIgnoreCase(n))).next()
-              batch.withColumn(rn, row_number().over(w))
-                .filter(col(rn) === 1).drop(rn)
-            case None => batch
-          }
-          new graft.catalog.Tx(catalog).mergeRows(container, src)
-          ()
+    IngestSinks.sink(rows) { batch =>
+      if (!batch.isEmpty) {
+        val pk = catalog.get(container).primaryKey
+        val src = orderCol match {
+          case Some(oc) =>
+            val others = batch.columns.filter(c => c != pk && c != oc)
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy(col(pk))
+              .orderBy(col(oc).desc +: others.map(col(_).asc): _*)
+            // case-insensitive: withColumn/drop resolve that way
+            val rn = Iterator.iterate("__rn")(_ + "_")
+              .dropWhile(n => batch.columns.exists(_.equalsIgnoreCase(n))).next()
+            batch.withColumn(rn, row_number().over(w))
+              .filter(col(rn) === 1).drop(rn)
+          case None => batch
         }
+        new graft.catalog.Tx(catalog).mergeRows(container, src)
+        ()
       }
-
-  /** Deduplicating ingest: [[ingestToCatalog]] with a near-dup GATE served
-    * by the container's commit-maintained lsh index — each micro-batch
-    * drops exact and verified near-duplicates of the ENTIRE already-
-    * committed corpus (plus duplicates within the batch), then appends
-    * the survivors; the commit updates the index inside the same atomic
-    * publish, so the NEXT batch dedups against this one with no rebuild.
-    * This is the serving shape of ingest-time dedup at 100 TB: lookup
-    * cost ∝ the batch's band keys (bucket-pruned index scan, never a
-    * corpus re-shingle), and the exact-Jaccard verify touches only
-    * band-colliding candidate pairs — false band collisions ingest
-    * normally instead of being silently dropped.
-    *
-    * `docs` must be shaped like the container (pk + the indexed TEXT
-    * column). Keep-first convention: history wins over the batch, and
-    * the lower pk wins within a batch (matching `dd_cluster_keepers`).
-    */
-  def dedupIngestToCatalog(docs: DataFrame, catalog: graft.catalog.Catalog,
-      container: String, ix: String, threshold: Double = 0.5)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) dedupBatch(batch, catalog, container, ix, threshold)
-      }
-
-  /** Largest candidate-id list fetched by literal point lookup (the
-    * stats-pruned fast path); above it the fetch falls back to a
-    * semi-join, which never materializes ids on the driver. */
-  private val MaxCandidateLiterals = 20000
-
-  /** One micro-batch of the dedup gate: drop (a) rows whose pk is already
-    * committed (at-least-once REPLAY idempotence — a redelivered batch's
-    * rows are their own committed twins, which the index lookup's
-    * `id =!= qid` filter deliberately ignores), (b) verified near-dups of
-    * committed docs — candidates from the persisted band index, exact
-    * 3-gram Jaccard ≥ `threshold` confirms — and (c) within-batch
-    * duplicates (exact text keep-lowest-pk, plus band-colliding pairs
-    * that verify); then append the survivors. Persisted once and reused —
-    * the gate's plan executes a single time per micro-batch.
-    */
-  private[graft] def dedupBatch(batch: DataFrame, catalog: graft.catalog.Catalog,
-      container: String, ix: String, threshold: Double): Unit = {
-    import graft.operators.TextDedup.{bandsOf, withShingles, withSignatures}
-    val d = catalog.get(container)
-    val pk = d.primaryKey
-    val idef = catalog.indexDefs(container).find(_.ix == ix)
-      .getOrElse(sys.error(s"No index '$ix' on '$container'"))
-    val textCol = idef.column
-    def shingled(df: DataFrame, idOut: String, sgOut: String): DataFrame =
-      withShingles(df.select(col(pk).as("doc_id"), col(textCol).as("text")),
-          idef.analyzer) // the INDEX's analyzer — gate ≡ the funnel
-        .select(col("doc_id").as(idOut), array_distinct(col("sg")).as(sgOut))
-    def verified(pairs: DataFrame, left: DataFrame, right: DataFrame): DataFrame = {
-      // exact Jaccard on distinct shingles; candidate pairs only — the
-      // all-pairs product never forms. Short docs (no shingles) can band-
-      // collide on the empty signature but share nothing: union 0 → not dups
-      val j = when(size(array_union(col("sga"), col("sgb"))) === 0, lit(0.0))
-        .otherwise(size(array_intersect(col("sga"), col("sgb"))).cast("double") /
-          size(array_union(col("sga"), col("sgb"))))
-      pairs.join(left, "ida").join(right, "idb")
-        .filter(j >= threshold)
-        .select(col("ida"))
     }
-    // (a) replay idempotence + batch-internal exact dedup. Already-
-    // committed pks are found with a pk-RANGE-pruned anti-join: the
-    // batch's [min,max] pk bounds are two literals, so the corpus side is
-    // a stats-pruned file subset on the clustered layout, and the batch
-    // side broadcasts. Marker carries a nonce — "__rn" is a legal
-    // container column name (the Tx.Edit marker idiom).
-    val rn = s"__dedup_rn_${java.util.UUID.randomUUID().toString.take(8)}"
-    val perText = org.apache.spark.sql.expressions.Window
-      .partitionBy(md5(col(textCol))).orderBy(col(pk))
-    val bounds = batch.agg(min(col(pk)), max(col(pk))).head()
-    val committedInRange = catalog.read(container).select(col(pk))
-      .filter(col(pk).between(lit(bounds.get(0)), lit(bounds.get(1))))
-    val exactKept = batch
-      .join(committedInRange, Seq(pk), "left_anti")
-      .withColumn(rn, row_number().over(perText))
-      .filter(col(rn) === 1).drop(rn)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // (b) history near-dups: bucket-pruned index lookup, then verify
-      // against ONLY the candidate docs. Small candidate sets fetch via
-      // literal point lookup (stats-pruned on the pk-clustered layout);
-      // large ones (heavy sub-threshold band sharing, e.g. boilerplate
-      // corpora) fall back to a semi-join — correct at any cardinality,
-      // nothing corpus-sized ever materializes on the driver.
-      val histCands = catalog.indexLookup(container, ix, exactKept)
-        .select(col("qid").as("ida"), col("cand").as("idb"))
-      val candIds = histCands.select(col("idb")).distinct()
-        .limit(MaxCandidateLiterals + 1).collect().map(_.get(0))
-      val candDocs =
-        if (candIds.length <= MaxCandidateLiterals)
-          catalog.read(container).filter(col(pk).isin(candIds.toIndexedSeq: _*))
-        else catalog.read(container).join(
-          histCands.select(col("idb").as(pk)).distinct(), Seq(pk), "left_semi")
-      val histDups =
-        if (candIds.isEmpty) exactKept.select(col(pk).as("ida")).limit(0)
-        else verified(histCands,
-          shingled(exactKept, "ida", "sga"),
-          shingled(candDocs, "idb", "sgb"))
-      // (c) within-batch near-dups: band self-join (candidates only),
-      // keep the lower pk of each verified pair. Banding matches the
-      // INDEX KIND, so within-batch coverage has the same edit-class
-      // robustness as the cross-batch history lookup — results must not
-      // depend on how arrivals happen to be batched
-      val batchDocs = exactKept.select(col(pk).as("doc_id"), col(textCol).as("text"))
-      val batchBands = idef.kind match {
-        case "simhash" => graft.operators.TextDedup.simhashBands(
-          graft.operators.TextDedup.withSimhash(batchDocs, Seq("doc_id"),
-            idef.analyzer))
-        case _ => bandsOf(withSignatures(
-          withShingles(batchDocs, idef.analyzer), Seq("doc_id")), Seq("doc_id"))
-      }
-      val a = batchBands.as("a"); val b = batchBands.as("b")
-      val batchCands = a.join(b,
-          col("a.band") === col("b.band") && col("a.bk") === col("b.bk")
-            && col("a.doc_id") < col("b.doc_id"))
-        .select(col("b.doc_id").as("ida"), col("a.doc_id").as("idb"))
-        .distinct()
-      val batchShingles = shingled(exactKept, "ida", "sga")
-      val batchDups = verified(batchCands, batchShingles,
-        batchShingles.select(col("ida").as("idb"), col("sga").as("sgb")))
-      val dropIds = histDups.unionByName(batchDups).distinct()
-        .select(col("ida").as(pk))
-      val kept = exactKept.join(dropIds, Seq(pk), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try { if (!kept.isEmpty) { catalog.append(container, kept); () } }
-      finally kept.unpersist(blocking = false)
-    } finally exactKept.unpersist(blocking = false)
-  }
 
   /** Ingest-time image decode — the streaming twin of
     * `Multimodal.decodeImages`: the REAL javax.imageio parse runs as a

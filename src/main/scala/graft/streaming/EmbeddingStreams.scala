@@ -37,135 +37,14 @@ object EmbeddingStreams {
       .select(col("vec_id"), col("best.sid").as("cluster"), col("best.d2").as("d2"))
   }
 
-  /** Deduplicating VECTOR ingest (round 13) — the ANN sibling of
-    * `DocumentStreams.dedupIngestToCatalog`: each micro-batch is gated
-    * against the ENTIRE already-committed corpus through the container's
-    * commit-maintained `ivf` index (cell probe + exact-cosine verify on
-    * the probed candidates ONLY), plus within-batch near-dups via the
-    * SAME cell geometry; survivors append as one atomic COW commit whose
-    * hook updates the index, so the next batch dedups against this one
-    * with no rebuild. The serving shape of embedding-dedup at 100 TB:
-    * probe cost ∝ the batch's ≤1 cell per row (bucket-pruned index
-    * scan), the verify reads candidate vectors FROM the probed index
-    * lists (cand_emb — never a corpus-side fetch), and nothing
-    * all-pairs ever forms.
-    *
-    * `vecs` must be shaped like the container (pk + the indexed
-    * packed-float32 BYTES column). Keep-first: history wins over the
-    * batch, the lower pk wins within a batch. Rows with NULL /
-    * undecodable vectors ingest normally (they can never be ANN
-    * candidates); zero-norm vectors have no defined angle and likewise
-    * pass the gate.
-    */
-  def annIngestToCatalog(vecs: DataFrame, catalog: graft.catalog.Catalog,
-      container: String, ix: String, threshold: Double = 0.99)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) annDedupBatch(batch, catalog, container, ix, threshold)
-      }
-
-  /** One micro-batch of the ANN gate: drop (a) rows whose pk is already
-    * committed (at-least-once replay idempotence — the pk-RANGE-pruned
-    * anti-join of the text gate), and byte-identical within-batch
-    * vectors (keep-lowest-pk per md5 of the packed payload); (b)
-    * verified cosine near-dups of committed vectors — candidates from
-    * the persisted ivf index, whose list rows CARRY the candidate vector
-    * (cand_emb), so the verify is index-local; (c) within-batch
-    * near-dups — history-gate SURVIVORS assigned to the index's frozen
-    * cells (`Index.ivfAssign`), same-cell pairs cosine-verified (both
-    * gates compare the rounded `TextDedup.exactScore`), lower
-    * pk kept; rows stage (b) drops never join the pairing, so one-batch
-    * and split delivery agree. Then append the survivors. */
-  private[graft] def annDedupBatch(batch: DataFrame,
-      catalog: graft.catalog.Catalog, container: String, ix: String,
-      threshold: Double): Unit = {
-    import graft.operators.TextDedup.exactScore
-    import graft.functions.Float32Unpack.float32Unpack
-    val d = catalog.get(container)
-    val pk = d.primaryKey
-    val idef = catalog.indexDefs(container).find(_.ix == ix)
-      .getOrElse(sys.error(s"No index '$ix' on '$container'"))
-    require(idef.kind == "ivf",
-      s"ANN ingest gate serves from an ivf index; '$ix' is a ${idef.kind} index")
-    val embCol = idef.column
-    // (a) replay idempotence (stats-pruned pk-range anti-join, the text
-    // gate's shape) + within-batch byte-exact dedup. NULL-payload rows
-    // bypass the md5 partition (each is its own group keyed by pk) —
-    // grouping them together would wrongly keep only one.
-    val rn = s"__ann_rn_${java.util.UUID.randomUUID().toString.take(8)}"
-    val perVec = org.apache.spark.sql.expressions.Window
-      .partitionBy(when(col(embCol).isNull, concat(lit("pk:"), col(pk).cast("string")))
-        .otherwise(md5(col(embCol))))
-      .orderBy(col(pk))
-    val bounds = batch.agg(min(col(pk)), max(col(pk))).head()
-    val committedInRange = catalog.read(container).select(col(pk))
-      .filter(col(pk).between(lit(bounds.get(0)), lit(bounds.get(1))))
-    val exactKept = batch
-      .join(committedInRange, Seq(pk), "left_anti")
-      .withColumn(rn, row_number().over(perVec))
-      .filter(col(rn) === 1).drop(rn)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val qEmb = exactKept
-        .select(col(pk).as("ida"), float32Unpack(col(embCol)).as("va"))
-      // (b) history near-dups: bucket-pruned cell probe; candidate
-      // vectors ride the index lists (cand_emb), so the verify never
-      // touches the corpus — EXCEPT candidates served from parts
-      // hard-link-carried from a pre-emb build (cand_emb NULL; exactly
-      // the legacy case the SCORED rerank falls back on): dropping them
-      // to the cosine-of-NULL filter would silently disable history
-      // dedup for those rows, so an UNMARKED index fills the missing
-      // vectors with a pk join against the snapshot (min-pick on
-      // duplicate pks, the ivfLookup stance); a marked index skips the
-      // branch outright. A NULL cosine (zero norm) verifies nothing.
-      val rawCands = catalog.indexLookup(container, ix, exactKept)
-      val histCands = withTrueCandVectors(rawCands, catalog, container,
-        idef, pk, embCol)
-      val histDups = histCands
-        .join(qEmb, col("qid") === col("ida"))
-        .filter(exactScore("ivf", col("va"), float32Unpack(col("cand_emb")))
-          >= threshold)
-        .select(col("ida"))
-      // (c) within-batch near-dups: the INDEX's cell geometry on both
-      // sides (results must not depend on how arrivals were batched),
-      // same-cell pairs only, keep the lower pk of each verified pair.
-      // Pairs form among HISTORY-GATE SURVIVORS only: a row the history
-      // gate drops in this same batch must not drag its batch-mates
-      // down with it — split delivery would have committed nothing for
-      // the dropped row to pair against, so pairing against it here
-      // would make the outcome depend on how arrivals were batched
-      // (the near-threshold triple Y~X, X~committed, Y!~committed).
-      val histSurvivors = exactKept
-        .join(histDups.select(col("ida").as(pk)), Seq(pk), "left_anti")
-      val assign = graft.catalog.Index.ivfAssign(catalog, container, idef, histSurvivors)
-      val a = assign.as("a"); val b = assign.as("b")
-      val batchCands = a.join(b,
-          col("a.qcluster") === col("b.qcluster") && col("a.qid") < col("b.qid"))
-        .select(col("b.qid").as("ida"), col("a.qid").as("idb"))
-        .distinct()
-      val batchDups = batchCands
-        .join(qEmb, Seq("ida"))
-        .join(qEmb.select(col("ida").as("idb"), col("va").as("vb")), Seq("idb"))
-        .filter(exactScore("ivf", col("va"), col("vb")) >= threshold)
-        .select(col("ida"))
-      val dropIds = histDups.unionByName(batchDups).distinct()
-        .select(col("ida").as(pk))
-      val kept = exactKept.join(dropIds, Seq(pk), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try { if (!kept.isEmpty) { catalog.append(container, kept); () } }
-      finally kept.unpersist(blocking = false)
-    } finally exactKept.unpersist(blocking = false)
-  }
-
   /** True candidate vectors for raw ivf-lookup rows (qid, cand,
     * cand_emb): index-local when every list row carries the float32
     * vector; snapshot pk-join for int8 lists (they carry SQ8 CODES —
     * an exact-cosine decision must not move with the quantization
     * grid) and for legacy NULL-emb carries (parts hard-linked from a
     * pre-emb build). Min-pick on duplicate pks, the ivfLookup stance.
-    * Shared by the ANN dedup gate and the k-NN enrichment. */
-  private def withTrueCandVectors(rawCands: DataFrame,
+    * Shared by the near-dup ingest gate and the k-NN enrichment. */
+  private[streaming] def withTrueCandVectors(rawCands: DataFrame,
       catalog: graft.catalog.Catalog, container: String,
       idef: graft.catalog.Index.Def, pk: String, embCol: String): DataFrame =
     if (idef.int8)
@@ -306,22 +185,20 @@ object EmbeddingStreams {
   def knnEnrichToCatalog(vecs: DataFrame, catalog: graft.catalog.Catalog,
       against: String, ix: String, sink: String, k: Int, nprobe: Int = 1)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        knnEnrichCommitBatch(batch, catalog, against, ix, sink, k, nprobe)
-      }
+    IngestSinks.sink(vecs)(
+      knnEnrichCommitBatch(_, catalog, against, ix, sink, k, nprobe))
 
   /** One micro-batch of the enrichment sink (round 17, r16 advisor):
     * cross-restart replay idempotence. foreachBatch is at-least-once —
     * a crash after `catalog.append` but before the checkpoint offset
     * commit redelivers the micro-batch, and un-guarded it would append
-    * duplicate (pk, match_id, rank) rows. Same guard idiom as every
-    * other ingest sink here (the pk-RANGE-pruned anti-join, parquet
-    * min/max stats prune the sink scan): a probe pk that already has
+    * duplicate (pk, match_id, rank) rows. The replay guard of every
+    * gated sink (`IngestSinks.unseen`, a pk-range-pruned anti-join
+    * against the sink's committed rows): a probe pk that already has
     * enrichment rows committed in `sink` is dropped BEFORE the
     * enrichment pipeline runs — replay of a committed batch probes the
     * index zero times. The sink commit is atomic, so a batch's probes
-    * are all-committed or none. Identity stance matches the ANN gate:
+    * are all-committed or none. Identity stance matches the near-dup gate:
     * a pk is enriched ONCE — a re-arrival with a different vector is a
     * replay, not an update (route updates through the upsert ingest).
     * A probe whose vector is undecodable enriches to nothing and so is
@@ -332,30 +209,17 @@ object EmbeddingStreams {
       sink: String, k: Int, nprobe: Int): Unit = {
     val pk = catalog.get(against).primaryKey
     val sinkPk = catalog.get(sink).primaryKey
-    // ONE bounds job doubles as the emptiness probe (a NULL min means
-    // an empty batch) — no separate isEmpty scan of the source
-    val bounds = batch.agg(min(col(pk)), max(col(pk))).head()
-    if (bounds.isNullAt(0)) return
-    val enrichedAlready = catalog.read(sink)
-      .select(col(sinkPk).as(pk))
-      .filter(col(pk).between(lit(bounds.get(0)), lit(bounds.get(1))))
-      .distinct()
-    // persist the guarded batch across its emptiness probe AND the
-    // enrichment pipeline (r17 code review: un-persisted, the pruned
-    // sink scan + anti-join executed once for the probe and again
-    // under the enrichment DAG)
-    val fresh = batch.join(enrichedAlready, Seq(pk), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (fresh.isEmpty) return
-      // persist across the emptiness probe AND the append (r16 code
-      // review: un-persisted, the full enrichment pipeline — cell
-      // scan, snapshot joins, scoring, top-k — executed twice per
-      // micro-batch)
-      val enriched = knnEnrichBatch(fresh, catalog, against, ix, k, nprobe)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try { if (!enriched.isEmpty) { catalog.append(sink, enriched); () } }
-      finally enriched.unpersist(blocking = false)
-    } finally fresh.unpersist(blocking = false)
+    // the guarded batch stays persisted across its emptiness probe AND
+    // the enrichment pipeline (un-persisted, the pruned sink scan +
+    // anti-join executed once for the probe and again under the
+    // enrichment DAG); `land` persists the enrichment across its own
+    // probe and the append, so the cell scan, snapshot joins, scoring
+    // and top-k run once per micro-batch
+    for (unseen <- IngestSinks.unseen(batch, pk,
+        catalog.read(sink).select(col(sinkPk).as(pk))))
+      IngestSinks.persisted(unseen) { fresh =>
+        if (!fresh.isEmpty) IngestSinks.land(catalog, sink,
+          knnEnrichBatch(fresh, catalog, against, ix, k, nprobe))
+      }
   }
 }

@@ -82,9 +82,9 @@ class IvfThresholdSpec extends AnyFunSuite {
     cat.createIndex("g", "ann", "ivf", "emb")
     // 5 near-dups committed row 0; 20 and 21 are a same-cell pair of
     // new vectors (cosine ≈ 0.71 to every committed row) — 21 drops
-    graft.streaming.EmbeddingStreams.annDedupBatch(
+    graft.streaming.IngestSinks.nearDupBatch(
       rows(5L -> Seq(1f, t, 0f), 20L -> Seq(1f, 1f, 0f), 21L -> Seq(1f, 1f, s)),
-      cat, "g", "ann", threshold = 0.99)
+      cat, "g", "ann", threshold = Some(0.99))
     assert(cat.read("g").collect().map(_.getLong(0)).toSet == Set(0L, 1L, 20L))
   }
 }

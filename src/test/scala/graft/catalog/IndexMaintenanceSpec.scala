@@ -455,9 +455,9 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     cat.createIndex("vecs", "ann", "ivf", "e")
     import spark.implicits._
     // marked index: a byte-exact twin of committed row 3 gates out
-    graft.streaming.EmbeddingStreams.annDedupBatch(
+    graft.streaming.IngestSinks.nearDupBatch(
       Seq((990L, vec(3, 3L))).toDF("vec_id", "e"),
-      cat, "vecs", "ann", threshold = 0.99)
+      cat, "vecs", "ann", threshold = Some(0.99))
     assert(cat.read("vecs").count() == 24, "marked-index gate must drop the twin")
     // LEGACY pre-emb parts (what a pre-r12 build wrote): strip the
     // vector column from EVERY part and drop the marker — cand_emb then
@@ -485,16 +485,16 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     java.nio.file.Files.delete(ixd.resolve(Index.AllEmbMarker))
     assert(!Index.allPartsCarryEmb(cat, "vecs",
       cat.indexDefs("vecs").find(_.ix == "ann").get))
-    graft.streaming.EmbeddingStreams.annDedupBatch(
+    graft.streaming.IngestSinks.nearDupBatch(
       Seq((991L, vec(3, 3L))).toDF("vec_id", "e"),
-      cat, "vecs", "ann", threshold = 0.99)
+      cat, "vecs", "ann", threshold = Some(0.99))
     assert(cat.read("vecs").count() == 24,
       "legacy-part candidates must still gate via the snapshot fallback")
     // a genuinely-new direction still ingests through the legacy path
-    graft.streaming.EmbeddingStreams.annDedupBatch(
+    graft.streaming.IngestSinks.nearDupBatch(
       Seq((992L, graft.functions.Float32Unpack.pack(
         (0 until 8).map(d => if (d < 2) 0.7071f else 0f)))).toDF("vec_id", "e"),
-      cat, "vecs", "ann", threshold = 0.99)
+      cat, "vecs", "ann", threshold = Some(0.99))
     assert(cat.read("vecs").count() == 25, "distinct vector must land")
   }
 

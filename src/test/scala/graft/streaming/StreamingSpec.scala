@@ -920,7 +920,7 @@ class StreamingSpec extends AnyFunSuite {
         .schema(StructType(Seq(StructField("doc_id", LongType),
           StructField("text", StringType))))
         .parquet(src.toString)
-      val q = DocumentStreams.dedupIngestToCatalog(stream, cat, "gated", "nd")
+      val q = IngestSinks.nearDupIngestToCatalog(stream, cat, "gated", "nd")
         .option("checkpointLocation", ckpt.toString).start()
       try q.processAllAvailable() finally q.stop()
     }
@@ -951,18 +951,18 @@ class StreamingSpec extends AnyFunSuite {
       "text" -> graft.aql.AlbaType.of("TEXT")))
     cat2.createIndex("gated2", "sh", "simhash", "text")
     cat2.append("gated2", Seq((1L, base)).toDF("doc_id", "text"))
-    DocumentStreams.dedupBatch(
+    IngestSinks.nearDupBatch(
       Seq((2L, nearCopy), (3L, distinctDoc)).toDF("doc_id", "text"),
-      cat2, "gated2", "sh", threshold = 0.5)
+      cat2, "gated2", "sh", threshold = Some(0.5))
     assert(cat2.read("gated2").collect().map(_.getLong(0)).toSet == Set(1L, 3L),
       "simhash-indexed gate must drop the near copy and keep the distinct doc")
     // WITHIN-batch coverage uses the index's banding too: a token-edit
     // pair arriving in one batch dedups the same as across batches
     val longA = "one two three four five six seven eight nine ten eleven twelve thirteen fourteen"
-    DocumentStreams.dedupBatch(
+    IngestSinks.nearDupBatch(
       Seq((6L, longA), (7L, longA.replace("fourteen", "fifteen")))
         .toDF("doc_id", "text"),
-      cat2, "gated2", "sh", threshold = 0.5)
+      cat2, "gated2", "sh", threshold = Some(0.5))
     assert(cat2.read("gated2").collect().map(_.getLong(0)).toSet == Set(1L, 3L, 6L),
       "within-batch simhash pair must keep only the lower pk")
 
@@ -973,7 +973,7 @@ class StreamingSpec extends AnyFunSuite {
       .schema(StructType(Seq(StructField("doc_id", LongType),
         StructField("text", StringType))))
       .parquet(src.toString)
-    val q2 = DocumentStreams.dedupIngestToCatalog(stream2, cat, "gated", "nd")
+    val q2 = IngestSinks.nearDupIngestToCatalog(stream2, cat, "gated", "nd")
       .option("checkpointLocation", ckpt2.toString).start()
     try q2.processAllAvailable() finally q2.stop()
     assert(cat.read("gated").count() == 4,
@@ -1034,7 +1034,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     def drain(ck: java.nio.file.Path): Unit = {
       val stream = spark.readStream.schema(schema).parquet(src.toString)
-      val q = EmbeddingStreams.annIngestToCatalog(stream, cat, "vgated", "ann")
+      val q = IngestSinks.nearDupIngestToCatalog(stream, cat, "vgated", "ann")
         .option("checkpointLocation", ck.toString).start()
       try q.processAllAvailable() finally q.stop()
     }
@@ -1053,8 +1053,8 @@ class StreamingSpec extends AnyFunSuite {
     val catB = mkCat("b")
     val all = new java.util.ArrayList[org.apache.spark.sql.Row]()
     (d1 ++ d2).foreach { case (id, e) => all.add(org.apache.spark.sql.Row(id, e)) }
-    EmbeddingStreams.annDedupBatch(spark.createDataFrame(all, schema),
-      catB, "vgated", "ann", threshold = 0.99)
+    IngestSinks.nearDupBatch(spark.createDataFrame(all, schema),
+      catB, "vgated", "ann", threshold = Some(0.99))
     assert(catB.read("vgated").collect().map(_.getLong(0)).toSet == landed,
       "one-batch gate must equal the streamed gate's set")
 
@@ -1071,8 +1071,8 @@ class StreamingSpec extends AnyFunSuite {
       org.apache.spark.sql.Row(i, axis((i - 1).toInt % 8))))
     cat8.append("vgated", spark.createDataFrame(baseRows, schema))
     cat8.createIndex("vgated", "ann", "ivf", "emb", int8 = true)
-    EmbeddingStreams.annDedupBatch(spark.createDataFrame(all, schema),
-      cat8, "vgated", "ann", threshold = 0.99)
+    IngestSinks.nearDupBatch(spark.createDataFrame(all, schema),
+      cat8, "vgated", "ann", threshold = Some(0.99))
     assert(cat8.read("vgated").collect().map(_.getLong(0)).toSet == landed,
       "the int8-indexed gate must land the same survivor set")
   }
