@@ -25,9 +25,10 @@ import scala.jdk.CollectionConverters._
   * the swap becomes a metastore pointer flip (or Delta/Iceberg commit).
   * The catalog abstraction is unchanged.
   *
-  * Concurrency contract: single writer per container (the server layer
-  * serializes statements per request, matching the reference's whole-DB
-  * RwLock — database.rs:1123). Readers are always consistent: they
+  * Concurrency contract: writers race lock-free — every versioned write
+  * builds through [[prepare]], claims its version with one CAS claim file
+  * and retries in [[commitLoop]] (the reference serializes writes under a
+  * whole-DB RwLock — database.rs:1123). Readers are always consistent: they
   * resolve the version pointer once and read an immutable directory.
   */
 final class Catalog(val spark: SparkSession, rootDir: String) {
@@ -114,7 +115,7 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     if (Files.exists(droppedFile(src)))
       Files.copy(droppedFile(src), droppedFile(dst))
     val v = currentVersion(src)
-    if (v > 0 && !tryCommitCow(dst, 0, versionFiles(src, v), None)) {
+    if (v > 0 && !tryCommit(dst, 0, None, versionFiles(src, v))) {
       // a racing writer on a just-created name can only be another clone
       drop(dst)
       sys.error(s"CLONE lost a race publishing '$dst' v1")
@@ -130,34 +131,17 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     * concurrent readers' pins. Zero-copy: the new version hard-links the
     * restored version's parquet files — the same link step as a COW
     * untouched-file carryover — so restore cost is file-count inode ops,
-    * never data size. Publishes through the normal CAS claim loop
-    * (serializes with concurrent commits; derived indexes rebuild into
-    * the published version via the prepare hook). Returns the new
-    * version number.
+    * never data size. Publishes through the one CAS loop
+    * ([[commitLoop]]: serializes with concurrent commits; derived indexes
+    * rebuild into the published version via the prepare hook). Returns
+    * the new version number.
     */
   def restore(name: String, v: Int): Int = {
     requireVersioned(name, "RESTORE")
     require(versions(name).contains(v),
       s"RESTORE $name: version $v does not exist (never published or vacuumed)")
-    var attempts = 0
-    var stuckAt = -1
-    while (true) {
-      attempts += 1
-      require(attempts <= 50, s"RESTORE $name: lost the version race 50 times")
-      if (attempts > 1) Thread.sleep(math.min(100L * attempts, 2000L))
-      val base = currentVersion(name)
-      // same contender escape as the commit loop: heal decided
-      // transactions, release dead claims, adopt unflipped versions
-      if (base == stuckAt) {
-        recoverTxns()
-        releaseOrphanClaim(name, base + 1)
-        adoptPublished(name)
-      }
-      stuckAt = base
-      if (tryCommitCow(name, base, versionFiles(name, v), None))
-        return base + 1
-    }
-    -1 // unreachable
+    val files = versionFiles(name, v)
+    commitLoop(name, "RESTORE")(base => tryCommit(name, base, None, files)) + 1
   }
 
   /** Statements whose base-0 path would silently REPLACE rows served
@@ -395,18 +379,6 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     }
   }
 
-  /** ANN candidates for a literal query vector (not a corpus row) from
-    * an `ivf` index — see [[Index.ivfLookupVector]]. */
-  def indexLookupVector(name: String, ix: String, vec: Seq[Float],
-      nprobe: Int = 1, at: Option[Int] = None): DataFrame = {
-    val d = indexDefs(name).find(_.ix == ix)
-      .getOrElse(sys.error(s"No index '$ix' on '$name'"))
-    require(d.kind == "ivf",
-      s"index '$ix' is a ${d.kind} index — literal-vector probes serve " +
-        "from an ivf index (lsh/simhash band text, not vectors)")
-    Index.ivfLookupVector(this, name, d, vec, nprobe, at)
-  }
-
   /** Driver-side full cell ordering for a literal query vector — see
     * [[Index.ivfCellsRankedVector]] (no job at all). */
   def ivfProbeCellsVector(name: String, ix: String, vec: Seq[Float]): Seq[Int] = {
@@ -517,7 +489,7 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     * Computed LAZILY from the copy-on-write file-name delta: a COW commit
     * carries untouched base files as hard links under their ORIGINAL
     * names and writes rewritten/inserted parts under fresh UUID names
-    * ([[tryCommitCow]]), so the files whose names differ between the two
+    * ([[prepare]]), so the files whose names differ between the two
     * versions are exactly the files that can contain a changed row. The
     * feed therefore scans only touched data — commit-sized, not
     * table-sized — with no change log written at commit time (the
@@ -644,98 +616,53 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     toLogical(d, raw.withColumn("__src_file", col("_metadata.file_name")))
   }
 
-  /** Commit `df` as the next version after `expectedBase` — the
-    * optimistic-concurrency primitive. The CAS token is a CLAIM FILE
-    * (`catalog/<name>.claim-v<N>`) created with the atomic create-new
-    * semantics of `Files.createFile`: exactly one committer wins the
-    * claim for a given version; everyone else returns `false`, re-reads
-    * the new base, re-derives its DataFrame, and retries (`Tx.commit`).
-    * The claim is taken BEFORE the data write, so a losing committer
-    * fails fast without producing a directory. This replaces the
-    * reference's whole-DB write lock (`/root/reference/src/database.rs:
-    * 1123`) with lock-free first-claimer-wins semantics — the same shape
-    * as a Delta/Iceberg conditional metastore commit at warehouse scale.
+  /** The one immediate publish, and the optimistic-concurrency
+    * primitive: claim `base + 1`, build it ([[prepare]]) and publish it.
+    * The CAS token is a CLAIM FILE (`catalog/<name>.claim-v<N>`) created
+    * with the atomic create-new semantics of `Files.createFile`: exactly
+    * one committer wins the claim for a given version; everyone else
+    * returns `false`, re-reads the new base, re-derives its write, and
+    * retries ([[commitLoop]]). The claim is taken BEFORE the data write,
+    * so a losing committer fails fast without producing a directory. This
+    * replaces the reference's whole-DB write lock
+    * (`/root/reference/src/database.rs:1123`) with lock-free
+    * first-claimer-wins semantics — the same shape as a Delta/Iceberg
+    * conditional metastore commit at warehouse scale.
     *
-    * Returns true iff this call claimed and published `expectedBase+1`.
+    * Returns true iff this call claimed and published `base + 1`.
     */
-  def tryCommit(name: String, expectedBase: Int, df: DataFrame): Boolean =
-    tryCommitAt(name, expectedBase + 1, df)
-
-  /** Claim and publish an EXPLICIT version slot with a whole-dataframe
-    * write. */
-  private[catalog] def tryCommitAt(name: String, slot: Int, df: DataFrame): Boolean =
-    tryCommitBuild(name, slot)(wholeBuild(name, df))
-
-  private def wholeBuild(name: String, df: DataFrame)(tmp: Path): Unit =
-    toStored(name, df).write.mode("overwrite").parquet(tmp.toString)
-
-  /** Prepare-only twin of [[tryCommit]] (atomic multi-container COMMIT). */
-  private[catalog] def prepareWhole(name: String, expectedBase: Int,
-      df: DataFrame): Option[Path] =
-    prepareSlot(name, expectedBase + 1)(wholeBuild(name, df))
-
-  /** File-granular copy-on-write commit: publish `expectedBase+1` as
-    * hard links to `kept` (byte-identical files carried over from the
-    * base version — a link costs one inode op, no data movement) plus the
-    * parquet parts of `rewrite` (the folded touched-files + inserts).
-    * Each version directory stays self-contained: links are real
-    * directory entries, so time travel, vacuum, and drop are unchanged
-    * (deleting an old version only drops its link; the inode survives in
-    * every newer version that still references it). At warehouse scale
-    * the link step is a manifest entry — the Delta/Iceberg "add file
-    * unchanged" commit shape — so commit cost scales with TOUCHED data,
-    * not table size.
-    */
-  private[catalog] def tryCommitCow(name: String, expectedBase: Int,
-      kept: Seq[Path], rewrite: Option[DataFrame]): Boolean =
-    tryCommitBuild(name, expectedBase + 1)(cowBuild(name, kept, rewrite))
-
-  private def cowBuild(name: String, kept: Seq[Path],
-      rewrite: Option[DataFrame])(tmp: Path): Unit = {
-    // Spark's write creates `tmp`; link AFTER so overwrite can't drop
-    // the links. Rewritten parts carry fresh UUID part names, so they
-    // can never collide with a linked base-file name.
-    rewrite match {
-      case Some(df) => toStored(name, df).write.mode("overwrite").parquet(tmp.toString)
-      case None => Files.createDirectories(tmp)
-    }
-    kept.foreach(f => Files.createLink(tmp.resolve(f.getFileName), f))
-  }
-
-  /** Prepare-only twin of [[tryCommitCow]] (atomic multi-container COMMIT). */
-  private[catalog] def prepareCow(name: String, expectedBase: Int,
-      kept: Seq[Path], rewrite: Option[DataFrame]): Option[Path] =
-    prepareSlot(name, expectedBase + 1)(cowBuild(name, kept, rewrite))
-
-  /** The CAS claim/publish shell shared by every commit flavor: claim the
-    * slot, let `build` populate a tmp directory, atomically move it into
-    * place, advance the pointer. The claim carries the claimant's PID so
-    * a contender can distinguish a crashed claimant (escape) from a live
-    * slow writer (wait) — see claimIsOrphan.
-    */
-  private def tryCommitBuild(name: String, slot: Int)(build: Path => Unit): Boolean =
-    prepareSlot(name, slot)(build) match {
-      case None => false
-      case Some(tmp) =>
-        try { finishPrepared(name, slot, tmp); true }
-        catch {
-          case t: Throwable =>
-            deleteRecursively(tmp)
-            if (!Files.exists(versionPath(name, slot)))
-              Files.deleteIfExists(claimFile(name, slot))
-            throw t
-        }
+  def tryCommit(name: String, base: Int, rewrite: Option[DataFrame],
+      kept: Seq[Path] = Nil, stamp: Option[(String, String)] = None): Boolean =
+    prepare(name, base, rewrite, kept, stamp).exists { tmp =>
+      try { finishPrepared(name, base + 1, tmp); true }
+      catch { case t: Throwable => abortPrepared(name, base + 1, tmp); throw t }
     }
 
-  /** PREPARE half of the commit: CAS-claim the slot and stage the built
+  /** The one prepared publish: CAS-claim `base + 1` and stage the built
     * version (data + its derived index parts) in a tmp directory, WITHOUT
     * publishing. Returns the staged directory, or None if the claim was
-    * lost. Single-container commits finish immediately
-    * ([[finishPrepared]]); the atomic multi-container COMMIT prepares
-    * every member first and publishes them all behind one manifest rename
-    * ([[commitTxn]]).
+    * lost. [[tryCommit]] finishes it immediately ([[finishPrepared]]); the
+    * atomic multi-container COMMIT prepares every member first and
+    * publishes them all behind one manifest rename ([[commitTxn]]).
+    *
+    * The version directory is always (`kept` base files as hard links) +
+    * (`rewrite`'s parquet parts) + (an optional `stamp`). Links are real
+    * directory entries, so each version stays self-contained: time
+    * travel, vacuum, and drop are unchanged (deleting an old version only
+    * drops its link; the inode survives in every newer version that still
+    * references it). A whole write carries nothing; a copy-on-write
+    * commit carries every untouched base file — at warehouse scale the
+    * link step is the Delta/Iceberg "add file unchanged" manifest entry,
+    * so commit cost scales with TOUCHED data, not table size. The `stamp
+    * = (key, value)` lands as a `_graft_txn` marker file inside the
+    * version, publishing atomically with the content (readers ignore
+    * underscore files, like `_SUCCESS`). The claim carries the claimant's
+    * PID so a contender can distinguish a crashed claimant (escape) from
+    * a live slow writer (wait) — see claimIsOrphan.
     */
-  private[catalog] def prepareSlot(name: String, slot: Int)(build: Path => Unit): Option[Path] = {
+  private[catalog] def prepare(name: String, base: Int, rewrite: Option[DataFrame],
+      kept: Seq[Path] = Nil, stamp: Option[(String, String)] = None): Option[Path] = {
+    val slot = base + 1
     if (Files.exists(versionPath(name, slot))) return None // already published
     // atomic CAS: one winner
     try Files.write(claimFile(name, slot),
@@ -749,20 +676,23 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     // every contender (including this one on retry) wait on a slot that
     // will never publish
     try {
-      build(tmp)
+      // Spark's write creates `tmp`; link AFTER so overwrite can't drop
+      // the links. Rewritten parts carry fresh UUID part names, so they
+      // can never collide with a linked base-file name.
+      rewrite match {
+        case Some(df) => toStored(name, df).write.mode("overwrite").parquet(tmp.toString)
+        case None => Files.createDirectories(tmp)
+      }
+      kept.foreach(f => Files.createLink(tmp.resolve(f.getFileName), f))
+      stamp.foreach { case (k, v) =>
+        Files.writeString(tmp.resolve(Catalog.TxnMarker), s"$k\t$v") }
       // commit-time index maintenance (reference container.rs:277-282
       // fires its index hook per committed row): derived indexes build
       // into the SAME tmp directory, so data and index publish in one
       // atomic rename. No-op for unindexed containers.
       Index.buildInto(this, name, slot, tmp)
       Some(tmp)
-    } catch {
-      case t: Throwable =>
-        deleteRecursively(tmp)
-        if (!Files.exists(versionPath(name, slot)))
-          Files.deleteIfExists(claimFile(name, slot))
-        throw t
-    }
+    } catch { case t: Throwable => abortPrepared(name, slot, tmp); throw t }
   }
 
   /** PUBLISH half: atomically move the staged directory into place and
@@ -782,8 +712,8 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     advancePointer(name, slot)
   }
 
-  /** Abandon a prepared-but-undecided slot: drop the staged directory and
-    * release OUR claim (the pid in the claim file is this process's —
+  /** Abandon a prepared-but-unpublished slot: drop the staged directory
+    * and release OUR claim (the pid in the claim file is this process's —
     * deleting it is safe without the orphan check).
     */
   private[catalog] def abortPrepared(name: String, slot: Int, tmp: Path): Unit = {
@@ -791,6 +721,66 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     if (!Files.exists(versionPath(name, slot)))
       Files.deleteIfExists(claimFile(name, slot))
   }
+
+  /** The one optimistic-concurrency retry loop of every versioned writer
+    * (COMMIT, MERGE ROWS, DELETE ROWS, append, restore, optimize,
+    * overwrite): `attempt(base)` re-derives the write against `base` and
+    * tries its CAS claim; true ends the loop, which returns that base.
+    * Computing against an immutable base version makes compute-then-claim
+    * safe: if the claim succeeds nobody has published over the base.
+    *
+    * An attempt that failed at a base that did not move runs the
+    * [[contenderEscape]] before the next one — never the first attempt,
+    * which reads only the pointer.
+    */
+  private[catalog] def commitLoop(name: String, what: String)(attempt: Int => Boolean): Int = {
+    var attempts = 0
+    var stuckAt = -1
+    while (true) {
+      attempts += 1
+      require(attempts <= 50, s"$what $name: lost the version race 50 times")
+      // linear backoff: a failed claim usually means another committer
+      // is mid-write on the claimed version — its pointer flip is what
+      // moves our base forward, so waiting beats spinning
+      if (attempts > 1) Thread.sleep(math.min(100L * attempts, 2000L))
+      var base = currentVersion(name)
+      if (base == stuckAt) {
+        contenderEscape(name, base)
+        base = currentVersion(name)
+      }
+      stuckAt = base
+      if (attempt(base)) return base
+    }
+    -1 // unreachable
+  }
+
+  /** The one contender escape, for a writer whose claim on `base + 1`
+    * keeps failing while the pointer stays on `base`, in this order:
+    *  1. decided multi-container transactions heal FIRST ([[recoverTxns]]):
+    *     a decided member's claim belongs to its transaction (its staged
+    *     version must land), never to the orphan-release race;
+    *  2. a claim whose recorded process is PROVABLY DEAD never publishes:
+    *     RELEASE it ([[releaseOrphanClaim]]) so the normal base+1 CAS
+    *     picks exactly one winner for the freed slot. (Jumping to a higher
+    *     slot instead would let two concurrent escapers publish writes
+    *     rebased on the SAME base into different slots, silently dropping
+    *     the lower one's changes.) A live slow writer is never released;
+    *  3. a committer that died between its dir move and pointer flip left
+    *     a complete version above the pointer: finish its flip
+    *     ([[adoptPublished]]) so the next attempt rebases on it.
+    */
+  private[catalog] def contenderEscape(name: String, base: Int): Unit = {
+    recoverTxns()
+    releaseOrphanClaim(name, base + 1)
+    adoptPublished(name)
+  }
+
+  /** Fault-injection seam for crash-recovery specs: runs immediately
+    * after the manifest rename (the commit point), before any member
+    * applies. Production no-op — specs throw here to construct a
+    * decided-but-unapplied transaction deterministically.
+    */
+  private[catalog] var afterDecide: () => Unit = () => ()
 
   /** The COMMIT POINT of an atomic multi-container transaction: one
     * manifest rename decides every member at once. Before the rename no
@@ -800,13 +790,6 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     * mid-apply. The manifest lists `container TAB slot TAB tmpDirName`
     * with the committer's pid on the first line.
     */
-  /** Fault-injection seam for crash-recovery specs: runs immediately
-    * after the manifest rename (the commit point), before any member
-    * applies. Production no-op — specs throw here to construct a
-    * decided-but-unapplied transaction deterministically.
-    */
-  private[catalog] var afterDecide: () => Unit = () => ()
-
   private[catalog] def commitTxn(entries: Seq[(String, Int, Path)]): Unit = {
     val id = s"${ProcessHandle.current.pid}-${System.nanoTime()}"
     val body = (ProcessHandle.current.pid.toString +: entries.map { case (n, s, tmp) =>
@@ -836,16 +819,6 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     Files.deleteIfExists(decided)
   }
 
-  /** Crash recovery for decided transactions: every `txn-*.txn` manifest
-    * whose committer is provably dead (or IS this process — our own
-    * manifest can only still exist if a previous apply attempt threw) is
-    * rolled FORWARD: stage dirs move into place, pointers flip, manifest
-    * deleted. Idempotent per entry; a live foreign committer's manifest
-    * is left untouched (it is mid-apply — same waiting contract as a
-    * live claim). Contenders call this before releasing orphan claims so
-    * a decided member's claim is never stolen out from under its
-    * transaction.
-    */
   /** Decided-transaction manifests, parsed: (file, committer pid,
     * (container, slot, tmpDirName) entries). Shared by [[recoverTxns]]
     * and the [[releaseOrphanClaim]] guard so the two can never drift on
@@ -887,6 +860,16 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
           .orElse(java.lang.Boolean.TRUE).booleanValue
     }
 
+  /** Crash recovery for decided transactions: every `txn-*.txn` manifest
+    * whose committer is provably dead (or IS this process — our own
+    * manifest can only still exist if a previous apply attempt threw) is
+    * rolled FORWARD: stage dirs move into place, pointers flip, manifest
+    * deleted. Idempotent per entry; a live foreign committer's manifest
+    * is left untouched (it is mid-apply — same waiting contract as a
+    * live claim). Contenders call this before releasing orphan claims so
+    * a decided member's claim is never stolen out from under its
+    * transaction.
+    */
   private[catalog] def recoverTxns(): Unit =
     parsedManifests().foreach { case (mf, pid, entries) =>
       if (pid.isEmpty || entries.isEmpty) {
@@ -931,13 +914,8 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
         .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sortBy(_.getFileName.toString)
     }
 
-  /** First slot strictly above every published version and every
-    * outstanding claim — where `overwrite` (no read-modify-write to
-    * protect) claims past stale state. */
-  private[catalog] def nextFreeSlot(name: String): Int = latestClaimed(name) + 1
-
   /** Release the claim on `slot` iff it provably belongs to a dead
-    * process, so the normal `tryCommit` CAS at the base below it can
+    * process, so the normal [[tryCommit]] CAS at the base below it can
     * proceed — the CREATE_NEW create race then picks exactly one new
     * winner for the slot. Deleting concurrently with a fresh claimant
     * would drop a LIVE claim, so the check-and-delete runs under the
@@ -1027,84 +1005,49 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     * version, carrying every base file as a hard link — the insert-only
     * COW commit taken directly from a DataFrame, with no driver-side row
     * materialization (the scalable ingest twin of `Tx.stageInsert`, whose
-    * Seq[Row] staging is statement-level by design). Runs the same CAS
-    * claim/retry as any commit, so concurrent appends serialize with all
-    * batches surviving; derived indexes update inside the same atomic
-    * publish via the tryCommitBuild hook. This is the micro-batch landing
-    * path for streaming ingest (`DocumentStreams.ingestToCatalog`).
-    * Returns the published version.
+    * Seq[Row] staging is statement-level by design). Runs the one CAS
+    * loop ([[commitLoop]]), so concurrent appends serialize with all
+    * batches surviving and a decided transaction heals first; derived
+    * indexes update inside the same atomic publish via the [[prepare]]
+    * hook. This is the micro-batch landing path for streaming ingest
+    * (`IngestSinks.land`). Returns the published version.
     */
   def append(name: String, df: DataFrame): Int = {
-    import org.apache.spark.sql.functions.col
-    val pk = get(name).primaryKey
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 50, s"APPEND $name: lost the version race 50 times")
-      if (attempts > 1) Thread.sleep(math.min(100L * attempts, 2000L))
-      val base = currentVersion(name)
-      val sorted = df.sortWithinPartitions(col(pk))
-      val ok =
-        if (base == 0) tryCommit(name, 0, sorted)
-        else tryCommitCow(name, base, versionFiles(name, base), Some(sorted))
-      if (ok) {
-        // post-append maintenance hook (the streaming twin of Tx.onCommit
-        // — micro-batch ingest must reach dependent views too); failures
-        // never fail the durable append
-        try onAppend(name, base + 1)
-        catch { case scala.util.control.NonFatal(_) => () }
-        return base + 1
-      }
-      // a dead committer's claim or an unflipped published version would
-      // wedge the retry loop on the same base — same escape as Tx.commit
-      releaseOrphanClaim(name, base + 1)
-      adoptPublished(name)
-    }
-    -1 // unreachable
+    val sorted = df.sortWithinPartitions(get(name).primaryKey)
+    val published = commitLoop(name, "APPEND")(base => tryCommit(name, base,
+      Some(sorted), if (base == 0) Nil else versionFiles(name, base))) + 1
+    // post-append maintenance hook (the streaming twin of Tx.onCommit
+    // — micro-batch ingest must reach dependent views too); failures
+    // never fail the durable append
+    try onAppend(name, published)
+    catch { case scala.util.control.NonFatal(_) => () }
+    published
   }
 
   /** Post-[[append]] hook `(container, publishedVersion)` — the engine
     * wires incremental-view auto-refresh through this when
     * `refresh_views_after_commit` is set, so STREAMED ingest
-    * (`DocumentStreams.ingestToCatalog` lands through append, not Tx)
+    * (`IngestSinks.land` lands through append, not Tx)
     * maintains views exactly like statement commits. */
   @volatile var onAppend: (String, Int) => Unit = (_, _) => ()
 
   /** Commit `df` as the next version unconditionally (last-writer-wins) —
     * for whole-container replacement where there is no read-modify-write
-    * to protect. Claims the next free slot above the pointer and any
-    * outstanding claim.
+    * to protect. Claims the first slot above the pointer, every published
+    * version and every outstanding claim.
+    *
+    * An optional idempotency `stamp = (key, value)` publishes atomically
+    * with the content ([[prepare]]). This is the Delta
+    * `txnAppId`/`txnVersion` idiom: a CDC consumer that folds a window and
+    * commits the result stamped with the window's end version can detect,
+    * after a crash between its commit and its checkpoint write, that the
+    * window is already applied — upgrading at-least-once replay to
+    * exactly-once ([[IncrementalView.refreshOnce]]).
     */
-  def overwrite(name: String, df: DataFrame): Unit =
-    overwriteStamped(name, df, None)
-
-  /** [[overwrite]] with an optional idempotency stamp: `stamp =
-    * (key, value)` is written as a `_graft_txn` marker file INTO the
-    * staged version directory, so it publishes atomically with the
-    * content (readers ignore underscore files, like `_SUCCESS`). This is
-    * the Delta `txnAppId`/`txnVersion` idiom: a CDC consumer that folds a
-    * window and commits the result stamped with the window's end version
-    * can detect, after a crash between its commit and its checkpoint
-    * write, that the window is already applied — upgrading at-least-once
-    * replay to exactly-once ([[IncrementalView.refreshOnce]]).
-    */
-  def overwriteStamped(name: String, df: DataFrame,
-      stamp: Option[(String, String)]): Unit = {
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      require(attempts <= 100, s"overwrite('$name'): 100 failed claim attempts")
-      // a failed claim means another committer holds the slot; its publish
-      // is what frees the next one, so back off instead of busy-spinning
-      if (attempts > 1) Thread.sleep(math.min(20L * attempts, 500L))
-      done = tryCommitBuild(name, latestClaimed(name) + 1) { tmp =>
-        wholeBuild(name, df)(tmp)
-        stamp.foreach { case (k, v) =>
-          Files.writeString(tmp.resolve(Catalog.TxnMarker), s"$k\t$v") }
-      }
-    }
-  }
+  def overwrite(name: String, df: DataFrame,
+      stamp: Option[(String, String)] = None): Unit =
+    commitLoop(name, "OVERWRITE")(_ =>
+      tryCommit(name, latestClaimed(name), Some(df), stamp = stamp))
 
   /** The stamp of a published version (None if the version has no marker
     * or doesn't exist). */
@@ -1151,21 +1094,6 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     }
   }
 
-  /** Compact the current version into a pk-range-clustered layout with
-    * few files — the maintenance flip side of file-granular COW commits
-    * (every small commit appends a small parquet part; hundreds of
-    * commits fragment the container). Published as a NEW version through
-    * the normal CAS path, so readers never block, time travel keeps the
-    * fragmented history until vacuum, and a concurrent commit simply
-    * wins or loses the slot race as usual. Range clustering on the pk
-    * restores tight per-file min/max, so point/range scans skip files
-    * again (the same layout contract as `Tables.compacted` for fixtures;
-    * Delta OPTIMIZE / Iceberg rewrite at warehouse scale). Default file
-    * count derives from plan-stats bytes at 128 MiB per file.
-    * Returns (files before, files after, published version) — the
-    * published version lets CDC consumers skip the content-neutral
-    * compaction window instead of diffing a full rewrite that nets zero.
-    */
   /** Z-order clustering value for `cols` (2–4 numeric columns): each
     * column rank-normalizes to an 8-bit bucket id via approx-quantile
     * boundaries (one driver-side boundary array per column — bounded
@@ -1269,6 +1197,21 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     if (!Files.exists(clusterFile(name))) Nil
     else Files.readString(clusterFile(name)).split("\t").toSeq.filter(_.nonEmpty)
 
+  /** Compact the current version into a pk-range-clustered layout with
+    * few files — the maintenance flip side of file-granular COW commits
+    * (every small commit appends a small parquet part; hundreds of
+    * commits fragment the container). Published as a NEW version through
+    * the one CAS loop ([[commitLoop]]), so readers never block, time travel keeps the
+    * fragmented history until vacuum, and a concurrent commit simply
+    * wins or loses the slot race as usual. Range clustering on the pk
+    * restores tight per-file min/max, so point/range scans skip files
+    * again (the same layout contract as `Tables.compacted` for fixtures;
+    * Delta OPTIMIZE / Iceberg rewrite at warehouse scale). Default file
+    * count derives from plan-stats bytes at 128 MiB per file.
+    * Returns (files before, files after, published version) — the
+    * published version lets CDC consumers skip the content-neutral
+    * compaction window instead of diffing a full rewrite that nets zero.
+    */
   def optimize(name: String, targetFiles: Option[Int] = None,
       zorderBy: Seq[String] = Nil): (Int, Int, Int) = {
     import org.apache.spark.sql.functions.col
@@ -1314,25 +1257,8 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     // has already read, so publishing above a concurrently-committed
     // version would silently drop that commit's rows. Losing the claim
     // re-reads the new base and compacts THAT.
-    var attempts = 0
-    var done = false
     var before = 0
-    var published = 0
-    var stuckAt = -1
-    while (!done) {
-      attempts += 1
-      require(attempts <= 50, s"OPTIMIZE $name: lost the version race 50 times")
-      if (attempts > 1) Thread.sleep(math.min(100L * attempts, 2000L))
-      val base = currentVersion(name)
-      // same orphan escape as Tx.commit: a dead committer's claim at
-      // base+1 (nothing published) would otherwise wedge every retry on
-      // the same base; a published-but-unflipped version above the
-      // pointer is adopted so the next iteration rebases on it
-      if (base == stuckAt) {
-        releaseOrphanClaim(name, base + 1)
-        adoptPublished(name)
-      }
-      stuckAt = base
+    val published = commitLoop(name, "OPTIMIZE") { base =>
       val df = if (base > 0) readVersion(name, base) else read(name)
       before = if (base > 0) versionFiles(name, base).size else 0
       val n = targetFiles.getOrElse {
@@ -1356,9 +1282,8 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
           df.withColumn(zc, zOrderValue(df, many))
             .repartitionByRange(n, col(zc)).sortWithinPartitions(zc).drop(zc)
       }
-      done = tryCommit(name, base, clustered)
-      published = base + 1
-    }
+      tryCommit(name, base, Some(clustered))
+    } + 1
     // an explicit USING becomes the policy future compactions follow —
     // persisted only AFTER the commit loop publishes, so a failed optimize
     // (build error, 50 lost races, concurrent drop) never leaves a policy

@@ -272,7 +272,7 @@ final class IncrementalView(cat: Catalog, src: String, mv: String,
           dimSnapshot(dv, d.container) }),
           s"$v dim=${dvs.mkString(",")}")
       }
-    cat.overwriteStamped(mv, conform(aggregate(input)),
+    cat.overwrite(mv, conform(aggregate(input)),
       Some(stampKey -> stampVal))
     tail.reset(v)
   }
@@ -441,7 +441,7 @@ final class IncrementalView(cat: Catalog, src: String, mv: String,
       }
     // the stamp and the content publish in ONE atomic version rename, so
     // the MV can always answer "which source window do I contain?"
-    cat.overwriteStamped(mv, conform(next), Some(stampKey ->
+    cat.overwrite(mv, conform(next), Some(stampKey ->
       (if (dimPinned.isEmpty) toV.toString
        else s"$toV dim=${dimPinned.map(_._2).mkString(",")}")))
   }
@@ -498,7 +498,7 @@ final class IncrementalView(cat: Catalog, src: String, mv: String,
         // content under the current dim versions — one small rewrite,
         // and the old versions' vacuum floors release
         if (applied == 0 && anyNeutralDrift)
-          cat.overwriteStamped(mv, cat.read(mv),
+          cat.overwrite(mv, cat.read(mv),
             Some(stampKey ->
               s"${tail.lastDelivered} dim=${curs.mkString(",")}"))
         applied

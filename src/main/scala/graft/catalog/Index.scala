@@ -787,29 +787,6 @@ object Index {
       .select(out.map(col): _*)
   }
 
-  /** ANN candidates for a LITERAL query vector (query-by-embedding —
-    * the production ANN serving shape: the query is NOT a corpus row,
-    * so unlike [[ivfLookup]] there is no self-exclusion and no snapshot
-    * probe read). The nearest-`nprobe`-centroid choice runs driver-side
-    * over the frozen ≤k centroid metadata (the same numbers —
-    * d2 rounded to 6, seed-id tie-break — the distributed assignment
-    * uses, so a vector probes exactly the cell its committed twin would
-    * land in); the index scan then filters to those LITERAL cluster
-    * ids, bucket-pruned to nprobe/k of the corpus at any scale.
-    */
-  def ivfLookupVector(cat: Catalog, container: String, idef: Def,
-      vec: Seq[Float], nprobe: Int = 1,
-      at: Option[Int] = None): DataFrame = {
-    // ONE implementation path (round 16): the cell-ranged helpers the
-    // incremental-widening SIMILAR lowering serves from — a previous
-    // hand-rolled twin here could have silently drifted from the served
-    // semantics once the engine stopped calling it
-    val cells = ivfCellsRankedVector(cat, container, idef, vec).take(nprobe)
-    ivfCellCandidates(cat, container, idef, cells, excludeId = None, at)
-      // dedup by pk, deterministic emb pick — see ivfLookup
-      .transform(dedupMinByBytes(_, Seq("cand"), "cand_emb"))
-  }
-
   /** BM25 top-k search served from a `text` index: scan the postings
     * filtered to the query's LITERAL lowercased terms plus the stats
     * sentinel key (bucket- and row-group-pruned by the term-sorted
@@ -980,7 +957,7 @@ object Index {
     v == 0 || Files.exists(ixDir(cat, container, v, idef.ix).resolve(AllEmbMarker))
   }
 
-  /** Commit hook, called by `Catalog.tryCommitBuild` after the data files
+  /** Commit hook, called by `Catalog.prepare` after the data files
     * land in `tmp` and before the atomic publish move. No-op unless the
     * container has declared indexes.
     */
@@ -1082,7 +1059,7 @@ object Index {
   /** Index rows for a batch of container rows (with their `src` file
     * attribution). Row-local per document, so per-file recomputation is
     * exact — the same property that makes the COW commit decomposition
-    * valid (`Tx.commitOnce`).
+    * valid (`Tx.decomposed`).
     */
   private def derive(cat: Catalog, d: Catalog#ContainerDef, idef: Def,
       rows: DataFrame): DataFrame = {

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * Scale note: the log is per-session metadata (predicates + local row
   * batches), never data; commit rewrites only the parquet files that can
   * contain a touched row (file-granular copy-on-write, see
-  * [[commit]]/[[commitOnce]]) and hard-links the rest. At warehouse scale
+  * [[commit]]/[[decomposed]]) and hard-links the rest. At warehouse scale
   * the same fold IS Delta/Iceberg's MERGE model — copy-on-write with a
   * transaction-log pointer flip — with the link step as the "add file
   * unchanged" manifest entry.
@@ -188,16 +188,12 @@ final class Tx(catalog: Catalog) {
   /** COMMIT [container] — apply staged ops via FILE-GRANULAR copy-on-write
     * (reference commit: container.rs:248-342).
     *
-    * Optimistic concurrency: the commit notes the base version its view
-    * reads, then CAS-claims base+1 (`Catalog.tryCommit*`). If another
+    * Optimistic concurrency ([[Catalog.commitLoop]]): the commit notes the
+    * base version its view reads, then CAS-claims base+1. If another
     * session committed first, the claim fails and the loop re-derives the
     * decomposition against the WINNER's version and retries. Two sessions
     * committing disjoint inserts therefore serialize with both inserts
     * surviving, instead of last-writer-wins or a crash on the rename.
-    *
-    * Computing against an immutable base version makes compute-then-claim
-    * safe: if the claim succeeds nobody has published over the base, so
-    * the decomposition is still valid.
     */
   def commit(container: Option[String]): Unit = {
     val targets = container.map(Seq(_)).getOrElse(log.keys.toSeq.sorted)
@@ -205,7 +201,10 @@ final class Tx(catalog: Catalog) {
     if (targets.lengthCompare(2) < 0)
       targets.foreach { c =>
         val pk = catalog.get(c).primaryKey
-        commitLoop(c, "COMMIT")(base => commitOnce(c, base, pk))
+        catalog.commitLoop(c, "COMMIT") { base =>
+          val (kept, rewrite) = decomposed(c, base, pk)
+          catalog.tryCommit(c, base, rewrite, kept)
+        }
         log -= c
         postCommitMaintenance(c)
       }
@@ -246,10 +245,9 @@ final class Tx(catalog: Catalog) {
       val allOk =
         try cs.forall { c =>
           val base = catalog.currentVersion(c)
-          prepareOnce(c, base, pks(c)) match {
-            case Some(tmp) => prepared += ((c, base + 1, tmp)); true
-            case None => false
-          }
+          val (kept, rewrite) = decomposed(c, base, pks(c))
+          catalog.prepare(c, base, rewrite, kept)
+            .map(tmp => prepared += ((c, base + 1, tmp))).isDefined
         } catch {
           case t: Throwable =>
             prepared.foreach { case (c, s, tmp) => catalog.abortPrepared(c, s, tmp) }
@@ -282,61 +280,13 @@ final class Tx(catalog: Catalog) {
             throw t
         }
       } else {
-        // abort the partial prepare set, then contender-escape on every
-        // member like commitLoop: heal decided transactions first (a
-        // decided member's claim must not be stolen), release provably
-        // dead claims, adopt published-but-unflipped versions
+        // abort the partial prepare set, then run the one contender
+        // escape on every member
         prepared.foreach { case (c, s, tmp) => catalog.abortPrepared(c, s, tmp) }
-        catalog.recoverTxns()
-        cs.foreach { c =>
-          catalog.releaseOrphanClaim(c, catalog.currentVersion(c) + 1)
-          catalog.adoptPublished(c)
-        }
+        cs.foreach(c => catalog.contenderEscape(c, catalog.currentVersion(c)))
       }
     }
     cs.foreach { c => log -= c; postCommitMaintenance(c) }
-  }
-
-  /** The optimistic-concurrency retry loop shared by COMMIT and
-    * MERGE ROWS: re-derive the decomposition against the current version
-    * and CAS-claim base+1 until one attempt publishes.
-    */
-  private def commitLoop(c: String, what: String)(attempt: Int => Boolean): Unit = {
-    var attempts = 0
-    var done = false
-    var stuckAt = -1
-    var stuckFor = 0
-    while (!done) {
-      attempts += 1
-      require(attempts <= 50, s"$what $c: lost the version race 50 times")
-      // linear backoff: a failed claim usually means another committer
-      // is mid-write on the claimed version — its pointer flip is what
-      // moves our base forward, so waiting beats spinning
-      if (attempts > 1) Thread.sleep(math.min(100L * attempts, 2000L))
-      val base = catalog.currentVersion(c)
-      if (base == stuckAt) stuckFor += 1 else { stuckAt = base; stuckFor = 0 }
-      // a claim whose recorded process is PROVABLY DEAD never
-      // publishes: RELEASE it (lock-guarded delete) and retry the
-      // normal base+1 CAS — the CREATE_NEW create race then picks
-      // exactly one winner for the freed slot. (Jumping to a higher
-      // slot instead would let two concurrent escapers publish views
-      // rebased on the SAME base into different slots, silently
-      // dropping the lower one's changes.) A live slow writer never
-      // satisfies claimIsOrphan, so its commit can't be overtaken.
-      if (stuckFor >= 1) {
-        // decided multi-container transactions heal FIRST: a decided
-        // member's claim belongs to its transaction (its staged version
-        // must land), never to the orphan-release race
-        catalog.recoverTxns()
-        catalog.releaseOrphanClaim(c, base + 1)
-        // a committer that died between its dir move and pointer flip
-        // left a complete version above the pointer: finish its flip
-        // so our next iteration rebases on it instead of wedging on a
-        // slot that is published but never becomes the base
-        catalog.adoptPublished(c)
-      }
-      done = attempt(base)
-    }
   }
 
   /** Post-commit hooks, in order: view refresh (folds the commit's real
@@ -429,58 +379,38 @@ final class Tx(catalog: Catalog) {
     require(src.groupBy(col(pk)).count().filter(col("count") > 1)
         .limit(1).count() == 0,
       s"MERGE ROWS src has duplicate $pk keys — pk-keyed upsert is ambiguous")
-    commitLoop(container, "MERGE ROWS")(base =>
-      mergeOnce(container, base, d, mentioned, src))
-    postCommitMaintenance(container)
-  }
-
-  /** One MERGE ROWS attempt against `base`. */
-  private def mergeOnce(c: String, base: Int, d: Catalog#ContainerDef,
-      mentioned: Seq[String], src: DataFrame): Boolean = {
-    val pk = d.primaryKey
     // pad to the full schema: unmentioned columns are NULL on insert
-    def padded(df: DataFrame): DataFrame =
-      df.select(d.schema.map { f =>
-        if (mentioned.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }: _*)
-    if (base == 0)
-      return catalog.tryCommit(c, base, padded(src).sortWithinPartitions(pk))
-
-    val baseFiles = catalog.versionFiles(c, base)
-    val srcPks = src.select(col(pk))
-    val touched = touchedFiles(catalog.readVersionTagged(c, base)
-      .join(srcPks, Seq(pk), "left_semi"))
-    val kept = baseFiles.filterNot(f => touched(f.getFileName.toString))
-    // misses insert (anti-join against ALL base pks, not just touched
-    // files — the pk-unique convention means a pk absent from the touched
-    // set is absent everywhere, but the anti-join stays correct even if a
-    // caller violated it)
-    val misses = padded(
-      src.join(catalog.readVersion(c, base).select(col(pk)), Seq(pk), "left_anti"))
+    val padded = d.schema.map { f =>
+      if (mentioned.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
+    }
     // matched rows: overlay src's mentioned values onto the touched
     // files' rows (left join — a touched file also holds untouched rows)
     val overlay = src.select(
       col(pk).as("__merge_pk") +:
         mentioned.filterNot(_ == pk).map(n => col(n).as(s"__merge_$n")): _*)
       .withColumn("__merge_hit", lit(true))
-    val rewritten =
-      if (touched.isEmpty) None
-      else {
-        val paths = baseFiles.filter(f => touched(f.getFileName.toString))
-          .map(_.toString)
-        Some(catalog.readFiles(c, paths)
-          .join(overlay, col(pk) === col("__merge_pk"), "left_outer")
-          .select(d.schema.map { f =>
-            if (f.name != pk && mentioned.contains(f.name))
-              when(col("__merge_hit"), col(s"__merge_${f.name}"))
-                .otherwise(col(f.name)).as(f.name)
-            else col(f.name)
-          }: _*))
-      }
-    val rewrite = (rewritten.toSeq :+ misses).reduce(_ unionByName _)
-      .sortWithinPartitions(pk)
-    catalog.tryCommitCow(c, base, kept, Some(rewrite))
+    val merged = d.schema.map { f =>
+      if (f.name != pk && mentioned.contains(f.name))
+        when(col("__merge_hit"), col(s"__merge_${f.name}"))
+          .otherwise(col(f.name)).as(f.name)
+      else col(f.name)
+    }
+    catalog.commitLoop(container, "MERGE ROWS") { base =>
+      // misses insert (anti-join against ALL base pks, not just touched
+      // files — the pk-unique convention means a pk absent from the
+      // touched set is absent everywhere, but the anti-join stays correct
+      // even if a caller violated it)
+      val misses = if (base == 0) src
+        else src.join(catalog.readVersion(container, base).select(col(pk)),
+          Seq(pk), "left_anti")
+      val (kept, rewrite) = rewriteTouched(container, base, pk,
+        Some(_.join(src.select(col(pk)), Seq(pk), "left_semi")),
+        _.join(overlay, col(pk) === col("__merge_pk"), "left_outer").select(merged: _*),
+        Seq(misses.select(padded: _*)))
+      catalog.tryCommit(container, base, rewrite, kept)
+    }
+    postCommitMaintenance(container)
   }
 
   /** True iff `container` has staged, uncommitted ops — the upfront
@@ -526,41 +456,26 @@ final class Tx(catalog: Catalog) {
     val keys = pks.select(pks(pks.columns.head).as(pk)).distinct()
       .localCheckpoint(true)
     var published = false
-    commitLoop(container, "DELETE ROWS") { base =>
-      deleteRowsOnce(container, base, d, keys) match {
-        case None => true // every pk missed: converged without publishing
-        case Some(ok) => if (ok) published = true; ok
-      }
+    catalog.commitLoop(container, "DELETE ROWS") { base =>
+      val (kept, rewrite) = rewriteTouched(container, base, pk,
+        Some(_.join(keys, Seq(pk), "left_semi")),
+        _.join(keys, Seq(pk), "left_anti").select(d.schema.map(f => col(f.name)): _*))
+      // no base file holds a matching pk: converge without publishing (a
+      // no-op delete must not burn a version)
+      if (rewrite.nonEmpty) published = catalog.tryCommit(container, base, rewrite, kept)
+      rewrite.isEmpty || published
     }
     if (published) postCommitMaintenance(container)
     published
   }
 
-  /** One DELETE ROWS attempt against `base`: None = no base file holds
-    * a matching pk (a no-op delete must not burn a version);
-    * Some(committed) otherwise. */
-  private def deleteRowsOnce(c: String, base: Int, d: Catalog#ContainerDef,
-      keys: DataFrame): Option[Boolean] = {
-    val pk = d.primaryKey
-    val baseFiles = catalog.versionFiles(c, base)
-    val touched = touchedFiles(catalog.readVersionTagged(c, base)
-      .join(keys, Seq(pk), "left_semi"))
-    if (touched.isEmpty) return None
-    val kept = baseFiles.filterNot(f => touched(f.getFileName.toString))
-    val paths = baseFiles.filter(f => touched(f.getFileName.toString))
-      .map(_.toString)
-    val rewritten = catalog.readFiles(c, paths)
-      .join(keys, Seq(pk), "left_anti")
-      .select(d.schema.map(f => col(f.name)): _*)
-      .sortWithinPartitions(pk)
-    Some(catalog.tryCommitCow(c, base, kept, Some(rewritten)))
-  }
-
-  /** One commit attempt against `base`: decompose the fold per-file so the
-    * new version rewrites only the parquet files that can contain a
-    * touched row, carrying every other base file over as a hard link —
-    * commit cost scales with TOUCHED data, not container size (the one
-    * operation the round-4 whole-container rewrite did not scale).
+  /** The file-granular copy-on-write decomposition of `c`'s staged log
+    * against `base`: (carried base files, folded rewrite of the touched
+    * files + inserts). The new version rewrites only the parquet files
+    * that can contain a touched row, carrying every other base file over
+    * as a hard link — commit cost scales with TOUCHED data, not container
+    * size. Base 0 (first commit, or legacy external dataPath) and
+    * DELETE-all carry nothing and write the whole view.
     *
     * The decomposition is EXACT because every Edit/Delete is row-local
     * ([[applyEditDelete]]) and predicates evaluate on base values for any
@@ -579,64 +494,44 @@ final class Tx(catalog: Catalog) {
     * sees the inserted rows, reference MVCC semantics). Insert-only
     * commits are pure appends: zero extra jobs, zero rewritten bytes.
     */
-  private def commitOnce(c: String, base: Int, pk: String): Boolean =
-    decomposed(c, base, pk) match {
-      case Left(whole) => catalog.tryCommit(c, base, whole)
-      case Right((kept, rewrite)) => catalog.tryCommitCow(c, base, kept, rewrite)
-    }
-
-  /** Prepare-only twin of [[commitOnce]] for the atomic group commit:
-    * same decomposition, but the slot is claimed + staged without
-    * publishing ([[Catalog.prepareSlot]]). */
-  private def prepareOnce(c: String, base: Int, pk: String): Option[java.nio.file.Path] =
-    decomposed(c, base, pk) match {
-      case Left(whole) => catalog.prepareWhole(c, base, whole)
-      case Right((kept, rewrite)) => catalog.prepareCow(c, base, kept, rewrite)
-    }
-
-  /** The file-granular COW decomposition of `c`'s staged log against
-    * `base`: Left = whole-table write (first commit or DELETE-all),
-    * Right = (carried base files, folded rewrite of touched files +
-    * inserts). Shared verbatim by the immediate and prepared commit
-    * flavors so the group commit's semantics can never drift from
-    * COMMIT's.
-    */
   private def decomposed(c: String, base: Int, pk: String)
-      : Either[DataFrame, (Seq[java.nio.file.Path], Option[DataFrame])] = {
+      : (Seq[java.nio.file.Path], Option[DataFrame]) = {
     val ops = log(c)
-    val d = catalog.get(c)
-    val deleteAll = ops.exists { case Delete(None) => true; case _ => false }
-    // base 0 = first commit (or legacy external dataPath): nothing to keep;
-    // DELETE-all rewrites from scratch too (kept set is empty by definition)
-    if (base == 0 || deleteAll)
-      return Left(view(c).sortWithinPartitions(pk))
-
+    if (base == 0 || ops.contains(Delete(None)))
+      return (Nil, Some(view(c).sortWithinPartitions(pk)))
+    val schema = catalog.get(c).schema
     val edPreds = ops.collect {
       case Edit(p, _) => coalesce(p, lit(false))
       case Delete(Some(p)) => coalesce(p, lit(false))
     }
-    val baseFiles = catalog.versionFiles(c, base)
-    val touched: Set[String] =
-      if (edPreds.isEmpty || baseFiles.isEmpty) Set.empty
-      else touchedFiles(catalog.readVersionTagged(c, base)
-        .filter(edPreds.reduce(_ || _)))
-    val kept = baseFiles.filterNot(f => touched(f.getFileName.toString))
-    val rewriteParts =
-      (if (touched.nonEmpty) {
-        val paths = baseFiles.filter(f => touched(f.getFileName.toString))
-          .map(_.toString)
-        Seq(ops.foldLeft(catalog.readFiles(c, paths))(applyEditDelete))
-      } else Nil) ++
+    val probe = edPreds.reduceOption(_ || _).map(p => (df: DataFrame) => df.filter(p))
+    rewriteTouched(c, base, pk, probe, ops.foldLeft(_)(applyEditDelete),
       ops.zipWithIndex.collect { case (Insert(rows), i) =>
-        ops.drop(i + 1).foldLeft(localDF(rows, d.schema))(applyEditDelete)
-      }
-    // sort within partitions by the pk-convention column (reference I6:
-    // first column is the implicit pk) — sharpens parquet row-group
-    // min/max stats so point/range scans skip row groups, replacing the
-    // reference's chunk index with layout instead of code
-    val rewrite = rewriteParts.reduceOption(_ unionByName _)
-      .map(_.sortWithinPartitions(pk))
-    Right((kept, rewrite))
+        ops.drop(i + 1).foldLeft(localDF(rows, schema))(applyEditDelete)
+      })
+  }
+
+  /** The touched-file rewrite shared by COMMIT, MERGE ROWS and DELETE
+    * ROWS: the base files holding a row of `probe` (over the
+    * [[Catalog.readVersionTagged]] scan; None = nothing touched, no job)
+    * are read back through `transform`, every other base file is carried.
+    * Returns (carried files, rewrite): the transformed rows plus `extra`
+    * (inserted rows), sorted within partitions by the pk-convention column
+    * (reference I6: first column is the implicit pk) — sharpening parquet
+    * row-group min/max stats so point/range scans skip row groups,
+    * replacing the reference's chunk index with layout instead of code.
+    */
+  private def rewriteTouched(c: String, base: Int, pk: String,
+      probe: Option[DataFrame => DataFrame], transform: DataFrame => DataFrame,
+      extra: Seq[DataFrame] = Nil): (Seq[java.nio.file.Path], Option[DataFrame]) = {
+    val baseFiles = if (base == 0) Nil else catalog.versionFiles(c, base)
+    val touched = probe.filter(_ => baseFiles.nonEmpty).fold(Set.empty[String])(
+      p => touchedFiles(p(catalog.readVersionTagged(c, base))))
+    val (hit, kept) = baseFiles.partition(f => touched(f.getFileName.toString))
+    val rewritten = if (hit.isEmpty) Nil
+      else Seq(transform(catalog.readFiles(c, hit.map(_.toString))))
+    (kept, (rewritten ++ extra).reduceOption(_ unionByName _)
+      .map(_.sortWithinPartitions(pk)))
   }
 
   /** ROLLBACK [container] — discard staged ops

@@ -87,7 +87,7 @@ class ConcurrencySpec extends AnyFunSuite {
     assert(cat.currentVersion("m") == 3)
     // a stale claim below the pointer must not move it back: tryCommit at
     // base 0 fails (v1 exists) rather than republishing v1
-    assert(!cat.tryCommit("m", 0, Seq(99).toDF("id")))
+    assert(!cat.tryCommit("m", 0, Some(Seq(99).toDF("id"))))
     assert(cat.currentVersion("m") == 3)
   }
 
@@ -201,11 +201,11 @@ class ConcurrencySpec extends AnyFunSuite {
     // write fails, and the claim must be released on the way out
     val bad = Seq(1).toDF("id").select(
       org.apache.spark.sql.functions.expr("raise_error('boom')").cast("int").as("id"))
-    intercept[Exception] { cat.tryCommit("f", 1, bad) }
+    intercept[Exception] { cat.tryCommit("f", 1, Some(bad)) }
     assert(!java.nio.file.Files.exists(dir.resolve("catalog").resolve("f.claim-v2")),
       "failed commit must release its claim")
     // the slot is immediately reusable by a healthy committer
-    assert(cat.tryCommit("f", 1, Seq(2).toDF("id")))
+    assert(cat.tryCommit("f", 1, Some(Seq(2).toDF("id"))))
     assert(cat.currentVersion("f") == 2)
   }
 

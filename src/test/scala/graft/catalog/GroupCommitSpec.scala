@@ -283,4 +283,59 @@ class GroupCommitSpec extends AnyFunSuite {
     assert(ra(501) == "ra1" && ra(502) == "ra2", "both group inserts survive on a")
     assert(rb(501) == "rb1" && rb(502) == "rb2", "both group inserts survive on b")
   }
+
+  /** A decided, unapplied two-container transaction (dead committer,
+    * claims on v2) ahead of one versioned writer on `a`: the writer must
+    * heal the transaction through the contender escape and publish v3 on
+    * top of it within 10 s, instead of spending its retries on the
+    * decided slot. `b` heals with it (one manifest decides both). */
+  private def afterDecided(tag: String)(write: Catalog => Unit): Catalog = {
+    val (cat, dir) = fixture(tag)
+    writeManifest(dir, deadPrepared(cat, dir), DeadPid)
+    val t0 = System.nanoTime()
+    write(cat)
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 10, s"writer took $secs s behind a decided transaction")
+    assert(cat.currentVersion("a") == 3, "decided txn = v2, the writer = v3")
+    assert(cat.readVersion("a", 2).filter(col("id") === 50).count() == 1)
+    assert(cat.currentVersion("b") == 2 && rows(cat, "b")(50) == "txnb")
+    assert(txnManifests(cat).isEmpty)
+    cat
+  }
+
+  test("append heals a decided transaction and lands on top of it") {
+    import spark.implicits._
+    val cat = afterDecided("append")(_.append("a", Seq((60, "app")).toDF("id", "v")))
+    val r = rows(cat, "a")
+    assert(r(50) == "txna" && r(60) == "app" && r.size == 12)
+  }
+
+  test("OPTIMIZE heals a decided transaction and compacts its version") {
+    val cat = afterDecided("optimize")(_.optimize("a"))
+    val r = rows(cat, "a")
+    assert(r(50) == "txna" && r.size == 11)
+  }
+
+  test("RESTORE heals a decided transaction and publishes above it") {
+    // RESTORE republishes v1's content: the transaction's row 50 stays
+    // in the history it was decided into (v2, checked by afterDecided)
+    val cat = afterDecided("restore")(_.restore("a", 1))
+    assert(rows(cat, "a") == (0 until 10).map(i => i -> s"a$i").toMap)
+  }
+
+  test("MERGE ROWS heals a decided transaction and merges on top of it") {
+    import spark.implicits._
+    val cat = afterDecided("merge")(c =>
+      new Tx(c).mergeRows("a", Seq((3, "merged"), (70, "new")).toDF("id", "v")))
+    val r = rows(cat, "a")
+    assert(r(50) == "txna" && r(3) == "merged" && r(70) == "new" && r.size == 12)
+  }
+
+  test("DELETE ROWS heals a decided transaction and deletes on top of it") {
+    import spark.implicits._
+    val cat = afterDecided("delete")(c =>
+      assert(new Tx(c).deleteRows("a", Seq(4).toDF("id"))))
+    val r = rows(cat, "a")
+    assert(r(50) == "txna" && !r.contains(4) && r.size == 10)
+  }
 }
