@@ -141,13 +141,11 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
   private def ivfCellScanLog_=(v: List[Seq[Int]]): Unit = ivfCellScans.set(v)
 
   /** Diagnostic, spec-pinned (FilteredAnnPropertySpec): the cell ranges
-    * whose candidates were exact-SCORED by the most recent filtered
-    * SCORED widening loop, in scoring order. The carry-forward rerank
-    * (round 17, r16 judge #7) must log DISJOINT ranges — every cell's
-    * candidates cosine-scored at most once across the whole loop; the
-    * global-rescore fallback (int8 / legacy-carrying indexes) honestly
-    * logs the growing prefix it re-scores. Per-thread like
-    * [[ivfCellScanLog]]. */
+    * whose candidates were SCORED (exact float32, or approximate SQ8 on
+    * int8 lists) by the most recent SCORED ivf lowering, in scoring
+    * order. The widening loop must log the same DISJOINT ranges it
+    * scans — every cell's candidates scored at most once across the
+    * whole loop. Per-thread like [[ivfCellScanLog]]. */
   private val ivfScoreRanges: ThreadLocal[List[Seq[Int]]] =
     ThreadLocal.withInitial(() => Nil)
   private[graft] def ivfScoreLog: List[Seq[Int]] = ivfScoreRanges.get()
@@ -763,28 +761,10 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
       // with — the reference rewrites healed values back to its yaml,
       // database.rs:290-345), one row per knob in file order; auth_token
       // is redacted like any credential surface
-      val s = settings
-      val rows = Seq[(String, String)](
-        "max_columns" -> s.maxColumns.toString,
-        "min_columns" -> s.minColumns.toString,
-        "auto_commit" -> s.autoCommit.toString,
-        "memory_limit" -> s.memoryLimit.toString,
-        "ip" -> s.ip,
-        "connections_port" -> s.connectionsPort.toString,
-        "data_port" -> s.dataPort.toString,
-        "max_connections" -> s.maxConnections.toString,
-        "auth_token" -> (if (s.authToken.isEmpty) "" else "********"),
-        "secret_key_count" -> s.secretKeyCount.toString,
-        "wire_encryption" -> s.wireEncryption.toString,
-        "optimize_after_commits" -> s.optimizeAfterCommits.toString,
-        "analyze_after_commits" -> s.analyzeAfterCommits.toString,
-        "vacuum_after_commits" -> s.vacuumAfterCommits.toString,
-        "rebuild_ivf_after_commits" -> s.rebuildIvfAfterCommits.toString,
-        "vacuum_keep_last" -> s.vacuumKeepLast.toString,
-        "refresh_views_after_commit" -> s.refreshViewsAfterCommit.toString,
-        "index_probe_cap" -> s.indexProbeCap.toString,
-        "decont_broadcast_cap" -> s.decontBroadcastCap.toString,
-        "stats_distinct" -> s.statsDistinct)
+      val rows = settings.entries.map {
+        case ("auth_token", v) => "auth_token" -> (if (v.isEmpty) "" else "********")
+        case kv => kv
+      }
       resultSet(metaDf(
         Seq("ordinal" -> "INT", "setting" -> "TEXT", "value" -> "TEXT"),
         rows.zipWithIndex.map { case ((k, v), i) => Row(i + 1, k, v) }),
@@ -2028,29 +2008,19 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
         m.limit, m.atVersion, requireAll = m.all, docKeep = docKeep)
   }
 
-  /** Lower a SIMILAR to its candidate-pk DataFrame (one pk-named column,
-    * ascending, LIMIT-bounded): resolve a band/ivf index (explicit via
-    * USING, else the single non-text one), read the committed row with
-    * the given pk, and serve the index lookup for it. */
+  /** Lower a SIMILAR through one path: resolve the index through
+    * [[nearDupIndex]] (the near-dup funnels' resolver: lsh, simhash or
+    * ivf), rank the probe's band keys or nearest cells, widen the ivf
+    * probe under WHERE, rerank if SCORED. Unscored it serves the
+    * candidate pks (one pk-named column, ascending, LIMIT-bounded);
+    * SCORED serves (pk, score) score-desc/pk-asc. */
   private def similarDf(sm: Ast.Similar): DataFrame = {
     val explainOnly = explainLowering.get().booleanValue()
     requireNotView(sm.container, "an index")
     val d = catalog.get(sm.container)
     val (pkName, pkType) = d.columns.head
-    val defs = catalog.indexDefs(sm.container).filter(_.kind != "text")
-    val idef = sm.ix match {
-      case Some(n) => defs.find(_.ix == n).getOrElse(throw new ParseException(
-        s"No band/ANN index '$n' on '${sm.container}'"))
-      case None => defs match {
-        case Seq(one) => one
-        case Seq() => throw new ParseException(
-          s"SIMILAR needs an lsh/simhash/ivf index on '${sm.container}' " +
-            "(CREATE INDEX … USING lsh|simhash|ivf)")
-        case many => throw new ParseException(
-          s"'${sm.container}' has ${many.size} candidate indexes " +
-            s"(${many.map(_.ix).mkString(", ")}) — pick one with USING")
-      }
-    }
+    val (idef, _) = nearDupIndex(sm.container, sm.ix, None, sm.atVersion,
+      "SIMILAR")
     // PROBE p (multiprobe recall knob) rides the ivf probe-list only —
     // a band index has no cell geometry to widen. Against an ivf index
     // the knob must stay within the TRAINED cell count (the parser's
@@ -2066,19 +2036,18 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
       if (p > k) throw new ParseException(
         s"SIMILAR PROBE $p exceeds index '${idef.ix}' trained cell count $k")
     }
+    if (sm.vector.isDefined && idef.kind != "ivf")
+      throw new ParseException(
+        s"SIMILAR by literal vector serves from an ivf index; " +
+          s"'${idef.ix}' is a ${idef.kind} index over text")
     val nprobe = sm.probe.getOrElse(1)
     // pin the read version ONCE for the whole lookup: candidates, the
-    // scored snapshot fallback, and the all-emb marker check must all
-    // consult the SAME committed version — resolving "current" at each
-    // site independently would let a concurrent commit between lowering
-    // steps make the marker check disagree with the candidate set
-    // (marker true at v+1 while cands came from an unmarked v, silently
-    // dropping legacy candidates from the rerank). None only for a
-    // never-committed container (version 0 has no snapshot to pin).
+    // WHERE predicate, the probe row and the int8 exact fetch all read
+    // the SAME committed version, so a concurrent commit between
+    // lowering steps cannot mix two versions into one answer. None only
+    // for a never-committed container (version 0 has no snapshot).
     val pinnedAt: Option[Int] =
       sm.atVersion.orElse(Some(catalog.currentVersion(sm.container)).filter(_ > 0))
-    // the committed snapshot every stage reads (candidates' payloads,
-    // the WHERE predicate, the pk probe row) — ONE pinned version
     val snapshot = committed(sm.container, pinnedAt)
     // WHERE pred (round 14 — filtered ANN): lowered over the container
     // schema exactly like a SEARCH predicate, applied BEFORE the LIMIT
@@ -2093,435 +2062,233 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
           snapshot.filter(p).select(col(pkName).as("_sim_keep")),
           col("cand") === col("_sim_keep"), "left_semi")
     }
-    // ivf candidate sourcing is CELL-RANGED (round 16, r14 judge #2 /
-    // r15 judge #6): the probe's full nearest-cell ordering ranks ONCE
-    // (driver-side from the frozen centroid metadata for a literal
-    // vector — no job at all; one bounded 1×k job for a pk probe), and
-    // every widening step scans ONLY the cells it adds, unioning with
-    // the PERSISTED prior ranges — a cell's index parts are read at
-    // most once across the whole widening loop, instead of once per
-    // step as in the r15 shape (which re-ran assignment + a full-prefix
-    // scan on every doubling). Dedup-by-pk applies ONCE above the union
-    // (a duplicate-pk corpus can land copies in different cells, and
-    // the min-by-bytes representative must see every range).
     ivfCellScanLog = Nil
     ivfScoreLog = Nil
-    // min-by-bytes representative on the bounded-heap operator (round
-    // 17, guide §4 expression choice): `min` over a BINARY column has no
-    // mutable agg buffer, so Catalyst plans it as a SortAggregate —
-    // sort + exchange + sort per serve. TopKPerGroup(k=1) computes the
-    // identical representative (nulls-last via the helper key, then
-    // bytes-ascending — exactly min's null-skipping ordering; all-null
-    // groups keep their null row like min) with a heap partial pass and
-    // ONE exchange, no sorts anywhere.
+    // the probe row comes from the COMMITTED (possibly time-traveled)
+    // version, matching what that version's index covers (a staged,
+    // uncommitted row has no index rows yet — COMMIT first). An unknown
+    // pk probes nothing and serves the empty result — lookup semantics,
+    // not an error. (The lookup runs bounded metadata jobs at lowering —
+    // the probe row's band keys / vector collect driver-side, the IVF
+    // probe-list idiom — so even EXPLAIN SIMILAR executes those small
+    // scans before printing.)
+    def pkProbe(): (Any, DataFrame) = {
+      val key = AlbaType.coerce(pkType, AlbaType.tokenValue(sm.key))
+      if (key == null)
+        throw new ParseException(s"SIMILAR key $pkName must not be NULL")
+      note(s"similar: ${idef.kind} index '${idef.ix}' pk probe — the probe " +
+        "row's band keys / cluster ids collect at lowering (bounded " +
+        "per-lookup metadata jobs, the IVF probe-list idiom)")
+      (key, snapshot.filter(col(pkName) === lit(key)).limit(1))
+    }
+
+    if (idef.kind != "ivf") {
+      // query-by-TEXT probe (round 14 — the pre-ingest "is this NEW
+      // document a near-dup of the corpus?" check, the streaming gate's
+      // question, as an AQL surface): a string-literal key on a band
+      // index whose pk is NOT text can never be a pk — it is a literal
+      // DOCUMENT, banded like a corpus row. No self-exclusion: the
+      // literal names no corpus row (a sentinel qid that happened to
+      // equal a real pk would otherwise silently drop that row). On a
+      // TEXT-pk container a string literal stays a pk probe.
+      val (probe, selfExclude) = sm.key match {
+        case Token.Str(text)
+            if pkType.spark != org.apache.spark.sql.types.StringType =>
+          note(s"similar text probe: literal document banded through the " +
+            s"${idef.kind} index '${idef.ix}' (no corpus row — no " +
+            "self-exclusion); candidates are its band collisions")
+          (spark.range(1).select(lit(0L).cast(pkType.spark).as(pkName),
+            lit(text).as(idef.column)), false)
+        case _ => (pkProbe()._2, true)
+      }
+      val cands = predFiltered(graft.catalog.Index.bandLookup(catalog,
+        sm.container, idef, probe, pinnedAt, selfExclude))
+      val result =
+        if (sm.scored) bandRerank(sm, idef, pkName, snapshot, probe, cands)
+        else cands.select(col("cand").as(pkName))
+          .orderBy(col(pkName)).limit(sm.limit)
+      // band WHERE has NO widening dial (round 15, r14 judge #6): a band
+      // probe's collision set is already complete — there is no probe
+      // geometry to widen, so a selective predicate can under-fill the
+      // LIMIT even when enough matches exist elsewhere in the corpus.
+      // Surface that honestly. ONE execution serves both the note and the
+      // result (round 16): the LIMIT-capped rows collect once (≤ LIMIT
+      // rows — bounded per-lookup data, the index_probe_cap collect
+      // discipline) and are re-served as a local relation, so the
+      // collision scan never runs twice. EXPLAIN stays plan-only: the
+      // recall caveat is emitted STATICALLY — the geometry bound holds
+      // whether or not this probe under-fills — and the exhaustion COUNT
+      // happens only at serve time.
+      if (sm.where.isEmpty) return result
+      if (explainOnly) {
+        note(s"similar filtered (${idef.kind}): band probes have no " +
+          "widening geometry — WHERE-matching rows outside this " +
+          "probe's band collisions are unreachable from the index, so " +
+          s"a selective predicate can under-fill LIMIT ${sm.limit} " +
+          "(exhaustion is counted at serve time, in the same " +
+          "execution that serves the rows)")
+        return result
+      }
+      val rows = result.collect() // result is LIMIT-capped upstream
+      if (rows.length < sm.limit)
+        note(s"similar filtered (${idef.kind}): collision set " +
+          s"exhausted — ${rows.length} of LIMIT ${sm.limit} row(s); " +
+          "band probes have no widening geometry, so WHERE-matching " +
+          "rows outside this probe's band collisions are unreachable " +
+          "from the index")
+      return spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), result.schema)
+    }
+
+    // ivf: the probe's full nearest-cell ordering ranks ONCE, driver-side
+    // from the frozen centroid metadata — no job for a literal vector
+    // (no self-exclusion: the query is not a corpus row); for a pk probe
+    // one bounded ≤1-row fetch collects the probe VECTOR, which also
+    // serves as the SCORED query embedding (a 1-row LITERAL relation, so
+    // the serve plan never re-scans the probe row), and the probe's own
+    // pk is excluded. `qemb` is that query row, present iff SCORED.
+    val (cells, excludeId, qemb) = sm.vector match {
+      case Some(vec) =>
+        (graft.catalog.Index.ivfCellsRankedVector(catalog, sm.container,
+          idef, vec.map(_.toFloat)), None, Option.when(sm.scored)(
+          spark.range(1).select(array(vec.map(lit): _*).as("_sim_qemb"))))
+      case None =>
+        val (key, probe) = pkProbe()
+        val pkVec = probe
+          .select(graft.functions.Float32Unpack
+            .float32Unpack(col(idef.column)).as("_v"))
+          .limit(1).collect().headOption
+          .flatMap(r => Option(r.getSeq[Float](0)))
+        (pkVec.map(v => graft.catalog.Index.ivfCellsRankedVector(catalog,
+            sm.container, idef, v)).getOrElse(Seq.empty), Some(key),
+          Option.when(sm.scored)(pkVec match {
+            case Some(v) => spark.range(1).select(typedLit(v).as("_sim_qemb"))
+            case None => spark.range(0)
+              .select(typedLit(Seq.empty[Float]).as("_sim_qemb"))
+          }))
+    }
+    // a candidate's score against the query: exact float32 cosine, read
+    // INDEX-LOCALLY from the vector the lists store (FAISS list shape),
+    // or on int8 lists the APPROXIMATE cosine of the dequantized SQ8
+    // codes (exact float32 comes later, for the survivors only)
+    lazy val frameScore: Column =
+      if (idef.int8) {
+        val (mn, mx) = catalog.sqBounds(sm.container, idef.ix)
+        graft.functions.CosineSimilarity.cosineSim(
+          graft.functions.Int8Codec.int8Dequantize(col("cand_emb"), mn, mx),
+          col("_sim_qemb"))
+      } else graft.operators.TextDedup.exactScore("ivf",
+        graft.functions.Float32Unpack.float32Unpack(col("cand_emb")),
+        col("_sim_qemb"))
+    if (qemb.isDefined && !idef.int8)
+      note(s"similar scored: ivf '${idef.ix}' lists carry every vector " +
+        "(all-emb marker) — index-local rerank, no detection job")
+    // min-by-bytes duplicate-pk representative on the bounded-heap
+    // operator (round 17, guide §4 expression choice): `min` over a
+    // BINARY column has no mutable agg buffer, so Catalyst plans it as a
+    // SortAggregate — sort + exchange + sort per serve. TopKPerGroup(k=1)
+    // computes the identical representative (nulls-last via the helper
+    // key, then bytes-ascending — exactly min's null-skipping ordering;
+    // all-null groups keep their null row like min) with a heap partial
+    // pass and ONE exchange, no sorts anywhere.
     def dedupByPk(raw: DataFrame): DataFrame =
       graft.plans.TopK.perGroup(
           raw.withColumn("_sim_embnul", col("cand_emb").isNull),
           Seq("cand"), Seq("_sim_embnul" -> true, "cand_emb" -> true), 1)
-        .select(col("cand"), col("cand_emb"))
-    val ivfParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def addIvfRange(cells: Seq[Int], candsFor: Seq[Int] => DataFrame,
-        lo: Int, hi: Int): Unit = {
+        .drop("_sim_embnul")
+    // one cell range's frame: its candidates, deduped by pk and
+    // WHERE-filtered; SCORED adds each scoreable-vector row's score
+    // (NULL scores stay in: unscoreable rows drop only after the
+    // cross-range duplicate-pk pick, exactly as a one-range run does)
+    def frame(lo: Int, hi: Int): DataFrame = {
       val slice = cells.slice(lo, hi)
       ivfCellScanLog = ivfCellScanLog :+ slice
-      ivfParts += candsFor(slice)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    // ivf recall contract under WHERE: the probe list WIDENS (doubling
-    // from the requested PROBE, capped at the trained cell count) until
-    // the FILTERED candidates can fill the LIMIT — so "top-k nearest
-    // where pred" returns k whenever k matches exist in the indexed
-    // corpus; at full probe the answer is exact over it. Each widening
-    // step is one bounded count (≤ log2(k) steps), scanning new cells
-    // only. The per-range caches release (async) once the widened
-    // answer is fixed — the final serve re-reads each cell at most
-    // once, so total index reads stay ≤ 2 per cell.
-    def widenedIvfCands(cells: Seq[Int],
-        candsFor: Seq[Int] => DataFrame): DataFrame = {
-      if (pred.isEmpty || cells.isEmpty) {
-        ivfCellScanLog = ivfCellScanLog :+ cells.take(nprobe)
-        return dedupByPk(candsFor(cells.take(nprobe)))
-      }
-      val k = cells.size
-      var np = math.min(nprobe, k)
-      // try/finally (r16 advisor): a widening count job that throws
-      // mid-loop must still release every persisted range — otherwise
-      // the MEMORY_AND_DISK caches outlive the statement for the whole
-      // session. unpersist(false) is async, so the success path is
-      // unchanged (the final serve still reads the caches while live).
-      try {
-        addIvfRange(cells, candsFor, 0, np)
-        def acc = predFiltered(dedupByPk(ivfParts.reduce(_ unionByName _)))
-        while (np < k && acc.limit(sm.limit).count() < sm.limit) {
-          val next = math.min(k, np * 2)
-          addIvfRange(cells, candsFor, np, next)
-          np = next
-        }
-        if (np > nprobe) note(s"similar filtered: probe widened " +
-          s"$nprobe -> $np cell(s) to fill LIMIT ${sm.limit} under WHERE " +
-          "(each step scanned only its NEW cells; prior ranges persisted)")
-        acc
-      } finally ivfParts.foreach(_.unpersist(false))
-    }
-    // SCORED twin (round 15, r14 advisor): under WHERE the fill count
-    // must run against the POST-SCORE result — scoring drops rows the
-    // raw candidate count includes (NULL/zero-norm cosine, int8
-    // NULL-code rows), so counting candidates could stop widening while
-    // the reranked result under-fills.
-    //
-    // Carry-forward rerank (round 17, r16 judge #7): each widening step
-    // cosine-scores ONLY its new cells' candidates; the per-range
-    // SCORED frames persist and the serve resolves duplicate pks across
-    // ranges by the same min-by-bytes representative rule dedupByPk
-    // applies (scores are deterministic per payload, so picking the
-    // min-bytes copy's already-computed score ≡ scoring the min-bytes
-    // representative) — a candidate vector is unpacked and scored at
-    // most once across the whole loop, instead of once per step over
-    // the growing union. Applies to the all-emb float path (the common
-    // 100 TB case: every index part carries its vector). Two shapes
-    // keep the global per-step rescore, with the rationale in place:
-    // int8 — its approx-survivor cut (top-LIMIT on dequantized codes)
-    // is defined over the WHOLE candidate set, and per-range survivor
-    // unions would widen that published recall contract; legacy-
-    // carrying indexes — NULL-emb rows score via a snapshot fetch whose
-    // dedup interleaves with byte-carrying copies, which the scored
-    // union cannot re-resolve.
-    def widenedIvfScored(cells: Seq[Int],
-        candsFor: Seq[Int] => DataFrame, qemb: DataFrame): DataFrame = {
-      def serveFrom(raw: DataFrame) =
-        rerank(predFiltered(dedupByPk(raw)), qemb, snapshot)
-      if (pred.isEmpty || cells.isEmpty) {
-        ivfCellScanLog = ivfCellScanLog :+ cells.take(nprobe)
-        ivfScoreLog = ivfScoreLog :+ cells.take(nprobe)
-        return serveFrom(candsFor(cells.take(nprobe)))
-      }
-      val k = cells.size
-      var np = math.min(nprobe, k)
-      val carryForward = !idef.int8 && graft.catalog.Index.allPartsCarryEmb(
-        catalog, sm.container, idef, pinnedAt)
-      // carry-forward branch: scoredParts(i) = range i's candidates,
-      // range-deduped, WHERE-filtered, exact-scored — persisted so no
-      // later step recomputes it; released in the finally with ivfParts
-      // so a throwing widening job leaks neither cache (r16 advisor)
-      val scoredParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      try {
-        if (!carryForward) {
-          addIvfRange(cells, candsFor, 0, np)
-          ivfScoreLog = ivfScoreLog :+ cells.take(np)
-          var res = serveFrom(ivfParts.reduce(_ unionByName _))
-          while (np < k && res.count() < sm.limit) {
-            val next = math.min(k, np * 2)
-            addIvfRange(cells, candsFor, np, next)
-            np = next
-            ivfScoreLog = ivfScoreLog :+ cells.take(np)
-            res = serveFrom(ivfParts.reduce(_ unionByName _))
-          }
-          if (np > nprobe) note(s"similar filtered scored: probe widened " +
-            s"$nprobe -> $np cell(s) to fill LIMIT ${sm.limit} with SCORED " +
-            "rows under WHERE (fill counted post-rerank, so unscoreable " +
-            "rows never satisfy the contract; each step scanned only its " +
-            "NEW cells)")
-          return res
-        }
-        def scoreRange(lo: Int, hi: Int): Unit = {
-          val slice = cells.slice(lo, hi)
-          ivfCellScanLog = ivfCellScanLog :+ slice
-          ivfScoreLog = ivfScoreLog :+ slice
-          scoredParts += predFiltered(dedupByPk(candsFor(slice)))
-            .filter(col("cand_emb").isNotNull)
-            .crossJoin(broadcast(qemb))
-            .select(col("cand"), col("cand_emb"),
-              graft.operators.TextDedup.exactScore("ivf",
-                graft.functions.Float32Unpack.float32Unpack(col("cand_emb")),
-                col("_sim_qemb")).as("score"))
-            .filter(col("score").isNotNull)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        }
-        def served: DataFrame = {
-          val u = scoredParts.reduce(_ unionByName _)
-          // duplicate pks landed in DIFFERENT cells: min-by-bytes
-          // representative, the dedupByPk stance, resolved over the
-          // already-scored copies — on the bounded-heap operator (round
-          // 18, the dedupByPk treatment): the former row_number window
-          // sorted every pk group in full (Sort + Exchange + Sort);
-          // TopKPerGroup(k=1) ordered by (cand_emb asc) picks the same
-          // min-bytes copy (scored rows are non-NULL-emb by
-          // construction) with a heap partial pass and ONE exchange.
-          graft.plans.TopK.perGroup(u, Seq("cand"), Seq("cand_emb" -> true), 1)
-            .select(col("cand").as(pkName), col("score"))
-            .orderBy(col("score").desc, col(pkName)).limit(sm.limit)
-        }
-        scoreRange(0, np)
-        while (np < k && served.count() < sm.limit) {
-          val next = math.min(k, np * 2)
-          scoreRange(np, next)
-          np = next
-        }
-        if (np > nprobe) note(s"similar filtered scored: probe widened " +
-          s"$nprobe -> $np cell(s) to fill LIMIT ${sm.limit} with SCORED " +
-          "rows under WHERE (fill counted post-rerank; each step scanned " +
-          "AND scored only its NEW cells — prior ranges' scores carried " +
-          "forward, never recomputed)")
-        served
-      } finally {
-        ivfParts.foreach(_.unpersist(false))
-        scoredParts.foreach(_.unpersist(false))
+      val cands = predFiltered(dedupByPk(graft.catalog.Index
+        .ivfCellCandidates(catalog, sm.container, idef, slice, excludeId,
+          pinnedAt)))
+      qemb.fold(cands) { q =>
+        ivfScoreLog = ivfScoreLog :+ slice
+        cands.filter(col("cand_emb").isNotNull)
+          .crossJoin(broadcast(q))
+          .select(col("cand"), col("cand_emb"), frameScore.as("score"))
       }
     }
-    // band WHERE has NO widening dial (round 15, r14 judge #6): a band
-    // probe's collision set is already complete — there is no probe
-    // geometry to widen, so a selective predicate can under-fill the
-    // LIMIT even when enough matches exist elsewhere in the corpus.
-    // Surface that honestly. ONE execution serves both the note and the
-    // result (round 16, r15 judge #7 / advisor): the LIMIT-capped rows
-    // collect once (≤ LIMIT rows — bounded per-lookup data, the
-    // index_probe_cap collect discipline) and are re-served as a local
-    // relation, so the collision scan never runs twice. EXPLAIN skips
-    // the collect entirely and plans the lazy funnel (the note is a
-    // serve-time diagnostic; executing the scan during plan printing
-    // was the advisor's second half of the finding).
-    def noteBandUnderfill(result: DataFrame): DataFrame = {
-      if (sm.where.isDefined && idef.kind != "ivf") {
-        // EXPLAIN stays plan-only (r15 advisor: the r15 shape ran the
-        // count job during plan printing): the recall caveat is emitted
-        // STATICALLY — the geometry bound holds whether or not this
-        // probe under-fills — and the exhaustion COUNT happens only at
-        // serve time, inside the one materialization below.
-        if (explainOnly) {
-          note(s"similar filtered (${idef.kind}): band probes have no " +
-            "widening geometry — WHERE-matching rows outside this " +
-            "probe's band collisions are unreachable from the index, so " +
-            s"a selective predicate can under-fill LIMIT ${sm.limit} " +
-            "(exhaustion is counted at serve time, in the same " +
-            "execution that serves the rows)")
-          return result
-        }
-        val rows = result.collect() // result is LIMIT-capped upstream
-        if (rows.length < sm.limit)
-          note(s"similar filtered (${idef.kind}): collision set " +
-            s"exhausted — ${rows.length} of LIMIT ${sm.limit} row(s); " +
-            "band probes have no widening geometry, so WHERE-matching " +
-            "rows outside this probe's band collisions are unreachable " +
-            "from the index")
-        return spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), result.schema)
-      }
-      result
-    }
-    // SCORED rerank: exact cosine of each candidate's embedding against
-    // the 1-row broadcast query embedding — the ANN-then-exact-rerank
-    // serving shape. The IVF lists STORE the packed vector (FAISS list
-    // shape), so the rerank is INDEX-LOCAL: it reads only the probed
-    // cells' index parts, never a corpus-wide candidate fetch. Parts
-    // hard-link-carried from pre-emb versions read emb as NULL — those
-    // candidates fall back to a pk join against the snapshot. Whether
-    // ANY such part exists is a catalog fact (the `_ALL_EMB` marker the
-    // build maintains): a marked index skips the legacy branch with NO
-    // job at lowering; only an unmarked one pays a bounded detection
-    // job over the pruned cells. An unknown-pk probe
-    // yields an empty candidate set → empty result, the lookup
-    // semantics the unscored form has.
-    def rerank(cands: DataFrame, qemb: DataFrame,
-        snapshot: => DataFrame): DataFrame = {
-      def score(embArr: Column): Column = graft.operators.TextDedup
-        .exactScore("ivf", embArr, col("_sim_qemb")).as("score")
-      def unpack(c: Column): Column =
-        graft.functions.Float32Unpack.float32Unpack(c)
-      // INT8 lists (round 14): rank candidates APPROXIMATELY on the
-      // dequantized codes — still index-local, one read of the probed
-      // cells — keep the top ≤limit, then fetch exact float32 for JUST
-      // those pks from the snapshot (a literal-isin pruned point scan,
-      // the bandRerank fetch shape; ≤limit pks is bounded per-lookup
-      // metadata) and emit EXACT scores. An int8 index's parts always
-      // carry codes (the option postdates the emb-storing list schema,
-      // so no pre-emb carry can exist); a NULL code row (dim-mismatched
-      // payload) can't be scored from the list and drops, like a
-      // zero-norm vector. Recall contract: the approximate stage can
-      // rank a near-tie across the quantization step differently than
-      // exact cosine would — the survivors are exact-reranked, but a
-      // vector whose approx score fell just below the limit cut is
-      // gone (the standard SQ8 serving trade; REBUILD retrains the
-      // code book after drift).
-      if (idef.int8) {
-        val (mn, mx) = catalog.sqBounds(sm.container, idef.ix)
-        val approx = cands.filter(col("cand_emb").isNotNull)
-          .crossJoin(broadcast(qemb))
-          .select(col("cand"),
-            graft.functions.CosineSimilarity.cosineSim(
-              graft.functions.Int8Codec.int8Dequantize(col("cand_emb"), mn, mx),
-              col("_sim_qemb")).as("ascore"))
-          .filter(col("ascore").isNotNull)
-          .orderBy(col("ascore").desc, col("cand"))
-          .limit(sm.limit)
-        val survivors = approx.select(col("cand")).collect().map(_.get(0))
-        note(s"similar scored (ivf int8): ${survivors.length} approx " +
-          "survivor(s) from the quantized lists; exact float32 fetched " +
-          "via a literal-isin pruned point scan")
-        val fetchPred =
-          if (survivors.isEmpty) lit(false)
-          else col(pkName).isin(survivors.toIndexedSeq: _*)
-        return snapshot.filter(fetchPred)
-          // min-by-bytes duplicate-pk representative, the ivfLookup stance
-          .groupBy(col(pkName)).agg(min(col(idef.column)).as("_sim_pl"))
-          .crossJoin(broadcast(qemb))
-          .select(col(pkName), score(unpack(col("_sim_pl"))))
-          .filter(col("score").isNotNull)
+    // SCORED rerank of the deduped rows (cand, cand_emb, score): a NULL
+    // score (zero-norm or dim-mismatched vector — no defined angle)
+    // drops rather than surfacing a scoreless row inside LIMIT. INT8
+    // lists (round 14) keep the top ≤limit by approximate score over
+    // the WHOLE candidate set, then fetch exact float32 for JUST those
+    // pks from the snapshot (a literal-isin pruned point scan, the
+    // bandRerank fetch shape; ≤limit pks is bounded per-lookup metadata)
+    // and emit EXACT scores. Recall contract: the approximate stage can
+    // rank a near-tie across the quantization step differently than
+    // exact cosine would — the survivors are exact-reranked, but a
+    // vector whose approx score fell just below the limit cut is gone
+    // (the standard SQ8 serving trade; REBUILD retrains the code book
+    // after drift).
+    def rerank(u: DataFrame, qemb: DataFrame): DataFrame = {
+      val scoreable = u.filter(col("score").isNotNull)
+      if (!idef.int8)
+        return scoreable.select(col("cand").as(pkName), col("score"))
           .orderBy(col("score").desc, col(pkName)).limit(sm.limit)
-      }
-      val fast = cands.filter(col("cand_emb").isNotNull)
+      val survivors = scoreable.orderBy(col("score").desc, col("cand"))
+        .limit(sm.limit).select(col("cand")).collect().map(_.get(0))
+      note(s"similar scored (ivf int8): ${survivors.length} approx " +
+        "survivor(s) from the quantized lists; exact float32 fetched " +
+        "via a literal-isin pruned point scan")
+      val fetchPred =
+        if (survivors.isEmpty) lit(false)
+        else col(pkName).isin(survivors.toIndexedSeq: _*)
+      snapshot.filter(fetchPred)
+        // min-by-bytes duplicate-pk representative, the ivfLookup stance
+        .groupBy(col(pkName)).agg(min(col(idef.column)).as("_sim_pl"))
         .crossJoin(broadcast(qemb))
-        .select(col("cand").as(pkName), score(unpack(col("cand_emb"))))
-      val legacyIds = cands.filter(col("cand_emb").isNull).select(col("cand"))
-      // catalog FACT first (the `_ALL_EMB` marker the incremental build
-      // maintains): when every index part is known to store the vector —
-      // the common all-new case — the legacy-row detection job is
-      // skipped entirely, so lowering (and EXPLAIN) executes nothing
-      // over the cells. Only an unmarked index (pre-marker build, or
-      // parts carried from one) pays the bounded one-job detection.
-      val allEmb = graft.catalog.Index.allPartsCarryEmb(
-        catalog, sm.container, idef, pinnedAt)
-      note(if (allEmb)
-        s"similar scored: ivf '${idef.ix}' lists carry every vector " +
-          "(all-emb marker) — index-local rerank, no detection job"
-      else
-        s"similar scored: ivf '${idef.ix}' lacks the all-emb marker — " +
-          "one bounded legacy-row detection job over the probed cells")
-      val all =
-        if (allEmb || legacyIds.isEmpty) fast
-        else fast.unionByName(snapshot.alias("_sim_s")
-          .join(legacyIds.alias("_sim_c"),
-            col(s"_sim_s.$pkName") === col("_sim_c.cand"))
-          .crossJoin(broadcast(qemb))
-          .select(col(s"_sim_s.$pkName").as(pkName),
-            score(unpack(col(idef.column)))))
-      // a zero-norm candidate has no defined angle (cosine NULL) — it
-      // is dropped rather than surfacing a scoreless row inside LIMIT
-      all.filter(col("score").isNotNull)
+        .select(col(pkName), graft.operators.TextDedup.exactScore("ivf",
+          graft.functions.Float32Unpack.float32Unpack(col("_sim_pl")),
+          col("_sim_qemb")).as("score"))
+        .filter(col("score").isNotNull)
         .orderBy(col("score").desc, col(pkName)).limit(sm.limit)
     }
-    // literal-vector probe (query-by-embedding): nearest trained
-    // centroid of the literal vector → that cell's candidates, no
-    // self-exclusion (the query is not a corpus row). ivf only — a
-    // band (lsh/simhash) index derives from TEXT, which a float vector
-    // can't probe. (A match, not a foreach+return: the non-local return
-    // rides a control-flow exception any broad Throwable catch between
-    // here and the method boundary would swallow.)
-    sm.vector match {
-      case Some(vec) =>
-        if (idef.kind != "ivf")
-          throw new ParseException(
-            s"SIMILAR by literal vector serves from an ivf index; " +
-              s"'${idef.ix}' is a ${idef.kind} index over text")
-        requireCommittedVersion(sm.container, sm.atVersion)
-        // cell ordering from the frozen centroid metadata — driver-side,
-        // zero jobs; no self-exclusion (the query is not a corpus row)
-        val vCells = catalog.ivfProbeCellsVector(sm.container, idef.ix,
-          vec.map(_.toFloat))
-        def vCellCands(cs: Seq[Int]) = catalog.ivfCellCandidates(
-          sm.container, idef.ix, cs, excludeId = None, at = pinnedAt)
-        if (sm.scored) {
-          val qemb = spark.range(1)
-            .select(array(vec.map(lit): _*).as("_sim_qemb"))
-          return widenedIvfScored(vCells, vCellCands, qemb)
-        }
-        return widenedIvfCands(vCells, vCellCands)
-          .select(col("cand").as(pkName))
-          .orderBy(col(pkName))
-          .limit(sm.limit)
-      case None => ()
+    // the served rows of the ranges so far: duplicate pks whose copies
+    // landed in DIFFERENT cells resolve once, by the same min-by-bytes
+    // pick over the union — so the answer equals a one-range run over
+    // the same cells (one range needs no such pick)
+    def serve(frames: Seq[DataFrame]): DataFrame = {
+      val u =
+        if (frames.size == 1) frames.head
+        else dedupByPk(frames.reduce(_ unionByName _))
+      qemb.fold(u.select(col("cand").as(pkName)).orderBy(col(pkName))
+        .limit(sm.limit))(rerank(u, _))
     }
-    // query-by-TEXT probe (round 14 — the pre-ingest "is this NEW
-    // document a near-dup of the corpus?" check, the streaming gate's
-    // question, as an AQL surface): a string-literal key on a band
-    // index whose pk is NOT text can never be a pk — it is a literal
-    // DOCUMENT. Shingle/simhash it, probe its band keys, rerank exactly
-    // like the pk form (SCORED = exact verify measure). No
-    // self-exclusion: the literal names no corpus row, so the band
-    // lookup serves every collision (selfExclude = false — a sentinel
-    // qid that happened to equal a real pk would otherwise silently
-    // drop that row). On a TEXT-pk container a string literal stays a
-    // pk probe — the reference's pk-lookup semantics win there.
-    sm.key match {
-      case Token.Str(text)
-          if (idef.kind == "lsh" || idef.kind == "simhash") &&
-            pkType.spark != org.apache.spark.sql.types.StringType =>
-        val probeDf = spark.range(1).select(
-          lit(0L).cast(pkType.spark).as(pkName), lit(text).as(idef.column))
-        note(s"similar text probe: literal document banded through the " +
-          s"${idef.kind} index '${idef.ix}' (no corpus row — no " +
-          "self-exclusion); candidates are its band collisions")
-        val cands = predFiltered(catalog.indexLookup(sm.container,
-          idef.ix, probeDf, pinnedAt, selfExclude = false))
-        if (sm.scored)
-          return noteBandUnderfill(
-            bandRerank(sm, idef, pkName, snapshot, probeDf, cands))
-        return noteBandUnderfill(cands
-          .select(col("cand").as(pkName))
-          .orderBy(col(pkName))
-          .limit(sm.limit))
-      case _ => ()
-    }
-    val key = AlbaType.coerce(pkType, AlbaType.tokenValue(sm.key))
-    if (key == null)
-      throw new ParseException(s"SIMILAR key $pkName must not be NULL")
-    // the probe row comes from the COMMITTED (possibly time-traveled)
-    // version, matching what that version's index covers (a staged,
-    // uncommitted row has no index rows yet — COMMIT first). An unknown
-    // pk probes nothing and returns the empty candidate set — lookup
-    // semantics, not an error. (The lookup itself runs bounded
-    // metadata jobs at lowering — the probe row's band keys / probed
-    // clusters collect driver-side, the IVF probe-list idiom — so even
-    // EXPLAIN SIMILAR executes those small scans before printing.)
-    val probe = snapshot.filter(col(pkName) === lit(key)).limit(1)
-    note(s"similar: ${idef.kind} index '${idef.ix}' pk probe — the probe " +
-      "row's band keys / cluster ids collect at lowering (bounded " +
-      "per-lookup metadata jobs, the IVF probe-list idiom)")
-    if (sm.scored && idef.kind != "ivf") {
-      val cands = predFiltered(catalog.indexLookup(sm.container, idef.ix,
-        probe, pinnedAt))
-      return noteBandUnderfill(
-        bandRerank(sm, idef, pkName, snapshot, probe, cands))
-    }
-    // pk-probe cell ordering (round 17): ONE bounded probe-row fetch
-    // (≤1 row, ≤dims floats — per-lookup metadata) collects the probe
-    // VECTOR, and the full cell ranking then runs driver-side over the
-    // frozen centroid metadata (ivfProbeCellsVector — the literal-
-    // vector path's zero-job ranking, same d2-round-6/sid numbers). The
-    // r16 shape ran a distributed 1×k crossJoin job for the ranking AND
-    // re-scanned the probe row as a broadcast subtree for the SCORED
-    // query embedding — two reads of one row, and on a duplicate-pk
-    // corpus the two limit(1) picks could even disagree; one fetch
-    // serves both. Self-exclusion by the probe's own pk literal.
-    lazy val pkVec: Option[Seq[Float]] = probe
-      .select(graft.functions.Float32Unpack
-        .float32Unpack(col(idef.column)).as("_v"))
-      .limit(1).collect().headOption
-      .flatMap(r => Option(r.getSeq[Float](0)))
-    def pkCells() = pkVec
-      .map(v => catalog.ivfProbeCellsVector(sm.container, idef.ix, v))
-      .getOrElse(Seq.empty)
-    def pkCellCands(cs: Seq[Int]) = catalog.ivfCellCandidates(
-      sm.container, idef.ix, cs, excludeId = Some(key), at = pinnedAt)
-    if (sm.scored) { // ivf — post-rerank fill count under WHERE
-      // query embedding = the probe row's own vector, re-served as a
-      // 1-row LITERAL relation (no second probe scan in the serve plan)
-      val qemb = pkVec match {
-        case Some(v) => spark.range(1)
-          .select(typedLit(v).as("_sim_qemb"))
-        case None => spark.range(0)
-          .select(typedLit(Seq.empty[Float]).as("_sim_qemb"))
+    // ivf recall contract under WHERE (rounds 14–17, the incremental
+    // top-k shape): the probe list WIDENS — doubling from PROBE, capped
+    // at the trained cell count — until the SERVED rows fill the LIMIT
+    // (counted after scoring, so unscoreable rows never satisfy it), so
+    // "top-k nearest where pred" returns k whenever k matches exist in
+    // the indexed corpus; at full probe the answer is exact over it.
+    // Each step scans and scores ONLY the cells it adds; earlier ranges'
+    // frames stay persisted and are never recomputed. The caches release
+    // (async) in the finally, so a throwing count job leaks none.
+    val k = cells.size
+    var np = math.min(nprobe, k)
+    val frames = scala.collection.mutable.ArrayBuffer(frame(0, np))
+    if (pred.isEmpty || np == k) return serve(frames.toSeq)
+    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    try {
+      frames.head.persist(level)
+      var res = serve(frames.toSeq)
+      while (np < k && res.count() < sm.limit) {
+        val next = math.min(k, np * 2)
+        frames += frame(np, next).persist(level)
+        np = next
+        res = serve(frames.toSeq)
       }
-      return widenedIvfScored(pkCells(), pkCellCands, qemb)
-    }
-    val cands =
-      if (idef.kind == "ivf")
-        widenedIvfCands(pkCells(), pkCellCands)
-      else predFiltered(catalog.indexLookup(sm.container, idef.ix, probe,
-        pinnedAt))
-    noteBandUnderfill(cands
-      .select(col("cand").as(pkName))
-      .orderBy(col(pkName))
-      .limit(sm.limit))
+      if (np > nprobe) note(s"similar filtered: probe widened $nprobe -> " +
+        s"$np cell(s) to fill LIMIT ${sm.limit} under WHERE (fill counted " +
+        "on the served rows; each step scanned" +
+        (if (sm.scored) " and scored" else "") + " only its NEW cells)")
+      res
+    } finally frames.foreach(_.unpersist(false))
   }
 
   /** SCORED rerank for band (lsh/simhash) indexes — the dedup half of
@@ -2546,9 +2313,6 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
   private def bandRerank(sm: Ast.Similar, idef: graft.catalog.Index.Def,
       pkName: String, snapshot: DataFrame, probe: DataFrame,
       cands: DataFrame): DataFrame = {
-    if (idef.kind != "lsh" && idef.kind != "simhash") throw new ParseException(
-      s"SIMILAR SCORED serves from an ivf/lsh/simhash index; " +
-        s"'${idef.ix}' is a ${idef.kind} index")
     val fetched = boundedIds(cands.select(col("cand")), IndexProbeCap) match {
       case Some(ids) =>
         note(s"similar scored (${idef.kind}): ${ids.length} candidate " +

@@ -379,23 +379,6 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     }
   }
 
-  /** Driver-side full cell ordering for a literal query vector — see
-    * [[Index.ivfCellsRankedVector]] (no job at all). */
-  def ivfProbeCellsVector(name: String, ix: String, vec: Seq[Float]): Seq[Int] = {
-    val d = indexDefs(name).find(_.ix == ix)
-      .getOrElse(sys.error(s"No index '$ix' on '$name'"))
-    Index.ivfCellsRankedVector(this, name, d, vec)
-  }
-
-  /** Raw (cand, cand_emb) list rows for an explicit literal cell set —
-    * see [[Index.ivfCellCandidates]] (the incremental-widening unit). */
-  def ivfCellCandidates(name: String, ix: String, cells: Seq[Int],
-      excludeId: Option[Any] = None, at: Option[Int] = None): DataFrame = {
-    val d = indexDefs(name).find(_.ix == ix)
-      .getOrElse(sys.error(s"No index '$ix' on '$name'"))
-    Index.ivfCellCandidates(this, name, d, cells, excludeId, at)
-  }
-
   /** BM25 top-k over a `text` index — see [[Index.textLookup]]. */
   def textSearch(name: String, ix: String, terms: Seq[String],
       k: Int = 20, at: Option[Int] = None): DataFrame = {

@@ -140,9 +140,8 @@ object Index {
         // IVF inverted lists STORE the packed vector alongside the
         // assignment (the FAISS list shape, Johnson et al. 2017): a
         // SCORED rerank then reads only the probed cells' index parts —
-        // never a corpus-wide candidate fetch. Parts carried from
-        // pre-emb versions read emb as NULL; the rerank falls back to a
-        // snapshot join for exactly those rows.
+        // never a corpus-wide candidate fetch. A directory that may
+        // hold pre-emb parts is refused at read ([[requireAllEmb]]).
         case "ivf" => StructType(Seq(
           StructField("id", pkType), StructField("cluster", IntegerType),
           StructField("emb", BinaryType)))
@@ -546,6 +545,7 @@ object Index {
       return cat.spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), full)
     ensureAt(cat, container, idef, v)
+    requireAllEmb(cat, container, idef, v)
     cat.spark.read.schema(full)
       .parquet(ixDir(cat, container, v, idef.ix).toString)
   }
@@ -722,9 +722,9 @@ object Index {
   /** Raw list rows for an EXPLICIT literal cell set — each call scans
     * exactly `cells`' index parts (literal-isin, bucket/row-group
     * pruned), so a widening step touches only the cells it adds; the
-    * caller unions ranges and dedups by pk ONCE above the union (a
-    * duplicate-pk corpus can land copies in different cells, so the
-    * per-pk min-by-bytes pick must see every range). `excludeId` is the
+    * caller resolves duplicate pks across its ranges (a duplicate-pk
+    * corpus can land copies in different cells, so the per-pk
+    * min-by-bytes pick must see every range). `excludeId` is the
     * pk-probe self-exclusion; literal-vector probes pass None. */
   private[graft] def ivfCellCandidates(cat: Catalog, container: String,
       idef: Def, cells: Seq[Int], excludeId: Option[Any],
@@ -938,24 +938,26 @@ object Index {
 
   /** Format marker for ivf index directories whose parts ALL store the
     * packed vector (the r12 list schema): written by the incremental
-    * build when nothing was carried from an UNMARKED (possibly pre-emb)
-    * version. `_`-prefixed, so Spark's file listing never sees it. */
+    * build when nothing was carried from an UNMARKED (pre-emb) version.
+    * `_`-prefixed, so Spark's file listing never sees it. */
   private[catalog] val AllEmbMarker = "_ALL_EMB"
 
-  /** True iff the ivf index at version `at` is KNOWN to store a vector
-    * in every part (the [[AllEmbMarker]] catalog fact): the SCORED
-    * rerank consults this instead of running a per-query legacy-row
-    * detection job over the probed cells — so lowering (and EXPLAIN)
-    * of the common all-new case executes nothing. An unmarked index
-    * (pre-marker build, or parts carried from one) answers false and
-    * keeps the bounded one-job detection + snapshot fallback;
-    * REBUILD re-derives every part and restores the marker. */
-  def allPartsCarryEmb(cat: Catalog, container: String, idef: Def,
-      at: Option[Int] = None): Boolean = {
-    require(idef.kind == "ivf", s"index '${idef.ix}' is not an ivf index")
-    val v = at.getOrElse(cat.currentVersion(container))
-    v == 0 || Files.exists(ixDir(cat, container, v, idef.ix).resolve(AllEmbMarker))
-  }
+  /** The ivf format gate, the [[requireBandTokV]] twin: every ivf build
+    * (create, backfill, COMMIT, RESTORE, CLONE, REBUILD) writes the
+    * [[AllEmbMarker]], so an unmarked index directory holds parts that
+    * may lack the stored vector — written before the lists carried it,
+    * or with the marker removed by hand. SIMILAR SCORED, the ANN ingest
+    * gate and the k-NN enrichment score from the list vector, so
+    * [[read]] refuses such a directory for every reader with a REBUILD
+    * pointer rather than silently dropping candidates. */
+  private def requireAllEmb(cat: Catalog, container: String, idef: Def,
+      v: Int): Unit =
+    if (idef.kind == "ivf" &&
+        !Files.exists(ixDir(cat, container, v, idef.ix).resolve(AllEmbMarker)))
+      sys.error(s"ivf index '${idef.ix}' on '$container' at version $v " +
+        "lacks the all-emb marker: its parts may predate the lists' " +
+        "stored vectors, which every ivf reader scores from — REBUILD " +
+        s"INDEX ${idef.ix} ON $container to re-derive every part")
 
   /** Commit hook, called by `Catalog.prepare` after the data files
     * land in `tmp` and before the atomic publish move. No-op unless the

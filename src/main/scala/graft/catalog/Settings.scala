@@ -160,29 +160,32 @@ final case class Settings(
     s
   }
 
-  def toYaml: String =
-    s"""max_columns: $maxColumns
-       |min_columns: $minColumns
-       |auto_commit: $autoCommit
-       |memory_limit: $memoryLimit
-       |ip: $ip
-       |connections_port: $connectionsPort
-       |data_port: $dataPort
-       |max_connections: $maxConnections
-       |auth_token: $authToken
-       |secret_key_count: $secretKeyCount
-       |wire_encryption: $wireEncryption
-       |optimize_after_commits: $optimizeAfterCommits
-       |analyze_after_commits: $analyzeAfterCommits
-       |vacuum_after_commits: $vacuumAfterCommits
-       |vacuum_keep_last: $vacuumKeepLast
-       |rebuild_ivf_after_commits: $rebuildIvfAfterCommits
-       |refresh_views_after_commit: $refreshViewsAfterCommit
-       |index_probe_cap: $indexProbeCap
-       |funnel_pair_cap: $funnelPairCap
-       |decont_broadcast_cap: $decontBroadcastCap
-       |stats_distinct: $statsDistinct
-       |""".stripMargin
+  /** Every knob as its (`settings.yaml` key, value), in file order —
+    * the one list [[toYaml]] writes and SHOW SETTINGS serves. */
+  def entries: Seq[(String, String)] = Seq(
+    "max_columns" -> maxColumns.toString,
+    "min_columns" -> minColumns.toString,
+    "auto_commit" -> autoCommit.toString,
+    "memory_limit" -> memoryLimit.toString,
+    "ip" -> ip,
+    "connections_port" -> connectionsPort.toString,
+    "data_port" -> dataPort.toString,
+    "max_connections" -> maxConnections.toString,
+    "auth_token" -> authToken,
+    "secret_key_count" -> secretKeyCount.toString,
+    "wire_encryption" -> wireEncryption.toString,
+    "optimize_after_commits" -> optimizeAfterCommits.toString,
+    "analyze_after_commits" -> analyzeAfterCommits.toString,
+    "vacuum_after_commits" -> vacuumAfterCommits.toString,
+    "vacuum_keep_last" -> vacuumKeepLast.toString,
+    "rebuild_ivf_after_commits" -> rebuildIvfAfterCommits.toString,
+    "refresh_views_after_commit" -> refreshViewsAfterCommit.toString,
+    "index_probe_cap" -> indexProbeCap.toString,
+    "funnel_pair_cap" -> funnelPairCap.toString,
+    "decont_broadcast_cap" -> decontBroadcastCap.toString,
+    "stats_distinct" -> statsDistinct)
+
+  def toYaml: String = entries.map { case (k, v) => s"$k: $v\n" }.mkString
 }
 
 object Settings {

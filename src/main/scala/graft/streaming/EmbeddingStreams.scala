@@ -38,30 +38,22 @@ object EmbeddingStreams {
   }
 
   /** True candidate vectors for raw ivf-lookup rows (qid, cand,
-    * cand_emb): index-local when every list row carries the float32
-    * vector; snapshot pk-join for int8 lists (they carry SQ8 CODES —
-    * an exact-cosine decision must not move with the quantization
-    * grid) and for legacy NULL-emb carries (parts hard-linked from a
-    * pre-emb build). Min-pick on duplicate pks, the ivfLookup stance.
-    * Shared by the near-dup ingest gate and the k-NN enrichment. */
+    * cand_emb): index-local for float32 lists (every list row carries
+    * the vector — [[graft.catalog.Index.read]] refuses any other ivf
+    * directory); a snapshot pk-join for int8 lists (they carry SQ8
+    * CODES — an exact-cosine decision must not move with the
+    * quantization grid), min-pick on duplicate pks, the ivfLookup
+    * stance. Shared by the near-dup ingest gate and the k-NN
+    * enrichment. */
   private[streaming] def withTrueCandVectors(rawCands: DataFrame,
       catalog: graft.catalog.Catalog, container: String,
       idef: graft.catalog.Index.Def, pk: String, embCol: String): DataFrame =
-    if (idef.int8)
-      rawCands.select(col("qid"), col("cand"))
-        .join(catalog.read(container)
-          .select(col(pk).as("cand"), col(embCol).as("cand_emb")), Seq("cand"))
-        .groupBy(col("qid"), col("cand"))
-        .agg(min(col("cand_emb")).as("cand_emb"))
-    else if (graft.catalog.Index.allPartsCarryEmb(catalog, container, idef))
-      rawCands
-    else rawCands.filter(col("cand_emb").isNotNull).unionByName(
-      rawCands.filter(col("cand_emb").isNull)
-        .select(col("qid"), col("cand"))
-        .join(catalog.read(container)
-          .select(col(pk).as("cand"), col(embCol).as("cand_emb")), Seq("cand"))
-        .groupBy(col("qid"), col("cand"))
-        .agg(min(col("cand_emb")).as("cand_emb")))
+    if (!idef.int8) rawCands
+    else rawCands.select(col("qid"), col("cand"))
+      .join(catalog.read(container)
+        .select(col(pk).as("cand"), col(embCol).as("cand_emb")), Seq("cand"))
+      .groupBy(col("qid"), col("cand"))
+      .agg(min(col("cand_emb")).as("cand_emb"))
 
   /** One micro-batch of STREAMING k-NN ENRICHMENT (round 16) — the
     * streaming twin of `SIMILAR c1 AGAINST c2 … SCORED`: each batch row

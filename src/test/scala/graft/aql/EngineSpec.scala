@@ -2555,4 +2555,42 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq("ov_a", "ov_b", "ov_e", "ov_t", "ov_f").foreach(c =>
       eng.execute(s"DELETE CONTAINER $c"))
   }
+
+  test("57 SHOW SETTINGS serves every settings.yaml key, in file order") {
+    val dir2 = java.nio.file.Files.createTempDirectory("graft-showset-keys")
+    val eng2 = new Engine(TestSpark.spark, dir2.toString) // writes the defaults
+    val fileKeys = java.nio.file.Files.readAllLines(
+        dir2.resolve(graft.catalog.Settings.FileName))
+      .toArray(Array.empty[String]).toSeq
+      .filter(_.contains(":")).map(_.takeWhile(_ != ':').trim)
+    val shown = eng2.orderedResult(eng2.execute("SHOW SETTINGS")
+      .asInstanceOf[Engine.ResultSet].cursorId).get.collect()
+      .map(_.getString(1)).toSeq
+    assert(shown == fileKeys, s"SHOW SETTINGS $shown vs settings.yaml $fileKeys")
+  }
+
+  test("58 SIMILAR resolves lsh/simhash/ivf indexes only: a value index " +
+      "is no candidate and no USING target") {
+    val dir2 = java.nio.file.Files.createTempDirectory("graft-simres")
+    val eng2 = new Engine(TestSpark.spark, dir2.toString)
+    eng2.execute("CREATE CONTAINER sr ['doc_id','lang','body'] [BIGINT, TEXT, TEXT]")
+    val base = "the quick brown fox jumps over the lazy dog near the river"
+    import TestSpark.spark.implicits._
+    eng2.catalog.overwrite("sr", Seq(
+      (1L, "en", base), (2L, "en", base + " today"),
+      (3L, "fr", base + " maintenant"),
+      (4L, "en", "pack my box with five dozen liquor jugs tonight ok"))
+      .toDF("doc_id", "lang", "body"))
+    eng2.execute("CREATE INDEX nd ON sr ['body'] USING lsh")
+    eng2.execute("CREATE INDEX vl ON sr ['lang'] USING value")
+    def ids(aql: String) = eng2.execute(aql).asInstanceOf[Engine.ResultSet]
+      .df.collect().map(_.getLong(0)).toSeq
+    // the value index does not compete: the lsh index is the only one
+    val viaLsh = ids("SIMILAR 1 ON sr USING nd LIMIT 5")
+    assert(viaLsh.nonEmpty, "doc 1 has band collisions")
+    assert(ids("SIMILAR 1 ON sr LIMIT 5") == viaLsh)
+    // naming the value index is a statement error naming the kinds
+    val e = intercept[ParseException](ids("SIMILAR 1 ON sr USING vl LIMIT 5"))
+    assert(e.getMessage.contains("lsh/simhash/ivf"), e.getMessage)
+  }
 }

@@ -239,4 +239,64 @@ class FilteredAnnPropertySpec extends AnyFunSuite {
       s"expected LocalTableScanExec leaves, got:\n$exec")
     assert(df.collect().map(_.getLong(0)).toSet == Set(2L))
   }
+
+  /** The one widening loop's contract over ivf index `ix` of `fdp`
+    * (SCORED or not, under a selective WHERE): every step scans — and
+    * SCORED, scores — a DISJOINT new cell range, the widened result
+    * equals the same statement at PROBE = the final width (served in
+    * one step), and each pk is served once. */
+  private def checkWidening(eng: Engine, ix: String, qLit: String,
+      scored: Boolean): Unit = {
+    def run(probe: Option[Int]) = {
+      val rows = eng.execute(s"SIMILAR $qLit ON fdp USING $ix" +
+          probe.fold("")(p => s" PROBE $p") + " WHERE tag = 'en' LIMIT 3" +
+          (if (scored) " SCORED" else ""))
+        .asInstanceOf[Engine.ResultSet].df.collect()
+        .map(r => (r.getLong(0), if (scored) r.getDouble(1) else 0.0)).toSeq
+      (rows, eng.ivfCellScanLog, eng.ivfScoreLog)
+    }
+    val what = s"$ix${if (scored) " SCORED" else ""}"
+    val (widened, scans, scores) = run(None)
+    val flat = scans.flatten
+    assert(scans.size >= 2, s"$what: expected widening, got $scans")
+    assert(flat.distinct.size == flat.size, s"$what: a cell re-scanned: $scans")
+    assert(scores == (if (scored) scans else Nil),
+      s"$what: score ranges $scores != scan ranges $scans")
+    val (oneStep, oneScans, _) = run(Some(flat.size))
+    assert(oneScans == List(flat), s"$what: PROBE ${flat.size} scanned $oneScans")
+    assert(widened == oneStep, s"$what: widened $widened vs one step $oneStep")
+    assert(widened.nonEmpty && widened.map(_._1).distinct.size == widened.size,
+      s"$what: a pk served twice: $widened")
+  }
+
+  test("one ivf widening loop, float and int8 lists, SCORED and unscored: " +
+      "disjoint scans and scores, equal to one step at the final width, " +
+      "each duplicate pk once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fann-dup")
+    val eng = new Engine(spark, dir.toString)
+    eng.execute("CREATE CONTAINER fdp ['vid','tag','emb'] [BIGINT, TEXT, MEDIUM-BYTES]")
+    val dims = 6
+    // every pk committed TWICE with independent vectors (a duplicate-pk
+    // corpus: raw overwrites skip MERGE), so copies land in different
+    // cells; pk 35's first copy is a zero vector (no cosine), which the
+    // min-by-bytes pick prefers. Only pks 35..39 match the predicate.
+    val docs = (0L until 40L).flatMap { i =>
+      val t = if (i >= 35L) "en" else "xx"
+      Seq((i, t, if (i == 35L) IndexedSeq.fill(dims)(0f) else randVec(dims)),
+        (i, t, randVec(dims)))
+    }
+    import spark.implicits._
+    eng.catalog.overwrite("fdp", docs.map { case (i, t, v) =>
+      (i, t, graft.functions.Float32Unpack.pack(v)) }.toDF("vid", "tag", "emb"))
+    eng.execute("CREATE INDEX ann ON fdp ['emb'] USING ivf 8")
+    eng.execute("CREATE INDEX ann8 ON fdp ['emb'] USING ivf 8 INT8")
+    val split = eng.catalog.readIndex("fdp", "ann")
+      .groupBy("id").agg(org.apache.spark.sql.functions
+        .countDistinct("cluster").as("n"))
+      .filter("n > 1").count()
+    assert(split > 0, "some duplicate pk must have copies in different cells")
+    val qLit = randVec(dims).mkString("[", ", ", "]")
+    for (ix <- Seq("ann", "ann8"); scored <- Seq(false, true))
+      checkWidening(eng, ix, qLit, scored)
+  }
 }

@@ -374,16 +374,47 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     assert(src == Set(11L, 19L), src.toString)
   }
 
-  test("ivf all-emb marker: fresh + carried builds keep it and SCORED lowers with ZERO jobs; a legacy pre-emb part drops it and the snapshot fallback still serves") {
+  /** Whether `vecs`' current ivf index `ix` carries the all-emb marker. */
+  private def hasEmbMarker(cat: Catalog, ix: String): Boolean =
+    java.nio.file.Files.exists(cat.versionPath("vecs", cat.currentVersion("vecs"))
+      .resolve("_index").resolve(ix).resolve(Index.AllEmbMarker))
+
+  /** Turn `vecs`' current ivf index `ix` into what a build from before
+    * the lists stored vectors left behind: the first `src=` part (or
+    * every part) rewritten WITHOUT the emb column, the marker dropped. */
+  private def stripEmb(cat: Catalog, ix: String, every: Boolean): Unit = {
+    import scala.jdk.CollectionConverters._
+    val ixd = cat.versionPath("vecs", cat.currentVersion("vecs"))
+      .resolve("_index").resolve(ix)
+    val parts = scala.util.Using.resource(java.nio.file.Files.list(ixd)) {
+      _.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("src=")).toSeq
+    }.sortBy(_.getFileName.toString)
+    (if (every) parts else parts.take(1)).foreach { srcDir =>
+      val legacyRows = spark.read.parquet(srcDir.toString)
+        .select("id", "cluster").collect().toSeq
+      cat.deleteRecursively(srcDir)
+      spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](legacyRows.asJava),
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("id",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("cluster",
+            org.apache.spark.sql.types.IntegerType))))
+        .coalesce(1).write.parquet(srcDir.toString)
+    }
+    java.nio.file.Files.delete(ixd.resolve(Index.AllEmbMarker))
+  }
+
+  test("ivf all-emb marker: fresh + carried builds keep it and SCORED lowers with ZERO jobs; a pre-emb index is refused until REBUILD restores its rows") {
     val (cat, dir) = ivfFixture("allemb")
     cat.createIndex("vecs", "ann", "ivf", "e")
-    val idef = cat.indexDefs("vecs").find(_.ix == "ann").get
-    assert(Index.allPartsCarryEmb(cat, "vecs", idef), "fresh build must be marked")
+    assert(hasEmbMarker(cat, "ann"), "fresh build must be marked")
     // a COW commit hard-link-carries parts AND the marker fact
     val tx = new Tx(cat)
     tx.stageInsert("vecs", Seq(org.apache.spark.sql.Row(99L, vec(3, 99L))))
     tx.commit(Some("vecs"))
-    assert(Index.allPartsCarryEmb(cat, "vecs", idef),
+    assert(hasEmbMarker(cat, "ann"),
       "a carry from a marked version must stay marked")
 
     val eng = new graft.aql.Engine(spark, dir.toString)
@@ -393,9 +424,9 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // zero-jobs pin (ADVICE r12): lowering a vector-form SCORED on a
     // MARKED index executes nothing — the cell pick is driver metadata
-    // and the marker replaces the legacy-row detection job, so even
-    // EXPLAIN is plan-only. Count jobs across the lowering, flushing
-    // the async listener bus before each read.
+    // and the list vectors score index-locally, so even EXPLAIN is
+    // plan-only. Count jobs across the lowering, flushing the async
+    // listener bus before each read.
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -416,41 +447,20 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     assert(marked.map(_._1).toSet == Set(3L, 11L, 19L, 99L),
       s"cell-3 members expected, got $marked")
 
-    // simulate a LEGACY pre-emb part (what a pre-r12 build wrote): one
-    // src= dir rewritten WITHOUT the emb column, marker dropped
-    val v = cat.currentVersion("vecs")
-    val ixd = cat.versionPath("vecs", v).resolve("_index").resolve("ann")
-    import scala.jdk.CollectionConverters._
-    val srcDir = scala.util.Using.resource(java.nio.file.Files.list(ixd)) {
-      _.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("src=")).toSeq
-    }.minBy(_.getFileName.toString)
-    val legacyRows = spark.read.parquet(srcDir.toString)
-      .select("id", "cluster").collect().toSeq
-    cat.deleteRecursively(srcDir)
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](legacyRows.asJava),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("cluster",
-          org.apache.spark.sql.types.IntegerType))))
-      .coalesce(1).write.parquet(srcDir.toString)
-    java.nio.file.Files.delete(ixd.resolve(Index.AllEmbMarker))
-    assert(!Index.allPartsCarryEmb(cat, "vecs", idef), "marker gone")
-
-    // the unmarked index detects the legacy rows and serves IDENTICAL
-    // results through the bounded snapshot fallback
-    assert(scoredRows() == marked,
-      "legacy fallback must serve the same scored rows")
+    // a pre-emb part drops the marker: SCORED refuses the index with
+    // the REBUILD pointer instead of serving from partial vectors
+    stripEmb(cat, "ann", every = false)
+    assert(!hasEmbMarker(cat, "ann"), "marker gone")
+    val refused = intercept[RuntimeException](scoredRows())
+    assert(refused.getMessage.contains("REBUILD INDEX ann ON vecs"),
+      refused.getMessage)
     // REBUILD re-derives every part and restores the catalog fact
     eng.execute("REBUILD INDEX ann ON vecs")
-    assert(Index.allPartsCarryEmb(cat, "vecs", idef),
-      "rebuild must restore the all-emb marker")
+    assert(hasEmbMarker(cat, "ann"), "rebuild must restore the all-emb marker")
     assert(scoredRows() == marked, "rebuilt index serves the same rows")
   }
 
-  test("ANN ingest gate drops near-dups on marked AND legacy (pre-emb) indexes") {
+  test("ANN ingest gate drops near-dups on a marked index; a pre-emb index is refused until REBUILD, then gates alike") {
     val (cat, _) = ivfFixture("anngate")
     cat.createIndex("vecs", "ann", "ivf", "e")
     import spark.implicits._
@@ -459,38 +469,25 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       Seq((990L, vec(3, 3L))).toDF("vec_id", "e"),
       cat, "vecs", "ann", threshold = Some(0.99))
     assert(cat.read("vecs").count() == 24, "marked-index gate must drop the twin")
-    // LEGACY pre-emb parts (what a pre-r12 build wrote): strip the
-    // vector column from EVERY part and drop the marker — cand_emb then
-    // reads NULL, and without the snapshot fallback the cosine filter
-    // would silently pass the duplicate through the gate
-    import scala.jdk.CollectionConverters._
-    val v = cat.currentVersion("vecs")
-    val ixd = cat.versionPath("vecs", v).resolve("_index").resolve("ann")
-    scala.util.Using.resource(java.nio.file.Files.list(ixd)) {
-      _.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("src=")).toSeq
-    }.foreach { srcDir =>
-      val legacyRows = spark.read.parquet(srcDir.toString)
-        .select("id", "cluster").collect().toSeq
-      cat.deleteRecursively(srcDir)
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](legacyRows.asJava),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("cluster",
-            org.apache.spark.sql.types.IntegerType))))
-        .coalesce(1).write.parquet(srcDir.toString)
-    }
-    java.nio.file.Files.delete(ixd.resolve(Index.AllEmbMarker))
-    assert(!Index.allPartsCarryEmb(cat, "vecs",
-      cat.indexDefs("vecs").find(_.ix == "ann").get))
+    // pre-emb parts everywhere: cand_emb would read NULL and the cosine
+    // filter would silently pass the duplicate — the gate refuses the
+    // index with the REBUILD pointer and lands nothing
+    stripEmb(cat, "ann", every = true)
+    assert(!hasEmbMarker(cat, "ann"))
+    val refused = intercept[RuntimeException](
+      graft.streaming.IngestSinks.nearDupBatch(
+        Seq((991L, vec(3, 3L))).toDF("vec_id", "e"),
+        cat, "vecs", "ann", threshold = Some(0.99)))
+    assert(refused.getMessage.contains("REBUILD INDEX ann ON vecs"),
+      refused.getMessage)
+    assert(cat.read("vecs").count() == 24, "a refused batch lands nothing")
+    // after REBUILD the gate decides as it did before the strip
+    cat.rebuildIndex("vecs", "ann")
     graft.streaming.IngestSinks.nearDupBatch(
       Seq((991L, vec(3, 3L))).toDF("vec_id", "e"),
       cat, "vecs", "ann", threshold = Some(0.99))
-    assert(cat.read("vecs").count() == 24,
-      "legacy-part candidates must still gate via the snapshot fallback")
-    // a genuinely-new direction still ingests through the legacy path
+    assert(cat.read("vecs").count() == 24, "the rebuilt gate drops the twin")
+    // a genuinely-new direction still ingests
     graft.streaming.IngestSinks.nearDupBatch(
       Seq((992L, graft.functions.Float32Unpack.pack(
         (0 until 8).map(d => if (d < 2) 0.7071f else 0f)))).toDF("vec_id", "e"),
