@@ -4,10 +4,17 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Session extensions installing graft's native Catalyst functions and
-  * planner strategies — the public `SparkSessionExtensions` registration
-  * path (builder.withExtensions(new GraftExtensions) or
+/** Session extensions installing graft's native Catalyst functions,
+  * planner strategies and physical rules — the public
+  * `SparkSessionExtensions` registration path
+  * (builder.withExtensions(new GraftExtensions) or
   * spark.sql.extensions=graft.functions.GraftExtensions).
+  *
+  * [[ParameterizeFilterLiterals]] runs as a pre-columnar-transition rule,
+  * the last seam before whole-stage codegen collapses the plan: it turns
+  * filter keys into [[ParamLiteral]]s, so a point or range read with a
+  * new key reuses the compiled class of the previous one instead of
+  * paying a Janino compile per key.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -216,5 +223,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         }))
     // whole-operator custom path: per-group top-k (graft.plans.TopKPerGroup)
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    ext.injectColumnar(_ => new org.apache.spark.sql.execution.ColumnarRule {
+      override def preColumnarTransitions = ParameterizeFilterLiterals
+    })
   }
 }
