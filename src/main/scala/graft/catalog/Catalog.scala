@@ -449,7 +449,7 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
       if (v > 0) versionPath(name, v)
       else dataPath(name) // unversioned/external data, if any
     if (Files.exists(path))
-      toLogical(d, spark.read.schema(d.storedSchema).parquet(path.toString))
+      toLogical(d, scan(d, Seq(path.toString), published = v > 0))
     else
       spark.createDataFrame(new java.util.ArrayList[Row](), d.schema)
   }
@@ -459,8 +459,7 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     val d = get(name)
     require(Files.exists(versionPath(name, v)),
       s"Version $v of '$name' does not exist (have: ${versions(name).mkString(",")})")
-    toLogical(d,
-      spark.read.schema(d.storedSchema).parquet(versionPath(name, v).toString))
+    toLogical(d, scan(d, Seq(versionPath(name, v).toString), published = true))
   }
 
   /** Change-data feed between two committed versions — every row
@@ -553,6 +552,12 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
       .select(outCols: _*)
   }
 
+  /** Every committed-parquet read of a container: its stored schema over
+    * `paths`, pruned file by file through the zone maps ([[ZoneMap.scan]]). */
+  private def scan(d: ContainerDef, paths: Seq[String],
+      published: Boolean = false): DataFrame =
+    ZoneMap.scan(spark, d.storedSchema, paths, published)
+
   /** Stored→logical name translation on the read side. Identity (the
     * same scan node, `_metadata` still resolvable) unless a RENAME COLUMN
     * happened. */
@@ -576,28 +581,25 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
   /** Explicit part-file read under logical names (COW rewrite path). */
   private[catalog] def readFiles(name: String, paths: Seq[String]): DataFrame = {
     val d = get(name)
-    toLogical(d, spark.read.schema(d.storedSchema).parquet(paths: _*))
+    toLogical(d, scan(d, paths))
   }
 
   /** [[readFiles]] plus a `__src_file` attribution column (index build). */
-  private[catalog] def readFilesTagged(name: String, paths: Seq[String]): DataFrame = {
+  private[catalog] def readFilesTagged(name: String, paths: Seq[String]): DataFrame =
+    tagged(get(name), paths, published = false)
+
+  private def tagged(d: ContainerDef, paths: Seq[String], published: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val d = get(name)
-    val raw = spark.read.schema(d.storedSchema).parquet(paths: _*)
-    toLogical(d, raw.withColumn("__src_file", col("_metadata.file_name")))
+    toLogical(d, scan(d, paths, published)
+      .withColumn("__src_file", col("_metadata.file_name")))
   }
 
   /** Version scan with logical names PLUS a `__src_file` attribution
     * column — for the COW touched-file probe, which needs `_metadata`
     * (resolvable only on the raw scan, before any rename projection).
     */
-  private[catalog] def readVersionTagged(name: String, v: Int): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val d = get(name)
-    val raw = spark.read.schema(d.storedSchema)
-      .parquet(versionPath(name, v).toString)
-    toLogical(d, raw.withColumn("__src_file", col("_metadata.file_name")))
-  }
+  private[catalog] def readVersionTagged(name: String, v: Int): DataFrame =
+    tagged(get(name), Seq(versionPath(name, v).toString), published = true)
 
   /** The one immediate publish, and the optimistic-concurrency
     * primitive: claim `base + 1`, build it ([[prepare]]) and publish it.
@@ -663,7 +665,7 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
       // the links. Rewritten parts carry fresh UUID part names, so they
       // can never collide with a linked base-file name.
       rewrite match {
-        case Some(df) => toStored(name, df).write.mode("overwrite").parquet(tmp.toString)
+        case Some(df) => ZoneMap.writer(toStored(name, df)).mode("overwrite").parquet(tmp.toString)
         case None => Files.createDirectories(tmp)
       }
       kept.foreach(f => Files.createLink(tmp.resolve(f.getFileName), f))

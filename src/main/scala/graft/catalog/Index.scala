@@ -546,8 +546,8 @@ object Index {
         new java.util.ArrayList[org.apache.spark.sql.Row](), full)
     ensureAt(cat, container, idef, v)
     requireAllEmb(cat, container, idef, v)
-    cat.spark.read.schema(full)
-      .parquet(ixDir(cat, container, v, idef.ix).toString)
+    ZoneMap.scan(cat.spark, full, Seq(ixDir(cat, container, v, idef.ix).toString),
+      published = true)
   }
 
   /** Near-dup lookup served from an `lsh` or `simhash` index: derive the
@@ -1032,9 +1032,9 @@ object Index {
     if (toCompute.nonEmpty) {
       val rows = cat.readFilesTagged(d.name, toCompute.map(_.toString))
         .withColumnRenamed("__src_file", "src")
-      derive(cat, d, idef, rows)
-        .sortWithinPartitions(col("src") +: idef.pruneKeys.map(col): _*)
-        .write.mode("append").partitionBy("src").parquet(dest.toString)
+      ZoneMap.writer(derive(cat, d, idef, rows)
+        .sortWithinPartitions(col("src") +: idef.pruneKeys.map(col): _*))
+        .mode("append").partitionBy("src").parquet(dest.toString)
     }
     // all-emb fact for ivf: freshly derived parts always store the
     // vector, so the marker propagates along the carry chain — present

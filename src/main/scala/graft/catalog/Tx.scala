@@ -500,9 +500,11 @@ final class Tx(catalog: Catalog) {
     if (base == 0 || ops.contains(Delete(None)))
       return (Nil, Some(view(c).sortWithinPartitions(pk)))
     val schema = catalog.get(c).schema
+    // bare predicates: a filter drops NULL like FALSE, and a coalesce
+    // would keep the comparison from pushing down to the scan's zone maps
     val edPreds = ops.collect {
-      case Edit(p, _) => coalesce(p, lit(false))
-      case Delete(Some(p)) => coalesce(p, lit(false))
+      case Edit(p, _) => p
+      case Delete(Some(p)) => p
     }
     val probe = edPreds.reduceOption(_ || _).map(p => (df: DataFrame) => df.filter(p))
     rewriteTouched(c, base, pk, probe, ops.foldLeft(_)(applyEditDelete),

@@ -20,6 +20,14 @@ object Bridge {
   def normalizeFloats(e: Expression): Expression =
     org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
 
+  /** `DataSourceStrategy.translateFilter` is `protected[sql]`: the
+    * catalyst-to-source filter translation a file scan hands its reader,
+    * exposed so graft's zone-map file index prunes with the same filters
+    * (graft.catalog.ZoneMapFileIndex). */
+  def sourceFilter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
+    org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateFilter(e, supportNestedPredicatePushdown = true)
+
   /** `listenerBus.waitUntilEmpty` is `private[spark]`: exposed so specs
     * can count jobs DETERMINISTICALLY (flush the async listener bus
     * before reading a job-count listener's state) — used by the
