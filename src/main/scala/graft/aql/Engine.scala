@@ -1701,18 +1701,7 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
         // input typing (Q8 stance, like sum/avg): arithmetic leaves
         // numeric; string fns on strings.
         import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
-        val d = virtualDef(unioned)
-        s.exprs.flatMap(e => operandLeafNames(e.expr)).foreach { n =>
-          val cn = resolveNames(unioned, List(n)).head
-          if (!d.columns.find(_._1 == cn).exists(_._2.isNumeric))
-            throw new ParseException(
-              s"Computed projection requires numeric columns, '$cn' is not")
-        }
-        val fnCols = s.fns.map { f =>
-          val cn = resolveNames(unioned, List(f.column)).head
-          scalarFn(f.fn, cn, unioned.schema(cn).dataType, f.args)
-            .as(s"${f.fn}_${f.column.toLowerCase}")
-        }
+        val (d, fnCols) = computedItems(unioned, s, "Computed projection")
         val plainNames = resolveNames(unioned, s.projection)
         val winCols = s.wins.map { w =>
           val ocn = resolveNames(unioned, List(w.column)).head
@@ -1802,19 +1791,8 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
         // the same strict typing as their agg-less form.
         import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
         val keyNames = resolveNames(unioned, s.projection)
-        val dKeys = virtualDef(unioned)
-        s.exprs.flatMap(e => operandLeafNames(e.expr)).foreach { n =>
-          val cn = resolveNames(unioned, List(n)).head
-          if (!dKeys.columns.find(_._1 == cn).exists(_._2.isNumeric))
-            throw new ParseException(
-              s"Computed grouping key requires numeric columns, '$cn' is not")
-        }
+        val (dKeys, fnKeys) = computedItems(unioned, s, "Computed grouping key")
         val exprKeys = s.exprs.map(e => lowerOperand(e.expr, dKeys).as(e.name))
-        val fnKeys = s.fns.map { f =>
-          val cn = resolveNames(unioned, List(f.column)).head
-          scalarFn(f.fn, cn, unioned.schema(cn).dataType, f.args)
-            .as(s"${f.fn}_${f.column.toLowerCase}")
-        }
         val keys = keyNames.map(col) ++ exprKeys ++ fnKeys
         val keyOutNames = keyNames ++ s.exprs.map(_.name) ++
           s.fns.map(f => s"${f.fn}_${f.column.toLowerCase}")
@@ -3091,20 +3069,36 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     * list would stop being bounded metadata). settings.yaml knob. */
   private def IndexProbeCap = settings.indexProbeCap
 
-  /** Index-served point predicate (graft extension — generalizes the
+  /** Index-served predicate (graft extension — generalizes the
     * reference's automatic first-column index pick,
-    * `src/query_conditions.rs:541-593`, to ANY column with a `value`
-    * index): when the WHERE is an AND-chain containing `col = literal`
-    * on an indexed column and the container has no staged ops, resolve
-    * the literal through the index into a bounded pk candidate list —
-    * one collect job, [[Engine.boundedIds]] under `index_probe_cap` — and
-    * prune the base scan to those pks — on the pk-range-clustered layout
-    * that is a file-skipping scan, the reference's index→addresses→
-    * positional-read shape re-expressed. The FULL predicate still
-    * applies afterward (`applyWhere`), so the index can only change
-    * where rows come from, never what they are; any non-qualifying
-    * WHERE (OR gates, arithmetic sides, unselective value, staged
-    * overlay, no index) falls back to the plain pushed-filter scan.
+    * `src/query_conditions.rs:495-593`, to ANY column list with a
+    * `value` index): when the WHERE is an AND-chain and the container has
+    * no staged ops, each value index gets ONE probe — the longest
+    * leftmost prefix of its components bound by `=` / IN-list atoms,
+    * plus the range atoms on the next component — with keys typed by
+    * [[condKeys]], the WHERE lowering's own typing. The chosen probe
+    * resolves through [[graft.catalog.Index.valueLookup]] into a bounded
+    * pk candidate list — one collect job, [[Engine.boundedIds]] under
+    * `index_probe_cap` — and the base scan is pruned to those pks — on
+    * the pk-range-clustered layout a file-skipping scan, the reference's
+    * index→addresses→positional-read shape re-expressed. The FULL
+    * predicate still applies afterward (`applyWhere`), so the index can
+    * only change where rows come from, never what they are; a WHERE no
+    * probe serves (OR gates, arithmetic sides, column references,
+    * unselective values, staged overlay, no index) keeps the plain
+    * pushed-filter scan.
+    *
+    * The choice is correctness-neutral (every path returns the same
+    * rows): a probe whose ANALYZE estimate exceeds the cap is skipped
+    * (the probe job could only confirm unselectivity — narrated); a
+    * priced probe beats an unpriced one (the estimate proves it under
+    * the cap) and the smaller estimate wins; equality-bearing probes
+    * lead range-only ones (the reference's Strict-then-Range order,
+    * `query_conditions.rs:541`). Among unpriced probes single-column
+    * indexes lead in WHERE order — a dedicated point-lookup index is
+    * usually the deliberately selective one — except that a fully bound
+    * probe whose columns cover the leader's leads it, being provably at
+    * least as constrained.
     */
   private def indexPruned(cname: String, d: Catalog#ContainerDef,
       base: DataFrame, s: Ast.Search): DataFrame = {
@@ -3119,192 +3113,89 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     if (s.atVersion.getOrElse(catalog.currentVersion(cname)) == 0) return base
     val defs = catalog.indexDefs(cname).filter(_.kind == "value")
     if (defs.isEmpty) return base
-    // typed literals only — a bare word on a TEXT column is a string
-    // literal (reference semantics); numeric columns take int literals
-    // (an out-of-range INT literal can't match: skip, the scan returns
-    // the same empty result)
-    def colTypeOf(c: Ast.Cond) = d.columns.collectFirst {
-      case (n, t) if n.equalsIgnoreCase(c.column) => t.spark
-    }
-    def typedToken(t: Token, colType: Option[org.apache.spark.sql.types.DataType]): Option[Any] =
-      (t, colType) match {
-        case (Token.Str(v), Some(org.apache.spark.sql.types.StringType)) =>
-          Some(v)
-        case (Token.IntLit(v), Some(org.apache.spark.sql.types.LongType)) =>
-          Some(v)
-        case (Token.IntLit(v), Some(org.apache.spark.sql.types.IntegerType))
-            if v.isValidInt => Some(v.toInt)
-        // FLOAT columns take either numeric literal spelling — the same
-        // coercion the WHERE lowering applies, so the index path and the
-        // plain scan agree on what matches
-        case (Token.FloatLit(v), Some(org.apache.spark.sql.types.DoubleType)) =>
-          Some(v)
-        case (Token.IntLit(v), Some(org.apache.spark.sql.types.DoubleType)) =>
-          Some(v.toDouble)
-        case _ => None
+    // (op, WHERE position, typed keys) of the plain atoms on column `cn`
+    // with an op in `ops`; a column reference or a key whose coercion
+    // throws leaves its atom unserved (the WHERE lowering raises that
+    // error itself)
+    def atomsOn(cn: String, ops: Set[String]) = w.atoms.iterator.zipWithIndex
+      .filter { case (c, _) => c.lhs.isEmpty && c.rhs.isEmpty && ops(c.op) &&
+        cn.equalsIgnoreCase(c.column) }
+      .flatMap { case (c, i) =>
+        d.columns.find(_._1.equalsIgnoreCase(cn)).flatMap { case (n, t) =>
+          try condKeys(c, n, t, d).toOption.filter(_.nonEmpty).map(ks => (c.op, i, ks))
+          catch { case scala.util.control.NonFatal(_) => None }
+        }
       }
-    def typedKey(c: Ast.Cond): Option[Any] = typedToken(c.value, colTypeOf(c))
-    // `col IN [lits]` probes like a multi-key equality — every literal
-    // must type (a single uncoercible literal falls back to the scan,
-    // which returns the same rows)
-    def typedKeys(c: Ast.Cond): Option[Seq[Any]] = c.value match {
-      case g: Token.Group =>
-        val ks = g.items.map(typedToken(_, colTypeOf(c)))
-        if (ks.nonEmpty && ks.forall(_.isDefined)) Some(ks.flatten) else None
-      case _ => typedKey(c).map(Seq(_))
+    final case class Probe(idef: graft.catalog.Index.Def, bound: Seq[Seq[Any]],
+        range: Seq[(String, Any)], pos: Int) {
+      val cols = idef.valueColumns.take(bound.size + range.size.min(1))
+        .map(_.toLowerCase)
+      val tuples = bound.map(_.size.toLong).product
+      // tuples × Π avg_i / N^(k−1): per-column avg group sizes composed
+      // under independence (the textbook multi-column selectivity). A
+      // range only narrows the bound slice, so the estimate stays an
+      // upper bound; one bound column reads no row count; a range-only
+      // probe is unpriced.
+      val estimate: Option[Double] = {
+        val avgs = idef.valueColumns.take(bound.size).map(c =>
+          graft.catalog.Stats.avgGroupSize(catalog, cname, c))
+        val rows = if (bound.size <= 1) Some(1L)
+          else graft.catalog.Stats.rowCount(catalog, cname).filter(_ > 0)
+        if (bound.isEmpty || avgs.exists(_.isEmpty)) None
+        else rows.map(n =>
+          tuples * avgs.flatten.product / math.pow(n.toDouble, bound.size - 1))
+      }
+      def how: String = {
+        val (k, n) = (bound.size, idef.valueColumns.size)
+        if (k == 0) s"range over ${range.length} bound(s)"
+        else if (n == 1) s"$tuples literal key(s)"
+        else if (k == n) s"composite equality, $tuples tuple(s)"
+        else s"composite prefix $k/$n" +
+          (if (range.isEmpty) "" else s" + range(${range.length}) on ${idef.valueColumns(k)}") +
+          s", $tuples tuple(s)"
+      }
+      def narrate(what: String): Unit =
+        note(s"index '${idef.ix}' probe on ${idef.column} ($how) $what")
     }
-    def plainAtom(c: Ast.Cond) = c.lhs.isEmpty && c.rhs.isEmpty
-    val (singleDefs, compositeDefs) = defs.partition(_.valueColumns.size == 1)
-    def eqAtomFor(cn: String): Option[Ast.Cond] = w.atoms.find(c =>
-      plainAtom(c) && (c.op == "=" || c.op == "==" || c.op == "IN LIST") &&
-        cn.equalsIgnoreCase(c.column))
-    // COMPOSITE probe: fires on the longest LEFTMOST PREFIX of the
-    // index's components carrying typed equality / IN literals (the
-    // classic leftmost-prefix rule — the leader-first sort means a
-    // bound prefix is still a contiguous, stat-prunable slice; a
-    // non-leader-only bind can't prune and falls through). IN lists
-    // expand to a bounded tuple cross-product (probe lists are
-    // metadata, never data) — oversize products defer to the scan.
-    // Among composite defs the longest bound prefix wins.
-    val rangeOps = Set(">", ">=", "<", "<=")
-    val compositeHit: Option[(graft.catalog.Index.Def, Seq[Seq[Any]], Seq[(String, Any)])] =
-      compositeDefs.flatMap { idef =>
-        val comps = idef.valueColumns.iterator
-          .map(cn => eqAtomFor(cn).flatMap(typedKeys))
-          .takeWhile(_.isDefined).map(_.get).toList
-        if (comps.isEmpty) None
-        else {
-          val lists = comps.map(_.distinct)
-          // range bounds on the first UNBOUND component extend the probe
-          // (eq-prefix + range, the curation staple) — sorted within each
-          // prefix slice, so the bounds keep pruning
-          val trailing = idef.valueColumns.drop(comps.size).headOption.toSeq
-            .flatMap(nc => w.atoms.filter(c => plainAtom(c) &&
-              rangeOps(c.op) && nc.equalsIgnoreCase(c.column))
-              .flatMap(c => typedKey(c).map(k => (c.op, k))))
-          if (lists.map(_.size.toLong).product <= 64L)
-            Some((idef, lists.foldLeft(Seq(Seq.empty[Any]))((acc, l) =>
-              acc.flatMap(t => l.map(t :+ _))), trailing))
-          else None
-        }
-      }.sortBy(t => (-t._2.headOption.map(_.size).getOrElse(0), -t._3.size))
-        .headOption
-    // access-path choice, mirroring the reference's Strict-then-Range
-    // order (query_conditions.rs:541): an equality / literal-IN-list
-    // probe first, else a range conjunction over one indexed column's
-    // >,>=,<,<= atoms. The composite hit does NOT suppress single-column
-    // probes — a different indexed atom (a unique user_id next to a
-    // coarse (lang, band)) can be the more selective path, so both are
-    // candidates and stats arbitrate below.
-    val eqHit = w.atoms.iterator.flatMap { c =>
-      if (!plainAtom(c) || (c.op != "=" && c.op != "==" && c.op != "IN LIST"))
-        Iterator.empty
-      else singleDefs.find(_.column.equalsIgnoreCase(c.column)).iterator
-        .flatMap(idef => typedKeys(c).map(ks => (idef, ks)))
-    }.take(1).toList.headOption
-    // one probe plan per hit: (def, narration, stats estimate of expected
-    // candidates — None without ANALYZE stats, lazy lookup DataFrame).
-    // Composite estimate: tuples × N / Π ndv_i (per-column avgs composed
-    // under independence, the textbook multi-column selectivity);
-    // single: keys × avg rows-per-value.
-    case class ProbePlan(idef: graft.catalog.Index.Def, how: String,
-        estimate: Option[Double], lookup: () => DataFrame)
-    val compositePlan = compositeHit.map { case (idef, tuples, trailing) =>
-      val k = tuples.head.size // bound prefix length (≤ component count)
-      // estimate over the eq-bound prefix only — a trailing range can
-      // only NARROW the group, so the estimate stays a safe upper bound
-      val est = graft.catalog.Stats.rowCount(catalog, cname).filter(_ > 0)
-        .flatMap { n =>
-          val avgs = idef.valueColumns.take(k).map(c =>
-            graft.catalog.Stats.avgGroupSize(catalog, cname, c))
-          if (avgs.forall(_.isDefined))
-            Some(tuples.length *
-              avgs.flatten.product / math.pow(n.toDouble, avgs.size - 1))
-          else None
-        }
-      val rangeTag =
-        if (trailing.isEmpty) ""
-        else s" + range(${trailing.length}) on ${idef.valueColumns(k)}"
-      val how =
-        if (k == idef.valueColumns.size) s"composite equality, ${tuples.length} tuple(s)"
-        else s"composite prefix $k/${idef.valueColumns.size}$rangeTag, " +
-          s"${tuples.length} tuple(s)"
-      ProbePlan(idef, how, est,
-        () => graft.catalog.Index.valueLookupComposite(
-          catalog, cname, idef, tuples, s.atVersion, trailing))
-    }
-    val singlePlan = eqHit.map { case (idef, ks) =>
-      ProbePlan(idef, s"${ks.distinct.length} literal key(s)",
-        graft.catalog.Stats.avgGroupSize(catalog, cname, idef.column)
-          .map(_ * ks.distinct.length),
-        () => graft.catalog.Index.valueLookup(catalog, cname, idef, ks, s.atVersion))
-    }
-    // cost-based arbitration (ANALYZE stats): probes whose estimated
-    // candidates already exceed the probe cap are skipped (the probe job
-    // could only confirm unselectivity — narrated); among the viable,
-    // both-priced picks the smaller estimate, and a priced-viable plan
-    // beats an UNPRICED one (the estimate proves it under the cap; the
-    // blind probe might collect cap+1 ids and abandon to a full scan).
-    // The all-unpriced preference: the composite leads only when the
-    // single probe's atom is one of ITS OWN components (there it is
-    // provably at least as constrained); a single index on a DISJOINT
-    // column leads instead — a dedicated point-lookup index is usually
-    // deliberately selective, and nothing provable ranks them. A
-    // skipped/absent eq probe always falls through to the range path —
-    // a range index on a different column can still serve.
-    // Correctness-neutral throughout — every path returns the same
-    // rows; without stats the probe itself decides.
-    val compositeLeads = compositeHit.exists { case (idef, tuples, _) =>
-      tuples.head.size == idef.valueColumns.size &&
-        eqHit.forall { case (sdef, _) =>
-          idef.valueColumns.exists(_.equalsIgnoreCase(sdef.column)) }
-    }
-    val plans =
-      if (compositeLeads) compositePlan.toList ++ singlePlan.toList
-      else singlePlan.toList ++ compositePlan.toList
-    val (skipped, viable) = plans.partition(_.estimate.exists(_ > IndexProbeCap))
-    skipped.foreach { p =>
-      note(f"index '${p.idef.ix}' probe on ${p.idef.column} (${p.how}) skipped: " +
-        f"stats estimate ${p.estimate.get}%.1f candidate(s) exceeds " +
+    val probes = defs.flatMap { idef =>
+      val bound = idef.valueColumns.iterator
+        .map(atomsOn(_, Set("=", "==", "IN LIST")).nextOption())
+        .takeWhile(_.isDefined).map(_.get).toList
+      val range = idef.valueColumns.lift(bound.size).toList.flatMap(
+        atomsOn(_, Set(">", ">=", "<", "<=")).collect { case (op, i, Seq(v)) => (op, i, v) })
+      (bound.map(_._2) ++ range.map(_._2)).headOption.map(pos =>
+        Probe(idef, bound.map(_._3.distinct), range.map(r => (r._1, r._3)), pos))
+    }.sortBy(p => (p.bound.isEmpty, p.idef.valueColumns.size > 1,
+      -p.bound.size, -p.range.size, p.pos))
+    val (skipped, viable) = probes.partition(_.estimate.exists(_ > IndexProbeCap))
+    skipped.foreach(p => p.narrate(
+      f"skipped: stats estimate ${p.estimate.get}%.1f candidate(s) exceeds " +
         s"index_probe_cap $IndexProbeCap — " +
-        (if (viable.isEmpty) "falling back" else "other probe"))
-    }
-    val chosenEq: Option[ProbePlan] =
-      if (viable.size > 1 && viable.forall(_.estimate.isDefined))
-        Some(viable.minBy(_.estimate.get))
-      else viable.find(_.estimate.isDefined).orElse(viable.headOption)
-    val candidates: Option[(graft.catalog.Index.Def, String, DataFrame)] =
-      chosenEq match {
-      case Some(p) => Some((p.idef, p.how, p.lookup()))
-      case None =>
-        singleDefs.iterator.map { idef =>
-          val bounds = w.atoms.filter(c => plainAtom(c) &&
-            rangeOps(c.op) && idef.column.equalsIgnoreCase(c.column))
-            .flatMap(c => typedKey(c).map(k => (c.op, k)))
-          (idef, bounds)
-        }.find(_._2.nonEmpty).map { case (idef, bounds) =>
-          val pred = bounds.map { case (op, k) =>
-            graft.catalog.Index.boundPred(col("val"), op, k) }.reduce(_ && _)
-          (idef, s"range over ${bounds.length} bound(s)",
-            graft.catalog.Index.valueRangeLookup(catalog, cname, idef, pred, s.atVersion))
-        }
-    }
-    candidates match {
-      case Some((idef, how, cand)) =>
-        // one bounded collect job; the lookups don't de-duplicate (no
+        (if (viable.isEmpty) "falling back" else "other probe")))
+    val priced = viable.filter(_.estimate.isDefined)
+    val chosen =
+      if (priced.nonEmpty) Some(priced.minBy(_.estimate.get))
+      else viable.headOption.map(lead => viable.find(p =>
+        p.bound.size == p.idef.valueColumns.size &&
+          p.cols.size > lead.cols.size && lead.cols.forall(p.cols.contains))
+        .getOrElse(lead))
+    chosen match {
+      case Some(p) =>
+        // one bounded collect job; the lookup doesn't de-duplicate (no
         // Exchange): a pk the container holds twice comes back twice, so
         // the ≤ cap collected ids are made distinct here
-        boundedIds(cand, IndexProbeCap) match {
+        boundedIds(graft.catalog.Index.valueLookup(catalog, cname, p.idef,
+            p.bound, p.range, s.atVersion), IndexProbeCap) match {
           case None =>
-            note(s"index '${idef.ix}' probe on ${idef.column} ($how) abandoned: " +
-              s"over index_probe_cap $IndexProbeCap candidates — plain scan")
+            p.narrate(s"abandoned: over index_probe_cap $IndexProbeCap " +
+              "candidates — plain scan")
             base // unselective: plain scan wins
           // pk-null rows can't appear in candidate lists (isin is
           // null-poisoned) — keep them for the full predicate to decide
           case Some(got) =>
             val ids = got.distinct.toIndexedSeq
-            note(s"index '${idef.ix}' probe on ${idef.column} ($how) served " +
-              s"${ids.length} pk candidate(s); clustered scan pruned to them")
+            p.narrate(s"served ${ids.length} pk candidate(s); clustered " +
+              "scan pruned to them")
             base.filter(col(d.primaryKey).isin(ids: _*) ||
               col(d.primaryKey).isNull)
         }
@@ -3725,6 +3616,26 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     catalog.ContainerDef("(virtual)", cols)
   }
 
+  /** A SEARCH's computed items over `df`, shared by the computed
+    * projection and the grouped aggregate: the def its arithmetic lowers
+    * against, every arithmetic leaf checked numeric (strict input typing,
+    * the Q8 stance — `"$what requires numeric columns"` otherwise), and
+    * its scalar-function columns, each named `fn_col`. */
+  private def computedItems(df: DataFrame, s: Ast.Search,
+      what: String): (Catalog#ContainerDef, List[Column]) = {
+    val d = virtualDef(df)
+    s.exprs.flatMap(e => operandLeafNames(e.expr)).foreach { n =>
+      val cn = resolveNames(df, List(n)).head
+      if (!d.columns.find(_._1 == cn).exists(_._2.isNumeric))
+        throw new ParseException(s"$what requires numeric columns, '$cn' is not")
+    }
+    (d, s.fns.map { f =>
+      val cn = resolveNames(df, List(f.column)).head
+      scalarFn(f.fn, cn, df.schema(cn).dataType, f.args)
+        .as(s"${f.fn}_${f.column.toLowerCase}")
+    })
+  }
+
   /** Split IN-subquery atoms from scalar atoms. IN atoms require an
     * AND-only gate chain — inside an OR a membership test would need a
     * full anti/semi union rewrite, which this surface deliberately does
@@ -3757,6 +3668,39 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
     andRuns.result().map(_.map(atom => lowerCond(atom, d)).reduce(_ && _)).reduce(_ || _)
   }
 
+  /** The one key typing of a plain WHERE atom, shared by the WHERE
+    * lowering and the value-index probe ([[indexPruned]]) so both agree
+    * on what matches: its literal, or each IN-list literal, coerced to
+    * the column's type through [[AlbaType.coerce]] (P5,
+    * `query_conditions.rs:115-245` — capped strings truncate, an
+    * out-of-range number throws), or `Left` of [[condColumnRef]]. */
+  private def condKeys(c: Ast.Cond, colName: String, colType: AlbaType,
+      d: Catalog#ContainerDef): Either[String, Seq[Any]] = {
+    def key(t: Token) = AlbaType.coerce(colType, AlbaType.tokenValue(t))
+    c.value match {
+      case g: Token.Group => Right(g.items.map(key))
+      case t => condColumnRef(c, colName, colType, d).toLeft(Seq(key(t)))
+    }
+  }
+
+  /** On a numeric column a bare word naming another column compares
+    * column-to-column — never a key — since the reference's literal
+    * interpretation could never coerce it (strictly additive; on string
+    * columns a bare word stays a literal, reference behavior). */
+  private def condColumnRef(c: Ast.Cond, colName: String, colType: AlbaType,
+      d: Catalog#ContainerDef): Option[String] = c.value match {
+    case Token.Str(w) if colType.isNumeric =>
+      d.columns.find(_._1.equalsIgnoreCase(w)).map { case (n, ct) =>
+        // both sides must be numeric — comparing against a resolved
+        // TEXT column would implicit-cast to double and null out
+        if (!ct.isNumeric) throw new ParseException(
+          s"Cannot compare numeric column '$colName' to " +
+            s"non-numeric column '$n' ($ct)")
+        n
+      }
+    case _ => None
+  }
+
   private def lowerCond(c: Ast.Cond, d: Catalog#ContainerDef): Column = {
     if (c.op == "IN" || c.op == "NOT IN") // join lowering exists only on the SEARCH path
       throw new ParseException(s"${c.op} (SEARCH …) is only supported in a SEARCH WHERE")
@@ -3770,8 +3714,7 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
       val items = c.value.asInstanceOf[Token.Group].items
       if (items.isEmpty)
         throw new ParseException(s"IN list on '$colName' needs at least one literal")
-      val vals = items.map(t => AlbaType.coerce(colType, AlbaType.tokenValue(t)))
-      val base = col(colName).isin(vals: _*)
+      val base = col(colName).isin(condKeys(c, colName, colType, d).getOrElse(Nil): _*)
       return if (c.op == "NOT IN LIST") !base else base
     }
     // arithmetic LHS (`a + b > c`): both sides lower as expressions;
@@ -3838,25 +3781,9 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
         }
       case None =>
         val raw = AlbaType.tokenValue(c.value)
-        // a bare word naming another column compares column-to-column —
-        // but ONLY when the LHS is numeric, where the reference's
-        // literal interpretation could never coerce anyway (strictly
-        // additive; on string columns a bare word stays a literal,
-        // reference behavior)
-        val colRef: Option[Column] = c.value match {
-          case Token.Str(w) if colType.isNumeric =>
-            d.columns.find(_._1.equalsIgnoreCase(w)).map { cc =>
-              // both sides must be numeric — comparing against a resolved
-              // TEXT column would implicit-cast to double and null out
-              if (!cc._2.isNumeric) throw new ParseException(
-                s"Cannot compare numeric column '$colName' to " +
-                  s"non-numeric column '${cc._1}' (${cc._2})")
-              col(cc._1)
-            }
-          case _ => None
-        }
-        // literal coerced to the column's type (P5, query_conditions.rs:115-245)
-        def v = colRef.getOrElse(lit(AlbaType.coerce(colType, raw)))
+        // a TEXT column named on a numeric one raises under every operator
+        condColumnRef(c, colName, colType, d)
+        def v = condKeys(c, colName, colType, d).fold(col(_), ks => lit(ks.head))
         c.op match {
           case "=" | "==" => x === v // Equal and StrictEqual are both plain equality
           case "!=" => x =!= v

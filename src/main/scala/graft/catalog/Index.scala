@@ -50,10 +50,12 @@ import scala.jdk.CollectionConverters._
   *    to edits that re-shingle every 3-gram).
   *  - `ivf`: frozen-centroid cluster assignments over a packed-float32
   *    BYTES column; probes prune to the ≤ nprobe nearest clusters.
-  *  - `value`: plain value→pk rows over any TEXT/INT/BIGINT column — the
-  *    classic secondary index (generalizes the reference's first-column
-  *    chunk index to arbitrary columns). SEARCH equality predicates on
-  *    the indexed column auto-serve through it (`Engine.indexPruned`).
+  *  - `value`: plain value→pk rows over TEXT-family, INT, BIGINT or
+  *    FLOAT columns, one or a composite list — the classic secondary
+  *    index (generalizes the reference's first-column chunk index to
+  *    arbitrary columns). SEARCH `=`, IN-list and range predicates on a
+  *    leftmost prefix of its columns auto-serve through it
+  *    (`Engine.indexPruned`, one probe per index into [[valueLookup]]).
   */
 object Index {
   /** Current band-tokenization format version (see [[Def.tokv]]):
@@ -179,11 +181,8 @@ object Index {
     }
   }
 
-  /** The one op→predicate mapping every range-serving site shares
-    * (engine fallback, composite trailing bounds) — adding an op means
-    * one edit here. */
-  private[graft] def boundPred(c: org.apache.spark.sql.Column, op: String,
-      v: Any): org.apache.spark.sql.Column = op match {
+  /** The op→predicate mapping of [[valueLookup]]'s range bounds. */
+  private def boundPred(c: Column, op: String, v: Any): Column = op match {
     case ">" => c > v
     case ">=" => c >= v
     case "<" => c < v
@@ -583,13 +582,20 @@ object Index {
       .distinct()
   }
 
-  /** Candidate pks whose indexed column equals one of `keys`, served from
-    * a `value` index: the scan filters on the LITERAL key list, so
-    * parquet min/max stats on the sorted `val` column prune files and row
-    * groups — the secondary-index generalization of the reference's
-    * first-column chunk lookup (`src/indexing.rs:215-309`). Callers
-    * re-apply their full predicate on the pk-pruned base scan, so the
-    * index can only change WHERE rows come from, never what they are.
+  /** Candidate pks from a `value` index: rows whose component `k` is
+    * one of `bound(k)` for every bound leftmost component, and whose next
+    * component satisfies every `(op, value)` of `range` — equality, IN
+    * list, leftmost prefix (the (lang, quality_band) curation shape),
+    * eq-prefix + range and plain range probes are all this one shape.
+    * The filter holds Σ literals (one `isin` per component — for a full
+    * cross-product the same rows as an OR of tuples), so parquet min/max
+    * stats on the leader-sorted parts prune files and row groups: a bound
+    * prefix, and a range within it, is a contiguous slice — the
+    * secondary-index generalization of the reference's first-column chunk
+    * lookup (`src/indexing.rs:215-309`) and its `Indexed(Range|
+    * InclusiveRange)` access paths (`src/query_conditions.rs:541-593`).
+    * Callers re-apply their full predicate on the pk-pruned base scan, so
+    * the index can only change WHERE rows come from, never what they are.
     *
     * One index row per container row, so a pk repeats only when the
     * container itself holds that pk more than once. The lookup does not
@@ -597,63 +603,19 @@ object Index {
     * that needs distinct ids de-duplicates its bounded collect.
     */
   def valueLookup(cat: Catalog, container: String, idef: Def,
-      keys: Seq[Any], at: Option[Int] = None): DataFrame = {
-    require(idef.kind == "value", s"index '${idef.ix}' is not a value index")
-    require(idef.valueColumns.size == 1,
-      s"index '${idef.ix}' is composite — probe with valueLookupComposite")
-    read(cat, container, idef, at)
-      .filter(col("val").isin(keys: _*))
-      .select(col("id"))
-  }
-
-  /** Composite twin of [[valueLookup]]: candidate pks whose indexed
-    * column tuple's LEFTMOST PREFIX equals one of `keyTuples` (each
-    * tuple in [[Def.valueColumns]] order; full-length tuples = exact
-    * tuple equality, shorter = the classic leftmost-prefix probe) — the
-    * (lang, quality_band) curation shape. The conjunction pushes down on
-    * every bound component and the leader-sorted layout keeps the scan
-    * file/row-group pruned; probe cost ∝ the literal tuple list, never
-    * the corpus. Not de-duplicated, like [[valueLookup]]. */
-  def valueLookupComposite(cat: Catalog, container: String, idef: Def,
-      keyTuples: Seq[Seq[Any]], at: Option[Int] = None,
-      trailing: Seq[(String, Any)] = Nil): DataFrame = {
+      bound: Seq[Seq[Any]], range: Seq[(String, Any)] = Nil,
+      at: Option[Int] = None): DataFrame = {
     require(idef.kind == "value", s"index '${idef.ix}' is not a value index")
     val names = idef.valNames
-    require(keyTuples.nonEmpty &&
-      keyTuples.forall(t => t.nonEmpty && t.size <= names.size) &&
-      keyTuples.map(_.size).distinct.size == 1,
-      s"index '${idef.ix}' probes uniform prefixes of ≤${names.size} columns")
-    val k = keyTuples.head.size
-    // `trailing` = range bounds on the FIRST UNBOUND component (the
-    // classic eq-prefix + range probe: lang = 'en' AND quality >= 0.8
-    // over a (lang, quality) index) — within each prefix slice the next
-    // component is sorted, so the bounds stay stat-prunable
-    require(trailing.isEmpty || k < names.size,
-      s"index '${idef.ix}': no component left for a trailing range")
-    val pred = keyTuples.map(t =>
-      names.zip(t).map { case (n, v) => col(n) === lit(v) }.reduce(_ && _))
-      .reduce(_ || _)
-    val rangePred = trailing.map { case (op, v) =>
-      boundPred(col(names(k)), op, v) }.reduceOption(_ && _)
+    val k = bound.size
+    require(bound.forall(_.nonEmpty) && (k > 0 || range.nonEmpty) &&
+      (if (range.isEmpty) k <= names.size else k < names.size),
+      s"index '${idef.ix}' probes a bound prefix of its ${names.size} " +
+        "component(s), plus a range on the next one")
+    val pred = bound.zip(names).map { case (ks, n) => col(n).isin(ks: _*) } ++
+      range.map { case (op, v) => boundPred(col(names(k)), op, v) }
     read(cat, container, idef, at)
-      .filter(rangePred.map(pred && _).getOrElse(pred))
-      .select(col("id"))
-  }
-
-  /** Range twin of [[valueLookup]] (the reference's
-    * `Indexed(Range|InclusiveRange)` access paths,
-    * `src/query_conditions.rs:541-593`): candidate pks whose indexed
-    * value falls in the given bounds — same stat-pruned scan, the `val`
-    * sort making the range a contiguous file/row-group slice. Not
-    * de-duplicated, like [[valueLookup]].
-    */
-  def valueRangeLookup(cat: Catalog, container: String, idef: Def,
-      pred: org.apache.spark.sql.Column, at: Option[Int] = None): DataFrame = {
-    require(idef.kind == "value", s"index '${idef.ix}' is not a value index")
-    require(idef.valueColumns.size == 1,
-      s"index '${idef.ix}' is composite — range serving is single-column only")
-    read(cat, container, idef, at)
-      .filter(pred)
+      .filter(pred.reduce(_ && _))
       .select(col("id"))
   }
 

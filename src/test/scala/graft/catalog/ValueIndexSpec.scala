@@ -31,12 +31,12 @@ class ValueIndexSpec extends AnyFunSuite {
   test("create + lookup: candidates are exactly the rows holding the value") {
     val (cat, _) = fixture("basic")
     val idef = cat.createIndex("t", "vg", "value", "grp")
-    val ids = Index.valueLookup(cat, "t", idef, Seq("g2"))
+    val ids = Index.valueLookup(cat, "t", idef, Seq(Seq("g2")))
       .collect().map(_.getLong(0)).toSet
     assert(ids == (0L until 40L).filter(_ % 5 == 2).toSet)
     // typed equality on an INT column too
     val idef2 = cat.createIndex("t", "vn", "value", "n")
-    val ids2 = Index.valueLookup(cat, "t", idef2, Seq(3))
+    val ids2 = Index.valueLookup(cat, "t", idef2, Seq(Seq(3)))
       .collect().map(_.getLong(0)).toSet
     assert(ids2 == (0L until 40L).filter(_ % 7 == 3).toSet)
     // a bytes column is rejected (no ordered scalar domain to index)
@@ -61,18 +61,18 @@ class ValueIndexSpec extends AnyFunSuite {
       .repartitionByRange(4, col("id")).sortWithinPartitions("id")
     cat.overwrite("f", base)
     val idef = cat.createIndex("f", "vs", "value", "score")
-    assert(Index.valueLookup(cat, "f", idef, Seq(7.25))
+    assert(Index.valueLookup(cat, "f", idef, Seq(Seq(7.25)))
       .collect().map(_.getLong(0)).toSeq == Seq(7L))
-    val ids = Index.valueRangeLookup(cat, "f", idef,
-      col("val") > 10.0 && col("val") <= 13.25)
+    val ids = Index.valueLookup(cat, "f", idef, Nil,
+      Seq(">" -> 10.0, "<=" -> 13.25))
       .collect().map(_.getLong(0)).toSet
     assert(ids == Set(10L, 11L, 12L, 13L))
     // commit maintenance holds for the double-typed parts
     val tx = new Tx(cat)
     tx.stageInsert("f", Seq(org.apache.spark.sql.Row(100L, 11.5)))
     tx.commit(Some("f"))
-    assert(Index.valueRangeLookup(cat, "f", idef,
-      col("val") > 11.0 && col("val") < 12.0)
+    assert(Index.valueLookup(cat, "f", idef, Nil,
+      Seq(">" -> 11.0, "<" -> 12.0))
       .collect().map(_.getLong(0)).toSet == Set(11L, 100L))
   }
 
@@ -116,9 +116,57 @@ class ValueIndexSpec extends AnyFunSuite {
     // NOT IN cannot serve from candidates (complement) — plain scan
     val pn = planOf("SEARCH [id] ON il WHERE tag NOT IN ['t1', 't3']")
     assert(!pn.contains("id IN "), s"NOT IN must not take the index path:\n$pn")
-    // an uncoercible literal falls back to the scan, same rows (empty)
+    // a number on a TEXT column coerces to its string form, as in WHERE:
+    // the probe serves the scan's rows (empty)
     assert(eng.orderedResult(eng.execute("SEARCH [id] ON il WHERE tag IN [7]")
       .asInstanceOf[graft.aql.Engine.ResultSet].cursorId).get.collect().isEmpty)
+  }
+
+  test("capped-string keys truncate like WHERE literals: the probe serves the scan's rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-vix-cap")
+    val eng = new graft.aql.Engine(spark, dir.toString)
+    val cat = eng.catalog
+    eng.execute("CREATE CONTAINER ns ['id','s'] [BIGINT, NANO-STRING]")
+    import spark.implicits._
+    // every value is exactly the 10-character NANO-STRING cap
+    cat.overwrite("ns", (0L until 10L).map(i => (i, s"abcdefghi$i")).toDF("id", "s"))
+    eng.execute("CREATE INDEX vs ON ns ['s'] USING value")
+    def ids(aql: String) = eng.orderedResult(eng.execute(aql)
+      .asInstanceOf[graft.aql.Engine.ResultSet].cursorId).get
+      .collect().map(_.getLong(0)).toSeq
+    def scanIds(pred: org.apache.spark.sql.Column) = graft.aql.Engine.defaultOrder(
+      cat.read("ns").filter(pred)).collect().map(_.getLong(0)).toSeq
+    def planOf(aql: String) = eng.execute(s"EXPLAIN $aql")
+      .asInstanceOf[graft.aql.Engine.Done].message
+    val eq = "SEARCH [id] ON ns WHERE s = 'abcdefghi3XYZ'"
+    assert(ids(eq) == scanIds(col("s") === "abcdefghi3") && ids(eq) == Seq(3L))
+    assert(planOf(eq).contains("probe on s (1 literal key(s)) served 1 pk candidate(s)"),
+      planOf(eq))
+    val in = "SEARCH [id] ON ns WHERE s IN ['abcdefghi3XYZ', 'abcdefghi4']"
+    assert(ids(in) == scanIds(col("s").isin("abcdefghi3", "abcdefghi4")) &&
+      ids(in) == Seq(3L, 4L))
+    assert(planOf(in).contains("probe on s (2 literal key(s)) served 2 pk candidate(s)"),
+      planOf(in))
+  }
+
+  test("a bare word naming a column is a reference, never a probe key") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-vix-ref")
+    val eng = new graft.aql.Engine(spark, dir.toString)
+    eng.execute("CREATE CONTAINER cr ['id','n','m','t'] [BIGINT, INT, INT, TEXT]")
+    import spark.implicits._
+    eng.catalog.overwrite("cr",
+      (0L until 12L).map(i => (i, (i % 3).toInt, (i % 4).toInt, s"w$i")).toDF("id", "n", "m", "t"))
+    eng.execute("CREATE INDEX vn ON cr ['n'] USING value")
+    def search(aql: String) = eng.orderedResult(eng.execute(aql)
+      .asInstanceOf[graft.aql.Engine.ResultSet].cursorId).get
+    val q = "SEARCH [id] ON cr WHERE n = m"
+    assert(search(q).collect().map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L))
+    assert(!eng.execute(s"EXPLAIN $q").asInstanceOf[graft.aql.Engine.Done]
+      .message.contains("probe on n"))
+    // a TEXT column named on the numeric column raises under every
+    // operator, the substring family included
+    for (op <- Seq("=", ">", "&>"))
+      intercept[graft.aql.ParseException](search(s"SEARCH [id] ON cr WHERE n $op t"))
   }
 
   test("composite value index: tuple probes, auto-serve, narration, fallbacks") {
@@ -134,7 +182,7 @@ class ValueIndexSpec extends AnyFunSuite {
     val idef = cat.indexDefs("cx").find(_.ix == "cq").get
     assert(idef.valueColumns == Seq("lang", "band"))
     // direct tuple lookup: exactly the rows matching BOTH components
-    val ids = Index.valueLookupComposite(cat, "cx", idef, Seq(Seq("l1", 1L)))
+    val ids = Index.valueLookup(cat, "cx", idef, Seq(Seq("l1"), Seq(1L)))
       .collect().map(_.getLong(0)).toSet
     assert(ids == (0L until 60L).filter(i => i % 4 == 1 && i % 3 == 1).toSet)
     // auto-serve: equality on EVERY component takes the composite probe,
@@ -151,7 +199,8 @@ class ValueIndexSpec extends AnyFunSuite {
     assert(p.contains("id IN ") || p.contains("In(id"),
       s"the composite probe must prune the scan to pk candidates:\n$p")
     assert(rows(q) == ids)
-    // IN list on one component expands to a bounded tuple product
+    // an IN list binds its component to the list; the narration counts
+    // the tuples of the cross-product
     val qIn = "SEARCH [id] ON cx WHERE lang IN ['l1','l2'] AND band = 2"
     assert(planOf(qIn).contains("2 tuple(s)"), planOf(qIn))
     assert(rows(qIn) ==
@@ -287,14 +336,14 @@ class ValueIndexSpec extends AnyFunSuite {
     tx.stageInsert("t", Seq(org.apache.spark.sql.Row(100L, "g2", 1)))
     tx.stageEdit("t", col("id") === 7L, Seq("grp" -> "zz"))
     tx.commit(Some("t"))
-    val ids = Index.valueLookup(cat, "t", idef, Seq("g2"))
+    val ids = Index.valueLookup(cat, "t", idef, Seq(Seq("g2")))
       .collect().map(_.getLong(0)).toSet
     assert(ids.contains(100L), "committed insert must be index-visible")
     assert(!ids.contains(7L), "edited-away value must leave the index")
-    assert(Index.valueLookup(cat, "t", idef, Seq("zz"))
+    assert(Index.valueLookup(cat, "t", idef, Seq(Seq("zz")))
       .collect().map(_.getLong(0)).toSet == Set(7L))
     // time travel: v1's index still serves the pre-edit state
-    assert(Index.valueLookup(cat, "t", idef, Seq("zz"), at = Some(1)).count() == 0)
+    assert(Index.valueLookup(cat, "t", idef, Seq(Seq("zz")), at = Some(1)).count() == 0)
   }
 
   test("value probes plan no Exchange; a duplicated pk serves the plain scan's rows") {
@@ -312,15 +361,15 @@ class ValueIndexSpec extends AnyFunSuite {
     val single = cat.indexDefs("vd").find(_.ix == "vt").get
     val comp = cat.indexDefs("vd").find(_.ix == "vc").get
     Seq(
-      "valueLookup" -> Index.valueLookup(cat, "vd", single, Seq("t3")),
-      "valueLookupComposite" -> Index.valueLookupComposite(cat, "vd", comp, Seq(Seq("t3", 0L))),
-      "valueRangeLookup" -> Index.valueRangeLookup(cat, "vd", single, col("val") >= "t2")
+      "equality" -> Index.valueLookup(cat, "vd", single, Seq(Seq("t3"))),
+      "composite equality" -> Index.valueLookup(cat, "vd", comp, Seq(Seq("t3"), Seq(0L))),
+      "range" -> Index.valueLookup(cat, "vd", single, Nil, Seq(">=" -> "t2"))
     ).foreach { case (name, df) =>
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"$name must not shuffle:\n$plan")
     }
     // the lookup itself keeps the repeat; the engine's probe collapses it
-    assert(Index.valueLookup(cat, "vd", single, Seq("t3"))
+    assert(Index.valueLookup(cat, "vd", single, Seq(Seq("t3")))
       .collect().map(_.getLong(0)).count(_ == 3L) == 2)
     def engineRows(aql: String) = eng.orderedResult(eng.execute(aql)
       .asInstanceOf[graft.aql.Engine.ResultSet].cursorId).get.collect().toSeq
